@@ -3101,239 +3101,94 @@ RW_BOILER = "rwnav rwcookie rwbanner"  # planted boilerplate line
 def _q_refinedweb_pipeline(spark, sf_dir):
     # THE production-ordered curation pipeline (Penedo et al. 2023
     # "RefinedWeb" §3, with the Rae 2021 / Lee 2022 / Xie 2023 stages
-    # in their published order): URL dedup -> Gopher rules ->
-    # boilerplate removal -> perplexity quantile gate -> exact dedup
-    # -> MinHash near-dup dedup (connected components, min-id
-    # survivors) -> duplicated-span REMOVAL -> benchmark
-    # decontamination -> DSIR weights + Gumbel top-k resample ->
-    # split assignment -> shard assignment. Each stage is an
-    # individually-green operator; THIS row pins their composition —
-    # ordering bugs (dedup before vs after mixing, decon on pre- vs
-    # post-span text) are exactly what the unit rows can't see.
+    # in their published order), run through the same preset as the
+    # `refinedweb` CLI (operators/pipelines.py): URL dedup -> Gopher
+    # rules -> boilerplate removal -> perplexity quantile gate ->
+    # exact dedup -> MinHash near-dup dedup -> duplicated-span
+    # REMOVAL -> benchmark decontamination -> DSIR weights + Gumbel
+    # top-k resample -> split assignment -> shard assignment. Each
+    # stage is an individually-green operator; THIS row pins their
+    # composition — ordering bugs (dedup before vs after mixing, decon
+    # on pre- vs post-span text) are exactly what the unit rows can't
+    # see.
     #
     # Output: one row PER SELECTED DOC — (id, logratio, g_key, split,
     # shard) — so a wrong survivor set at ANY stage flips the value
-    # hash; the per-stage survivor counts and the in-Spark
-    # byte-exactness assertion of the boilerplate round-trip ride
-    # along as constant columns the oracle recomputes/pins.
+    # hash; the per-stage survivor counts (the runner's Observations)
+    # and the in-Spark byte-exactness assertion of the boilerplate
+    # round-trip ride along as constant columns the oracle
+    # recomputes/pins.
     _ensure_shipped(spark)
-    from cs533_big_data_data_mining_spark.operators.connected_components import (
-        connected_components,
-    )
-    from cs533_big_data_data_mining_spark.operators.decontaminate import decontaminate
-    from cs533_big_data_data_mining_spark.operators.dedup import (
-        exact_dedup,
-        minhash_dedup_pairs,
-        remove_duplicated_spans,
-        url_dedup,
-    )
+    from dataclasses import replace
+
+    from cs533_big_data_data_mining_spark.operators import pipelines
     from cs533_big_data_data_mining_spark.operators.packing import shard_rows
-    from cs533_big_data_data_mining_spark.operators.quality import (
-        assign_split,
-        dsir_logratio,
-        dsir_resample,
-        gopher_rules,
-        lm_perplexity,
-        quantile_filter,
-        remove_boilerplate_lines,
-    )
     from cs533_big_data_data_mining_spark.session import local_df
 
     # null-text docs flow as '' from the start (the WET lesson from
     # crawl_shards): gopher's min-word rule drops them first thing,
     # identically on both engines
-    # persistent-RDD ids before the run: the three localCheckpoints
-    # below are not in the cache manager (DataFrame.unpersist cannot
-    # release them), so the cleanup at the end sweeps exactly the ids
-    # this row created — a long driver session runs ~80 queries back
-    # to back and leaked checkpoint blocks would accumulate
-    try:
-        _rdds_before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
-    except Exception:  # noqa: BLE001 — py4j surface; cleanup is best-effort
-        _rdds_before = None
-
-    docs0 = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
-        .select("doc_id", F.coalesce("text", F.lit("")).alias("text"), "source")
-        .cache()
+    docs0 = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
+        "doc_id", F.coalesce("text", F.lit("")).alias("text"), "source"
     )
-
-    # 1. URL dedup: planted crawl variants — every doc gets a messy
-    # variant of its base key; dup rows (id % 10 == 7) reuse the
-    # PREVIOUS doc's base, so the real normalizer must collapse them
-    # Per-stage survivor counts ride the pipeline's OWN materializing
-    # actions as Observation metrics (round-10 verdict "what's wrong"
-    # #2: ten eager .count() jobs per run put this row in the Python-
-    # worker noise band). Each observe node sits BELOW its cache /
-    # localCheckpoint, so the metric fires exactly once at first
-    # materialization — even under diamond fan-out — and .get after
-    # the final collect never blocks. Values (hence the oracle hash)
-    # are unchanged. The one count that must stay eager is n_gopher:
-    # it parameterizes stage 3's max_doc_df threshold driver-side.
+    # planted crawl variants — every doc gets a messy variant of its
+    # base key; dup rows (id % 10 == 7) reuse the PREVIOUS doc's base,
+    # so the real normalizer must collapse them at the URL stage
     is_dup = F.col("doc_id") % RW_URL_DUP_MOD == 7
     base_key = (F.col("doc_id") - F.when(is_dup, 1).otherwise(0)).cast("string")
-    crawl = docs0.withColumn("url", _url_variants(base_key))
-    obs_url = Observation("rw_url")
-    # carried text makes the gate direct (no survivor-id semi-join
-    # back to docs0 — guide §2.4); `source` is re-read from docs0 by
-    # the stage-9 target, nothing reads it off s1
-    s1 = (
-        url_dedup(crawl, "doc_id", "url", carry=("text",))
-        .select(F.col("id").alias("doc_id"), "text")
-        .observe(obs_url, F.count(F.lit(1)).alias("n"))
-        .cache()
-    )
-
-    # 2. Gopher quality rules (Rae 2021 A1.1). The verdict frame
-    # CARRIES the text through the pure-Column gate, so the survivor
-    # set is a plain filter instead of a survivor-id semi-join back
-    # to s1 (guide §2.4: remove shuffles outright); `source` was dead
-    # past this stage (stage 9's target reads docs0) and is dropped.
-    g = gopher_rules(
-        s1,
-        "doc_id",
-        "text",
-        min_words=GOPHER_MIN_WORDS,
-        min_stopword_hits=GOPHER_MIN_STOP,
-        carry=("text",),
-    )
-    s2 = g.filter("keep").select(F.col("id").alias("doc_id"), "text").cache()
-    n_gopher = s2.count()  # eager: stage 3's threshold input
-    n_url = int(obs_url.get["n"])  # fired by the count above via s1's cache fill
-
-    # 3. boilerplate removal: plant one boiler line on every doc,
-    # remove at threshold n-1, assert byte-exact restore (the oracle
-    # pins the boolean; downstream SQL reads the original text). The
-    # byte-exactness check rides the MAIN path as an observed sum —
-    # the old side-branch join re-ran the whole boilerplate stage.
-    planted = s2.withColumn("__p", F.concat(F.col("text"), F.lit("\n" + RW_BOILER)))
-    cleaned = remove_boilerplate_lines(planted, "doc_id", "__p", max_doc_df=n_gopher - 1)
-    # localCheckpoint (not cache) at the stage boundaries: the TEN
-    # composed stages otherwise accumulate one lineage whose
-    # whole-stage-codegen string exceeds the JVM's 1 GB UTF16 limit
-    # by the minhash stage. The checkpointed frames are corpus-
-    # survivor-sized (hundreds to thousands of rows at oracle SFs).
+    crawl = docs0.select("doc_id", "text", _url_variants(base_key).alias("url"))
     obs_boiler = Observation("rw_boiler")
-    s3 = (
-        cleaned.join(s2.select("doc_id", F.col("text").alias("__orig")),
-                     cleaned["id"] == F.col("doc_id"))
-        .observe(
-            obs_boiler,
-            F.sum(
-                ((F.col("clean") != F.col("__orig")) | F.col("clean").isNull()).cast("long")
-            ).alias("bad"),
+
+    with pipelines.StageRunner(spark) as run:
+
+        def boiler(df, caches):
+            # row-only plant: one boiler line on every doc, removed at
+            # threshold n_gopher - 1; the byte-exact restore rides the
+            # stage's own checkpoint as an observed mismatch sum (the
+            # oracle pins the boolean; downstream reads the original text)
+            planted = df.withColumn("__orig", F.col("text")).withColumn(
+                "text", F.concat(F.col("text"), F.lit("\n" + RW_BOILER))
+            )
+            strip = pipelines.boilerplate_stage("doc_id", "text", run.count("gopher") - 1)
+            bad = (F.col("text") != F.col("__orig")) | F.col("text").isNull()
+            return (
+                strip.fn(planted, caches)
+                .observe(obs_boiler, F.sum(bad.cast("long")).alias("bad"))
+                .drop("__orig")
+            )
+
+        stages = pipelines.refinedweb(
+            url_col="url",
+            min_words=GOPHER_MIN_WORDS,
+            min_stopword_hits=GOPHER_MIN_STOP,
+            keep_ppl=RW_PPL_KEEP,
+            jaccard=RW_MH_T,
+            spans_k=SPAN_K,
+            bench=docs0.filter(F.col("doc_id") % RW_BENCH_MOD == 0),
+            decontam_ngram=DECON_N,
+            target=docs0.filter(F.col("source") == "src0"),
+            select_k=RW_K,
+            dsir_buckets=DSIR_BUCKETS,
+            dsir_alpha=DSIR_ALPHA,
+            dsir_hash="poly31",
+            seed=RW_SEED_SEL,
         )
-        .select("doc_id", F.col("clean").alias("text"))
-        .localCheckpoint()
-    )
-    boiler_bad = int(obs_boiler.get["bad"] or 0)
-
-    # 4. perplexity quantile gate: fit the bigram LM on the current
-    # survivor corpus, keep the lowest-ppl RW_PPL_KEEP fraction
-    ppl = lm_perplexity(s3, id_col="doc_id", text_col="text")
-    scored = s3.join(ppl.select(F.col("id").alias("doc_id"), "ppl"), "doc_id")
-    obs_ppl = Observation("rw_ppl")
-    s4 = (
-        quantile_filter(scored.withColumn("__negppl", -F.col("ppl")), "__negppl", RW_PPL_KEEP)
-        .drop("__negppl", "ppl")
-        .observe(obs_ppl, F.count(F.lit(1)).alias("n"))
-        .cache()
-    )
-
-    # 5. exact dedup (content level, min-id survivor)
-    obs_exact = Observation("rw_exact")
-    s5 = (
-        exact_dedup(s4, "doc_id", "text")
-        .observe(obs_exact, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint()
-    )
-    n_ppl = int(obs_ppl.get["n"])  # fired by the checkpoint via s4's cache fill
-    n_exact = int(obs_exact.get["n"])
-
-    # 6. MinHash-LSH near-dup dedup: verified pairs -> connected
-    # components -> drop every non-min member
-    pairs = minhash_dedup_pairs(s5, "doc_id", "text", n=3, threshold=RW_MH_T)
-    edges = pairs.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-    comp = connected_components(edges)
-    drop = comp.filter(F.col("node") != F.col("component")).select(
-        F.col("node").alias("doc_id")
-    )
-    obs_fuzzy = Observation("rw_fuzzy")
-    s6 = (
-        s5.join(drop, "doc_id", "left_anti")
-        .observe(obs_fuzzy, F.count(F.lit(1)).alias("n"))
-        .cache()
-    )
-
-    # 7. duplicated-span REMOVAL (Lee 2022 ExactSubstr transform)
-    s7 = (
-        remove_duplicated_spans(s6, id_col="doc_id", text_col="text", k=SPAN_K)
-        .select(F.col("id").alias("doc_id"), F.col("clean").alias("text"))
-        .localCheckpoint()
-    )
-    n_fuzzy = int(obs_fuzzy.get["n"])  # fired by the checkpoint via s6's cache fill
-
-    # 8. decontamination: 5-gram overlap vs the mod-13 ORIGINAL-doc
-    # benchmark slice, on the post-span-removal text
-    bench = docs0.filter(F.col("doc_id") % RW_BENCH_MOD == 0)
-    flags = decontaminate(s7, bench, "doc_id", "text", n=DECON_N)
-    obs_decon = Observation("rw_decon")
-    s8 = (
-        s7.join(flags.filter("keep").select(F.col("id").alias("doc_id")), "doc_id", "left_semi")
-        .observe(obs_decon, F.count(F.lit(1)).alias("n"))
-        .cache()
-    )
-
-    # 9. DSIR: weights toward the src0 target over the survivor
-    # corpus, then the deterministic Gumbel top-k resample
-    target = docs0.filter(F.col("source") == "src0")
-    dsir = dsir_logratio(
-        s8, "doc_id", "text", target, n_buckets=DSIR_BUCKETS, alpha=DSIR_ALPHA
-    )
-    sel = dsir_resample(dsir, RW_K, seed=RW_SEED_SEL)
-
-    # 10. split + shard assignment on the selected set
-    picked = sel.select(F.col("id").alias("doc_id"), "logratio", "g_key")
-    splits = assign_split(
-        picked, "doc_id", weights={"train": 0.875, "val": 0.0625, "test": 0.0625}
-    )
-    sharded = shard_rows(picked, "doc_id", RW_SHARDS, seed=RW_SEED_SHARD)
-    final = (
-        picked.join(splits.select(F.col("id").alias("doc_id"), "split"), "doc_id")
-        .join(sharded.select("doc_id", "shard"), "doc_id")
-        .collect()
-    )
-    # fired at the latest by the collect above (dsir's internal fit
-    # actions usually materialize s8's cache first)
-    n_decon = int(obs_decon.get["n"])
-    # ppl rides lm_perplexity's internal persist (caller-owned by its
-    # contract); without this it leaked one cached plan per run into
-    # the session CacheManager — every later query's analysis then
-    # pays a sameResult scan against it (round 13)
-    for fr in (docs0, s1, s2, s4, s6, s8, ppl):
-        fr.unpersist()
-    if _rdds_before is not None:
-        try:
-            jmap = spark.sparkContext._jsc.getPersistentRDDs()
-            for rid in set(jmap.keySet().toArray()) - _rdds_before:
-                jmap.get(rid).unpersist()
-        except Exception:  # noqa: BLE001
-            pass
+        # the boilerplate plant reads the Gopher survivors twice (the
+        # restore check) and needs their count first: materialize there
+        g = [s.name for s in stages].index("gopher")
+        stages[g] = replace(stages[g], materialize=True)
+        stages.insert(g + 1, pipelines.Stage("boilerplate", boiler, materialize=True))
+        picked = run.run(crawl, stages).select("doc_id", "logratio", "g_key", "split")
+        sharded = shard_rows(picked, "doc_id", RW_SHARDS, seed=RW_SEED_SHARD)
+        final = picked.join(sharded.select("doc_id", "shard"), "doc_id").collect()
+        counts = [
+            run.count(s)
+            for s in ("url_dedup", "gopher", "ppl_gate", "exact_dedup", "minhash_dedup",
+                      "decontaminate")
+        ]
+    boiler_ok = int(obs_boiler.get["bad"] or 0) == 0
     rows = [
-        (
-            r["doc_id"],
-            r["logratio"],
-            r["g_key"],
-            r["split"],
-            r["shard"],
-            n_url,
-            n_gopher,
-            n_ppl,
-            n_exact,
-            n_fuzzy,
-            n_decon,
-            bool(boiler_bad == 0),
-        )
+        (r["doc_id"], r["logratio"], r["g_key"], r["split"], r["shard"], *counts, boiler_ok)
         for r in final
     ]
     return local_df(
@@ -3520,23 +3375,18 @@ def _q_dolma_pipeline(spark, sf_dir):
     # Dolma's distinguishing pieces: PII masking BEFORE dedup, and
     # the URL -> document -> paragraph dedup ladder where both
     # content levels run against an immutable history corpus through
-    # the Bloom route): language ID (en) -> Gopher quality rules ->
-    # C4 rules minus terminal_punct -> PII masking -> URL dedup ->
-    # exact doc dedup vs history (Bloom, exact spelling, fpp=0.5 so
-    # REAL false positives exercise the verify join) -> paragraph
-    # dedup vs history + within-pool keep_first (Bloom again).
-    # Every stage has a planted failure class on its own id residue;
-    # the per-row (clean, n_paras, n_kept) plus five survivor counts
-    # ride in the hash, so a wrong verdict anywhere flips it.
+    # the Bloom route), run through the same preset as the `dolma`
+    # CLI: language ID (en) -> Gopher quality rules -> C4 rules minus
+    # terminal_punct -> PII masking -> URL dedup (exact keys: the
+    # construction is normalization-invariant, and Dolma dedups raw
+    # URLs) -> exact doc dedup vs history (Bloom, exact spelling,
+    # fpp=0.5 so REAL false positives exercise the verify join) ->
+    # paragraph dedup vs history + within-pool keep_first (Bloom
+    # again). Every stage has a planted failure class on its own id
+    # residue; the per-row (clean, n_paras, n_kept) plus five survivor
+    # counts ride in the hash, so a wrong verdict anywhere flips it.
     _ensure_shipped(spark)
-    from cs533_big_data_data_mining_spark.functions.text import lang_id
-    from cs533_big_data_data_mining_spark.functions.text import redact_pii as redact_col
-    from cs533_big_data_data_mining_spark.operators.dedup import (
-        exact_dedup_bipartite_bloom,
-        paragraph_dedup_bipartite_bloom,
-        url_dedup,
-    )
-    from cs533_big_data_data_mining_spark.operators.quality import c4_filters, gopher_rules
+    from cs533_big_data_data_mining_spark.operators import pipelines
     from cs533_big_data_data_mining_spark.session import local_df
 
     docs0 = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
@@ -3546,85 +3396,25 @@ def _q_dolma_pipeline(spark, sf_dir):
     hist = docs0.filter(i % DMP_HIST_MOD == 0).select(
         "doc_id", _dmp_hist_text(i).alias("text")
     )
-    crawl = (
-        docs0.filter(i % DMP_HIST_MOD != 0)
-        .select("doc_id", _dmp_inner(i, F.col("text")).alias("text"), _dmp_url(i).alias("url"))
-        .cache()
+    crawl = docs0.filter(i % DMP_HIST_MOD != 0).select(
+        "doc_id", _dmp_inner(i, F.col("text")).alias("text"), _dmp_url(i).alias("url")
     )
-
-    # Per-stage survivor counts ride the pipeline's own materializing
-    # actions as Observation metrics (same rework as the refinedweb
-    # flagship — round-10 verdict #2); read after the final collect.
-    def _cnt():
-        return F.count(F.lit(1)).alias("n")
-
-    # 1. language ID: keep English
-    o_lang = Observation("dmp_lang")
-    s1 = crawl.filter(lang_id("text") == "en").observe(o_lang, _cnt()).cache()
-
-    # 2. Gopher quality rules (Dolma applies the Gopher set) — the
-    # carried text makes the gate a plain filter, no survivor-id
-    # semi-join back to s1 (guide §2.4); `url` was dead past stage 1
-    # (stage 4 re-derives it from doc_id) and is dropped here.
-    g = gopher_rules(
-        s1,
-        "doc_id",
-        "text",
-        min_words=GOPHER_MIN_WORDS,
-        min_stopword_hits=GOPHER_MIN_STOP,
-        carry=("text",),
-    )
-    o_gopher = Observation("dmp_gopher")
-    s2 = (
-        g.filter("keep")
-        .select(F.col("id").alias("doc_id"), "text")
-        .observe(o_gopher, _cnt())
-    )
-
-    # 3. C4 rules minus terminal_punct; clean text flows forward
-    c4 = c4_filters(s2, "doc_id", "text", line_terminal_punct=False)
-    o_c4 = Observation("dmp_c4")
-    s3 = (
-        c4.filter("keep")
-        .select(F.col("id").alias("doc_id"), F.col("clean").alias("text"))
-        .observe(o_c4, _cnt())
-        .cache()
-    )
-
-    # 4. PII masking BEFORE dedup (Dolma's order; the planted emails
-    # must read <EMAIL> in every surviving row)
-    s4 = s3.select("doc_id", redact_col("text").alias("text"), _dmp_url(i).alias("url"))
-
-    # 5. URL dedup (exact keys: the construction is normalization-
-    # invariant, and Dolma dedups raw URLs). The carried text makes
-    # the gate direct — the old survivor-id semi-join back to s4
-    # evaluated the PII-masking regexes twice and paid an extra
-    # exchange (guide §2.4; same rework as the quality-gate carries).
-    ud = url_dedup(s4, "doc_id", "url", normalize=False, carry=("text",))
-    o_urlded = Observation("dmp_urlded")
-    s5 = ud.select(F.col("id").alias("doc_id"), "text").observe(o_urlded, _cnt())
-
-    # 6. exact document dedup vs the immutable history (Bloom route,
-    # exact spelling — deliberate-FP filter)
-    o_docded = Observation("dmp_docded")
-    s6 = exact_dedup_bipartite_bloom(s5, hist, "doc_id", "text", fpp=0.5).observe(
-        o_docded, _cnt()
-    ).cache()
-
-    # 7. paragraph dedup vs history + within-pool keep_first
-    pd_out = paragraph_dedup_bipartite_bloom(hist, s6, "doc_id", "text", fpp=0.5)
-    final = pd_out.collect()
-    n_lang = int(o_lang.get["n"])
-    n_gopher = int(o_gopher.get["n"])
-    n_c4 = int(o_c4.get["n"])
-    n_urlded = int(o_urlded.get["n"])
-    n_docded = int(o_docded.get["n"])
-    for fr in (crawl, s1, s3, s6):
-        fr.unpersist()
-    rows = [
-        (r["id"], r["clean"], r["n_paras"], r["n_kept"], n_lang, n_gopher, n_c4, n_urlded, n_docded)
-        for r in final
-    ]
+    with pipelines.StageRunner(spark) as run:
+        stages = pipelines.dolma(
+            history=hist,
+            url_col="url",
+            min_words=GOPHER_MIN_WORDS,
+            min_stopword_hits=GOPHER_MIN_STOP,
+            normalize_urls=False,
+            fpp=0.5,
+            keep_emptied=True,
+        )
+        final = run.run(crawl, stages).collect()
+        counts = [
+            run.count(s)
+            for s in ("lang_id", "gopher", "c4_minus_terminal_punct", "url_dedup", "doc_dedup")
+        ]
+    rows = [(r["doc_id"], r["text"], r["n_paras"], r["n_kept"], *counts) for r in final]
     return local_df(
         spark,
         rows,
@@ -3636,37 +3426,20 @@ def _q_dolma_pipeline(spark, sf_dir):
 def _q_fineweb_pipeline(spark, sf_dir):
     # The FineWeb-ordered curation pipeline (Penedo et al. 2024 §3 —
     # the SECOND production preset next to refinedweb_pipeline, with
-    # the stages FineWeb adds/moves): URL filtering -> language ID
-    # (en) -> Gopher repetition removal -> Gopher quality rules ->
-    # MinHash near-dup dedup -> C4 rules MINUS terminal_punct (§3.4,
-    # clean text flows forward) -> FineWeb custom filters (§3.6) ->
-    # PII redaction. Every doc gets a constructed multi-line page
-    # (the corpus text is single-line); each stage has a planted
-    # failure class on its own id residue, so a wrong verdict at ANY
-    # stage flips both the survivor set and the stage counts. Output:
-    # one row per surviving doc with its REDACTED text (the planted
-    # email must read <EMAIL>) + the seven survivor counts as
-    # constant columns.
+    # the stages FineWeb adds/moves), run through the same preset as
+    # the `fineweb` CLI: URL filtering -> language ID (en) -> Gopher
+    # repetition removal -> Gopher quality rules -> MinHash near-dup
+    # dedup -> C4 rules MINUS terminal_punct (§3.4, clean text flows
+    # forward) -> FineWeb custom filters (§3.6) -> PII redaction.
+    # Every doc gets a constructed multi-line page (the corpus text is
+    # single-line); each stage has a planted failure class on its own
+    # id residue, so a wrong verdict at ANY stage flips both the
+    # survivor set and the stage counts. Output: one row per surviving
+    # doc with its REDACTED text (the planted email must read <EMAIL>)
+    # + the six survivor counts as constant columns.
     _ensure_shipped(spark)
-    from cs533_big_data_data_mining_spark.functions.text import lang_id
-    from cs533_big_data_data_mining_spark.functions.text import redact_pii as redact_col
-    from cs533_big_data_data_mining_spark.operators.connected_components import (
-        connected_components,
-    )
-    from cs533_big_data_data_mining_spark.operators.dedup import minhash_dedup_pairs
-    from cs533_big_data_data_mining_spark.operators.quality import (
-        c4_filters,
-        fineweb_filters,
-        gopher_repetition,
-        gopher_rules,
-        url_filter,
-    )
+    from cs533_big_data_data_mining_spark.operators import pipelines
     from cs533_big_data_data_mining_spark.session import local_df
-
-    try:
-        _rdds_before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
-    except Exception:  # noqa: BLE001 — py4j surface; cleanup is best-effort
-        _rdds_before = None
 
     docs0 = spark.read.parquet(f"{sf_dir}/documents.parquet").select(
         "doc_id", F.coalesce("text", F.lit("")).alias("text")
@@ -3687,114 +3460,22 @@ def _q_fineweb_pipeline(spark, sf_dir):
         i % FWP_URL_MOD == FWP_URL_RES,
         F.concat(F.lit("https://malware.bad.example/p/"), sid),
     ).otherwise(F.concat(F.lit("https://site"), sid, F.lit(".example.org/a/"), sid))
-    crawl = _spread(
-        withprev.select("doc_id", text2.alias("text"), url.alias("url"))
-    ).cache()
-
-    # Per-stage survivor counts ride the pipeline's own materializing
-    # actions as Observation metrics (same rework as the refinedweb
-    # flagship — round-10 verdict #2): each observe sits below its
-    # cache/localCheckpoint, fires once at first materialization, and
-    # is read after the final collect. Values unchanged.
-    def _cnt():
-        return F.count(F.lit(1)).alias("n")
-
-    # 1. URL filtering (stage zero): domain blocklist. The verdict
-    # frame CARRIES the payload (text) through the pure-Column gate,
-    # so the survivor set is a plain filter — the old survivor-id
-    # left-semi join back to `crawl` re-shuffled/re-broadcast ids and
-    # re-scanned the source per stage (guide §2.4/§8: decide on the
-    # proxy, never move the payload twice). Rows identical.
-    uf = url_filter(
-        crawl, "doc_id", "url", blocked_domains=FWP_BLOCKED, carry=("text",)
-    )
-    o_url = Observation("fw_url")
-    s1 = (
-        uf.filter("keep")
-        .select(F.col("id").alias("doc_id"), "text")
-        .observe(o_url, _cnt())
-        .cache()
-    )
-
-    # 2. language ID: keep English (the heuristic marker argmax)
-    o_lang = Observation("fw_lang")
-    s2 = s1.filter(lang_id("text") == "en").observe(o_lang, _cnt()).cache()
-
-    # 3. Gopher repetition removal (A1.2) — checkpoint: the 11-unit
-    # explode is the plan-heaviest stage; carry replaces the join-back
-    rep = gopher_repetition(s2, "doc_id", "text", carry=("text",))
-    o_rep = Observation("fw_rep")
-    s3 = (
-        rep.filter("keep")
-        .select(F.col("id").alias("doc_id"), "text")
-        .observe(o_rep, _cnt())
-        .localCheckpoint()
-    )
-
-    # 4. Gopher quality rules (A1.1) — carry replaces the join-back
-    g = gopher_rules(
-        s3,
-        "doc_id",
-        "text",
-        min_words=GOPHER_MIN_WORDS,
-        min_stopword_hits=GOPHER_MIN_STOP,
-        carry=("text",),
-    )
-    o_gopher = Observation("fw_gopher")
-    s4 = (
-        g.filter("keep")
-        .select(F.col("id").alias("doc_id"), "text")
-        .observe(o_gopher, _cnt())
-        .cache()
-    )
-
-    # 5. MinHash near-dup dedup (per-corpus; FineWeb dedups per
-    # snapshot — one snapshot here): verified pairs -> CC -> min-id
-    pairs = minhash_dedup_pairs(s4, "doc_id", "text", n=3, threshold=FWP_MH_T)
-    comp = connected_components(
-        pairs.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-    )
-    drop = comp.filter(F.col("node") != F.col("component")).select(
-        F.col("node").alias("doc_id")
-    )
-    o_dedup = Observation("fw_dedup")
-    s5 = s4.join(drop, "doc_id", "left_anti").observe(o_dedup, _cnt()).localCheckpoint()
-
-    # 6. C4 rules minus terminal_punct (§3.4); clean text flows on
-    c4 = c4_filters(s5, "doc_id", "text", line_terminal_punct=False)
-    o_c4 = Observation("fw_c4")
-    s6 = (
-        c4.filter("keep")
-        .select(F.col("id").alias("doc_id"), F.col("clean").alias("text"))
-        .observe(o_c4, _cnt())
-        .cache()
-    )
-
-    # 7. FineWeb custom filters (§3.6) — carry replaces the join-back
-    fw = fineweb_filters(s6, "doc_id", "text", carry=("text",))
-    s7 = fw.filter("keep").select(F.col("id").alias("doc_id"), "text")
-
-    # 8. PII redaction on the survivors
-    final = s7.select("doc_id", redact_col("text").alias("clean")).collect()
-    n_url = int(o_url.get["n"])
-    n_lang = int(o_lang.get["n"])
-    n_rep = int(o_rep.get["n"])
-    n_gopher = int(o_gopher.get["n"])
-    n_dedup = int(o_dedup.get["n"])
-    n_c4 = int(o_c4.get["n"])
-    for fr in (crawl, s1, s2, s4, s6):
-        fr.unpersist()
-    if _rdds_before is not None:
-        try:
-            jmap = spark.sparkContext._jsc.getPersistentRDDs()
-            for rid in set(jmap.keySet().toArray()) - _rdds_before:
-                jmap.get(rid).unpersist()
-        except Exception:  # noqa: BLE001
-            pass
-    rows = [
-        (r["doc_id"], r["clean"], n_url, n_lang, n_rep, n_gopher, n_dedup, n_c4)
-        for r in final
-    ]
+    crawl = _spread(withprev.select("doc_id", text2.alias("text"), url.alias("url")))
+    with pipelines.StageRunner(spark) as run:
+        stages = pipelines.fineweb(
+            url_col="url",
+            blocked_domains=FWP_BLOCKED,
+            min_words=GOPHER_MIN_WORDS,
+            min_stopword_hits=GOPHER_MIN_STOP,
+            jaccard=FWP_MH_T,
+        )
+        final = run.run(crawl, stages).collect()
+        counts = [
+            run.count(s)
+            for s in ("url_filter", "lang_id", "repetition", "gopher", "minhash_dedup",
+                      "c4_minus_terminal_punct")
+        ]
+    rows = [(r["doc_id"], r["text"], *counts) for r in final]
     return local_df(
         spark,
         rows,
@@ -4318,69 +3999,64 @@ def _q_stream_eq_all(spark, sf_dir):
     )
 
 
-#: Round-12 must-record rotation: new rows first (bpe_roundtrip_eq,
-#: bpe_count_route_eq, phash_neardup, phash_neardup_bi), then rows
-#: whose implementation changed this round (bpe_tokenize_eq: unified
-#: pretokenizer + min_count; pack_sequences: sep_tokens;
-#: simhash_neardup: band engine refactor), then the 47 queries parked
-#: past the r11 cap (registry order) so every registered query keeps a
-#: driver row <= 2 rounds old. 54 listed; the ~50-row cap parks the
-#: last few (bbox/median_dim-class rows the r10 record + pytest pin).
+#: Must-record rotation: CORRECTNESS_r12 and r13 sampled the same 50
+#: keys, so this list holds the other 51 registered queries — every one
+#: neither record checked. The three curation presets come first: their
+#: driver rows now run through ``operators/pipelines.py`` and none of
+#: them is in r13. The rest follow in registry order; the ~50-row cap
+#: parks the last one.
 _RECORD_FRONT = [
-    "bpe_roundtrip_eq",
-    "bpe_count_route_eq",
-    "phash_neardup",
-    "phash_neardup_bi",
-    "bpe_tokenize_eq",
-    "pack_sequences",
-    "simhash_neardup",
-    "paragraph_dedup_bloom",
-    "semdedup_multiprobe_eq",
-    "multimodal_decode",
-    "crawl_shards",
-    "decontaminate",
-    "sketches_all",
-    "shard_assign",
-    "sim_topk_ivf",
-    "sim_topk_ivf_full",
-    "multimodal_features",
-    "multimodal_frames",
-    "curate_embeds",
-    "redact_pii",
-    "knn_classify",
-    "scan_project_filter",
-    "retention",
-    "profile_lineitem",
-    "expectations",
-    "clean_text",
-    "lm_perplexity",
-    "text_stats",
-    "tfidf",
-    "balance_sources",
-    "salted_join_eq",
-    "sample_sources",
-    "quantile_filter_by",
-    "lsh_route_eq",
-    "boilerplate_lines",
-    "stream_windowed_counts",
-    "chunk_documents",
-    "dedup_minhash_2t",
-    "label_centroids",
-    "repetition_stats",
-    "assign_split",
-    "asof_purchase_click",
-    "funnel",
-    "sessionize",
-    "agg_q1",
-    "eps_join",
-    "join_revenue_by_nation",
-    "window_topk",
-    "rollup_revenue",
-    "simhash_sigs",
+    "refinedweb_pipeline",
+    "fineweb_pipeline",
+    "dolma_pipeline",
     "multimodal_meta",
     "quantile_filter",
     "bbox",
     "median_dim",
+    "multimodal_gif",
+    "url_dedup_bloom",
+    "langid_route_eq",
+    "nb_classify",
+    "fineweb_filters",
+    "c4_filters",
+    "gopher_repetition",
+    "paragraph_dedup",
+    "paragraph_dedup_bi",
+    "lsh_bucket_cap_eq",
+    "compression_ratio",
+    "semdedup_bi",
+    "dsir_bigk_eq",
+    "url_filter",
+    "dsir_resample",
+    "stream_eq_all",
+    "grid_cells",
+    "ghost_rows",
+    "neighbor_count",
+    "core_points",
+    "eps_join_2t",
+    "cluster_labels",
+    "cluster_stats",
+    "dense_ids",
+    "sample_count",
+    "dedup_exact",
+    "dedup_ngram_jaccard",
+    "dedup_minhash",
+    "embed_neardup",
+    "sim_topk",
+    "curate_docs",
+    "curate_corpus",
+    "url_dedup",
+    "url_dedup_bi",
+    "gopher_rules",
+    "dsir_weights",
+    "mix_to_budget",
+    "remove_dup_spans",
+    "span_dup_stats",
+    "contam_spans",
+    "spans_bipartite",
+    "semdedup_far",
+    "semdedup_eq",
+    "dsir_route_eq",
 ]
 
 
@@ -4593,7 +4269,8 @@ def _leakproof(fn):
     Arrow-backed frame with the ORIGINAL schema — values, columns and
     row multiset are identical (the driver sorts before hashing), and
     the leak-free warm number is the honest one. Queries that already
-    clean up after themselves (the flagship sweeps) short-circuit:
+    clean up after themselves (the preset rows, through
+    ``operators.pipelines.StageRunner``) short-circuit:
     no new entries, frame returned untouched. Object-dtype transit
     keeps NULLs as NULLs (a float64 pandas column would silently turn
     None into NaN)."""

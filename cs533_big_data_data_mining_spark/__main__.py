@@ -634,96 +634,16 @@ def _mix_main(argv: list[str]) -> int:
     return 0
 
 
-
-def _lang_gate_stage(stage, cur, txc, args):
-    """The language stage shared by the fineweb/dolma CLIs: the
-    zero-shuffle marker heuristic by default, or the trained NB route
-    (--langid-route nb) — self-labeled char-gram NB fit on a seed
-    fraction of the pool, scored through the Arrow fixed-point
-    implementation. Both are pure per-row gates (no join)."""
-    if not args.lang:
-        return cur
-    from cs533_big_data_data_mining_spark.functions.text import lang_id
-
-    if getattr(args, "langid_route", "marker") == "nb":
-        from cs533_big_data_data_mining_spark.operators.classify import (
-            lang_id_nb,
-            langid_train,
+def _url_gate_flags(args):
+    """Parse the shared --blocked-domains / --url-kw spellings (loudly)
+    into ``(blocked_domains, url_kw)`` for a preset."""
+    if (args.blocked_domains or args.url_kw) and not args.url_col:
+        raise SystemExit("--blocked-domains / --url-kw need --url-col")
+    if args.url_kw_max <= 0:
+        raise SystemExit(
+            "--url-kw-max must be > 0 (keep requires kw_score < max, and every "
+            "row scores >= 0 — a non-positive max drops the whole corpus)"
         )
-
-        seed = cur
-        frac = float(getattr(args, "langid_seed_fraction", 1.0) or 1.0)
-        if frac < 1.0:
-            seed = cur.sample(fraction=frac, seed=0)
-        model = langid_train(seed, txc)
-        return stage("lang_id_nb", cur.filter(lang_id_nb(model, txc) == args.lang))
-    return stage("lang_id", cur.filter(lang_id(txc) == args.lang))
-
-def _make_stage(args, t0):
-    """The refinedweb/fineweb pipeline CLIs' shared stage() helper:
-    checkpoint at the heavy boundaries — the fused multi-stage plan
-    otherwise grows a whole-stage-codegen string past the JVM's 1 GB
-    literal limit (plan-size failure, not data-size). Default
-    localCheckpoint = executor-local blocks (no extra I/O, but lost
-    with any executor); --checkpoint-dir = real checkpoint() files,
-    survivable on a cluster.
-
-    Non-checkpointed stage counts ride the pipeline's TERMINAL action
-    as Observation metrics instead of one eager .count() job each
-    (round-10 verdict #2: the per-stage jobs dominated the CLIs'
-    wall time); the returned ``flush()`` prints them after the write.
-    Checkpointed stages print immediately (already materialized, the
-    count is a cheap scan of local blocks). --no-stage-counts skips
-    the non-checkpointed counts entirely."""
-    import time as _time
-
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
-    pending: list = []
-
-    def stage(name, frame, checkpoint=False):
-        if checkpoint:
-            frame = (
-                frame.checkpoint(eager=True)
-                if args.checkpoint_dir
-                else frame.localCheckpoint()
-            )
-            print(f"{name}: {frame.count()} docs ({_time.time() - t0:.1f}s)", flush=True)
-        elif args.no_stage_counts:
-            print(f"{name}: (count skipped) ({_time.time() - t0:.1f}s)", flush=True)
-        else:
-            obs = Observation(f"stage{len(pending)}_{name}")
-            frame = frame.observe(obs, F.count(F.lit(1)).alias("n"))
-            pending.append((name, obs))
-        return frame
-
-    def flush():
-        # called after the terminal action. A stage whose downstream
-        # went runtime-empty can have its observe node PRUNED by AQE's
-        # empty-relation propagation (Observation.get would then raise
-        # or block) — observation_value degrades to n/a instead.
-        from cs533_big_data_data_mining_spark.session import observation_value
-
-        for name, obs in pending:
-            n = observation_value(obs, "n")
-            label = f"{int(n)} docs" if n is not None else "n/a (stage pruned at runtime)"
-            print(f"{name}: {label}", flush=True)
-        pending.clear()
-
-    return stage, flush
-
-
-def _url_gate_stage(stage, cur, idc, args):
-    """Shared --blocked-domains/--url-kw stage for the pipeline CLIs:
-    parse the flag spellings (loudly), run url_filter, semi-join the
-    survivors. No-op when neither flag is set."""
-    from pyspark.sql import functions as F
-
-    from cs533_big_data_data_mining_spark.operators.quality import url_filter
-
-    if not (args.blocked_domains or args.url_kw):
-        return cur
     kw = None
     if args.url_kw:
         try:
@@ -742,15 +662,55 @@ def _url_gate_stage(stage, cur, idc, args):
         if args.blocked_domains
         else None
     )
-    uf = url_filter(
-        cur, idc, args.url_col,
-        blocked_domains=bl, keyword_weights=kw,
-        max_keyword_score=args.url_kw_max,
+    return bl, kw
+
+
+def _run_preset(args, app_name, build, extra_cols=()):
+    """Shared body of the preset CLIs: read the corpus, run the
+    preset's stages (``build(spark)``), write shuffled training shards
+    of the input columns plus ``extra_cols``, print per-stage counts."""
+    from pyspark.sql import SparkSession
+
+    from cs533_big_data_data_mining_spark.operators.packing import write_training_shards
+    from cs533_big_data_data_mining_spark.operators.pipelines import StageRunner
+    from cs533_big_data_data_mining_spark.session import get_spark
+
+    preexisting = SparkSession.getActiveSession() is not None
+    spark = get_spark(app_name=app_name, master=args.master)
+    t0 = time.time()
+    docs = spark.read.parquet(args.input)
+    if args.repartition:
+        docs = docs.repartition(args.repartition)
+    with StageRunner(spark, args.checkpoint_dir, log=lambda s: print(s, flush=True)) as run:
+        out = run.run(docs, build(spark))
+        write_training_shards(
+            out.select(*docs.columns, *extra_cols), args.output, args.id_col, args.shards,
+            seed=args.seed + 1,  # never the DSIR selection seed (multiplier-
+            # decorrelated anyway, but distinct by construction is free)
+            mode="overwrite", files_per_shard=args.files_per_shard,
+        )
+        run.log_counts()  # the non-materialized counts, fired by the write
+    try:
+        n_out = spark.read.parquet(args.output).count()
+    except Exception:  # noqa: BLE001 — zero-row write leaves no files to infer from
+        n_out = 0
+    print(
+        f"wrote {n_out} docs into {args.shards} shards "
+        f"x {args.files_per_shard} files at {args.output} ({time.time() - t0:.1f}s)"
     )
-    return stage(
-        "url_filter",
-        cur.join(uf.filter("keep").select(F.col("id").alias(idc)), idc, "left_semi"),
-    )
+    if not preexisting:
+        spark.stop()
+    return 0
+
+
+def _preset_kwargs(args, preset, **parsed):
+    """A preset's keyword arguments: every flag whose dest names one of
+    its parameters (the presets take the CLI spellings), then the
+    ``parsed`` values (frames, dicts, lists) over the raw strings."""
+    import inspect
+
+    params = inspect.signature(preset).parameters
+    return {**{k: v for k, v in vars(args).items() if k in params}, **parsed}
 
 
 def _refinedweb_main(argv: list[str]) -> int:
@@ -762,8 +722,9 @@ def _refinedweb_main(argv: list[str]) -> int:
     -> perplexity quantile gate -> exact dedup -> MinHash near-dup
     dedup -> duplicated-span removal -> decontamination -> DSIR
     select -> split -> shards. Every stage is optional via its flag;
-    per-stage survivor counts print as the pipeline runs. This is the
-    CLI twin of the ``refinedweb_pipeline`` driver row."""
+    per-stage survivor counts print as the pipeline runs. The stage
+    order lives in ``operators/pipelines.py``; the
+    ``refinedweb_pipeline`` driver row runs the same preset."""
     ap = argparse.ArgumentParser(
         prog="cs533_big_data_data_mining_spark refinedweb",
         description="RefinedWeb-ordered curation: crawl -> training shards",
@@ -858,14 +819,6 @@ def _refinedweb_main(argv: list[str]) -> int:
         "the production spelling for a multi-hour 100 TB run",
     )
     ap.add_argument(
-        "--no-stage-counts", action="store_true",
-        help="skip the per-stage survivor counts for non-checkpointed "
-        "stages: each count is one action that re-executes lineage back "
-        "to the previous checkpoint (~2-3 extra corpus scans per run at "
-        "scale); checkpoint boundaries still report counts (they "
-        "materialize anyway)",
-    )
-    ap.add_argument(
         "--repartition", type=int, default=None,
         help="repartition the input to this many partitions before the "
         "pipeline: parquet file splits decide the initial parallelism, "
@@ -877,172 +830,23 @@ def _refinedweb_main(argv: list[str]) -> int:
     args = ap.parse_args(argv)
     if (args.target is None) != (args.select_k is None):
         raise SystemExit("--target and --select-k go together")
-
-    from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
-
-    from cs533_big_data_data_mining_spark.operators.connected_components import (
-        connected_components,
+    blocked, kw = _url_gate_flags(args)
+    splits = (
+        {k: float(v) for k, v in (p.split("=", 1) for p in args.splits.split(","))}
+        if args.splits
+        else None
     )
-    from cs533_big_data_data_mining_spark.operators.decontaminate import decontaminate
-    from cs533_big_data_data_mining_spark.operators.dedup import (
-        exact_dedup,
-        minhash_dedup_pairs,
-        remove_duplicated_spans,
-        url_dedup,
-    )
-    from cs533_big_data_data_mining_spark.operators.packing import write_training_shards
-    from cs533_big_data_data_mining_spark.operators.quality import (
-        assign_split,
-        dsir_logratio,
-        dsir_resample,
-        gopher_rules,
-        lm_perplexity,
-        quantile_filter,
-        remove_boilerplate_lines,
-        url_filter,
-    )
-    from cs533_big_data_data_mining_spark.session import get_spark
 
-    if (args.blocked_domains or args.url_kw) and not args.url_col:
-        raise SystemExit("--blocked-domains / --url-kw need --url-col")
-    if args.url_kw_max <= 0:
-        raise SystemExit(
-            "--url-kw-max must be > 0 (keep requires kw_score < max, and every "
-            "row scores >= 0 — a non-positive max drops the whole corpus)"
-        )
-    preexisting = SparkSession.getActiveSession() is not None
-    spark = get_spark(app_name="cs533_refinedweb_cli", master=args.master)
-    t0 = time.time()
-    idc, txc = args.id_col, args.text_col
-    if args.checkpoint_dir:
-        spark.sparkContext.setCheckpointDir(args.checkpoint_dir)
-    docs = spark.read.parquet(args.input)
-    stage, stage_flush = _make_stage(args, t0)
-    if args.repartition:
-        docs = docs.repartition(args.repartition)
-    cur = stage("input", docs)
-    cur = _url_gate_stage(stage, cur, idc, args)
-    if args.url_col:
-        keep = url_dedup(cur, idc, args.url_col).select(F.col("id").alias(idc))
-        cur = stage("url_dedup", cur.join(keep, idc, "left_semi"))
-    if args.c4:
-        from cs533_big_data_data_mining_spark.operators.quality import c4_filters
+    def build(spark):
+        from cs533_big_data_data_mining_spark.operators.pipelines import refinedweb
 
-        c4 = c4_filters(cur, idc, txc)
-        cur = stage(
-            "c4",
-            cur.drop(txc).join(
-                c4.filter("keep").select(F.col("id").alias(idc), F.col("clean").alias(txc)),
-                idc,
-            ),
-            checkpoint=True,
-        )
-    if not args.skip_gopher:
-        g = gopher_rules(
-            cur, idc, txc,
-            min_words=args.min_words, min_stopword_hits=args.min_stopword_hits,
-        )
-        cur = stage(
-            "gopher", cur.join(g.filter("keep").select(F.col("id").alias(idc)), idc, "left_semi")
-        )
-    if args.repetition:
-        from cs533_big_data_data_mining_spark.operators.quality import gopher_repetition
+        return refinedweb(**_preset_kwargs(
+            args, refinedweb, blocked_domains=blocked, url_kw=kw, splits=splits,
+            bench=spark.read.parquet(args.bench) if args.bench else None,
+            target=spark.read.parquet(args.target) if args.target else None,
+        ))
 
-        rep = gopher_repetition(cur, idc, txc)
-        cur = stage(
-            "repetition",
-            cur.join(rep.filter("keep").select(F.col("id").alias(idc)), idc, "left_semi"),
-        )
-    if args.fineweb:
-        from cs533_big_data_data_mining_spark.operators.quality import fineweb_filters
-
-        fw = fineweb_filters(cur, idc, txc)
-        cur = stage(
-            "fineweb",
-            cur.join(fw.filter("keep").select(F.col("id").alias(idc)), idc, "left_semi"),
-        )
-    if args.max_line_df is not None:
-        cleaned = remove_boilerplate_lines(cur, idc, txc, args.max_line_df)
-        cur = stage(
-            "boilerplate",
-            cur.drop(txc).join(
-                cleaned.select(F.col("id").alias(idc), F.col("clean").alias(txc)), idc
-            ),
-            checkpoint=True,
-        )
-    if args.keep_ppl < 1.0:
-        ppl = lm_perplexity(cur, id_col=idc, text_col=txc)
-        scored = cur.join(ppl.select(F.col("id").alias(idc), "ppl"), idc)
-        cur = stage(
-            "ppl_gate",
-            quantile_filter(
-                scored.withColumn("__negppl", -F.col("ppl")), "__negppl", args.keep_ppl
-            ).drop("__negppl", "ppl"),
-        )
-    cur = stage("exact_dedup", exact_dedup(cur, idc, txc), checkpoint=True)
-    if args.jaccard > 0:
-        pairs = minhash_dedup_pairs(
-            cur, idc, txc, n=args.ngram, threshold=args.jaccard,
-            max_bucket_size=args.max_bucket_size,
-        )
-        comp = connected_components(
-            pairs.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        )
-        drop = comp.filter("node != component").select(F.col("node").alias(idc))
-        cur = stage("minhash_dedup", cur.join(drop, idc, "left_anti"), checkpoint=True)
-    if args.spans_k > 0:
-        sr = remove_duplicated_spans(
-            cur, id_col=idc, text_col=txc, k=args.spans_k,
-            min_span_tokens=args.min_span_tokens,
-        )
-        cur = stage(
-            "span_removal",
-            cur.drop(txc).join(
-                sr.select(F.col("id").alias(idc), F.col("clean").alias(txc)), idc
-            ),
-            checkpoint=True,
-        )
-    if args.bench:
-        bench = spark.read.parquet(args.bench)
-        flags = decontaminate(cur, bench, idc, txc, n=args.decontam_ngram)
-        cur = stage(
-            "decontaminate",
-            cur.join(flags.filter("keep").select(F.col("id").alias(idc)), idc, "left_semi"),
-            checkpoint=True,
-        )
-    if args.target:
-        target = spark.read.parquet(args.target)
-        scores = dsir_logratio(
-            cur, idc, txc, target,
-            target_text_col=txc, n_buckets=args.dsir_buckets, hash_buckets="xxhash64",
-        )
-        sel = dsir_resample(scores, args.select_k, seed=args.seed)
-        cur = stage("dsir_select", cur.join(sel.select(F.col("id").alias(idc)), idc, "left_semi"))
-    if args.splits:
-        weights = {
-            k: float(v) for k, v in (p.split("=", 1) for p in args.splits.split(","))
-        }
-        spl = assign_split(cur, idc, weights=weights)
-        cur = cur.join(spl.select(F.col("id").alias(idc), "split"), idc)
-    write_training_shards(
-        cur, args.output, idc, args.shards,
-        seed=args.seed + 1,  # never the DSIR selection seed (multiplier-
-        # decorrelated anyway, but distinct by construction is free)
-        mode="overwrite", files_per_shard=args.files_per_shard,
-    )
-    stage_flush()  # deferred stage counts: fired by the write above
-    try:
-        n_out = spark.read.parquet(args.output).count()
-    except Exception:  # noqa: BLE001 — zero-row write leaves no files to infer from
-        n_out = 0
-    print(
-        f"wrote {n_out} docs into {args.shards} shards "
-        f"x {args.files_per_shard} files at {args.output} ({time.time() - t0:.1f}s)"
-    )
-    if not preexisting:
-        spark.stop()
-    return 0
+    return _run_preset(args, "cs533_refinedweb_cli", build, ("split",) if splits else ())
 
 
 def _fineweb_main(argv: list[str]) -> int:
@@ -1051,9 +855,10 @@ def _fineweb_main(argv: list[str]) -> int:
     PII-redacted training shards: URL filtering -> language ID ->
     Gopher repetition removal -> Gopher quality rules -> MinHash
     near-dup dedup -> C4 rules MINUS terminal_punct (§3.4) -> FineWeb
-    custom filters (§3.6) -> PII redaction. The CLI twin of the
-    ``fineweb_pipeline`` driver row; the ``refinedweb`` subcommand
-    offers the same operators in RefinedWeb's order."""
+    custom filters (§3.6) -> PII redaction. The stage order lives in
+    ``operators/pipelines.py``; the ``fineweb_pipeline`` driver row
+    runs the same preset, and the ``refinedweb`` subcommand offers the
+    same operators in RefinedWeb's order."""
     ap = argparse.ArgumentParser(
         prog="cs533_big_data_data_mining_spark fineweb",
         description="FineWeb-ordered curation: crawl -> filtered shards",
@@ -1107,7 +912,6 @@ def _fineweb_main(argv: list[str]) -> int:
     ap.add_argument("--files-per-shard", type=int, default=1)
     ap.add_argument("--seed", type=int, default=0)
     ap.add_argument("--checkpoint-dir", default=None, help="reliable-checkpoint directory")
-    ap.add_argument("--no-stage-counts", action="store_true")
     ap.add_argument(
         "--repartition", type=int, default=None,
         help="repartition the input before the pipeline (see the "
@@ -1116,102 +920,14 @@ def _fineweb_main(argv: list[str]) -> int:
     )
     ap.add_argument("--master", default=None)
     args = ap.parse_args(argv)
+    blocked, kw = _url_gate_flags(args)
 
-    from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
+    def build(spark):
+        from cs533_big_data_data_mining_spark.operators.pipelines import fineweb
 
-    from cs533_big_data_data_mining_spark.functions.text import redact_pii
-    from cs533_big_data_data_mining_spark.operators.connected_components import (
-        connected_components,
-    )
-    from cs533_big_data_data_mining_spark.operators.dedup import minhash_dedup_pairs
-    from cs533_big_data_data_mining_spark.operators.packing import write_training_shards
-    from cs533_big_data_data_mining_spark.operators.quality import (
-        c4_filters,
-        fineweb_filters,
-        gopher_repetition,
-        gopher_rules,
-        url_filter,
-    )
-    from cs533_big_data_data_mining_spark.session import get_spark
+        return fineweb(**_preset_kwargs(args, fineweb, blocked_domains=blocked, url_kw=kw))
 
-    if (args.blocked_domains or args.url_kw) and not args.url_col:
-        raise SystemExit("--blocked-domains / --url-kw need --url-col")
-    if args.url_kw_max <= 0:
-        raise SystemExit("--url-kw-max must be > 0")
-    preexisting = SparkSession.getActiveSession() is not None
-    spark = get_spark(app_name="cs533_fineweb_cli", master=args.master)
-    t0 = time.time()
-    idc, txc = args.id_col, args.text_col
-    if args.checkpoint_dir:
-        spark.sparkContext.setCheckpointDir(args.checkpoint_dir)
-
-    stage, stage_flush = _make_stage(args, t0)
-    docs_in = spark.read.parquet(args.input)
-    if args.repartition:
-        docs_in = docs_in.repartition(args.repartition)
-    cur = stage("input", docs_in)
-    cur = _url_gate_stage(stage, cur, idc, args)
-    cur = _lang_gate_stage(stage, cur, txc, args)
-    if not args.skip_repetition:
-        rep = gopher_repetition(cur, idc, txc)
-        cur = stage(
-            "repetition",
-            cur.join(rep.filter("keep").select(F.col("id").alias(idc)), idc, "left_semi"),
-            checkpoint=True,
-        )
-    if not args.skip_gopher:
-        g = gopher_rules(
-            cur, idc, txc,
-            min_words=args.min_words, min_stopword_hits=args.min_stopword_hits,
-        )
-        cur = stage(
-            "gopher",
-            cur.join(g.filter("keep").select(F.col("id").alias(idc)), idc, "left_semi"),
-        )
-    if args.jaccard > 0:
-        pairs = minhash_dedup_pairs(
-            cur, idc, txc, n=args.ngram, threshold=args.jaccard,
-            max_bucket_size=args.max_bucket_size,
-        )
-        comp = connected_components(
-            pairs.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        )
-        drop = comp.filter("node != component").select(F.col("node").alias(idc))
-        cur = stage("minhash_dedup", cur.join(drop, idc, "left_anti"), checkpoint=True)
-    if not args.skip_c4:
-        c4 = c4_filters(cur, idc, txc, line_terminal_punct=False)
-        cur = stage(
-            "c4_minus_terminal_punct",
-            cur.drop(txc).join(
-                c4.filter("keep").select(F.col("id").alias(idc), F.col("clean").alias(txc)),
-                idc,
-            ),
-        )
-    if not args.skip_custom:
-        fw = fineweb_filters(cur, idc, txc)
-        cur = stage(
-            "fineweb_custom",
-            cur.join(fw.filter("keep").select(F.col("id").alias(idc)), idc, "left_semi"),
-        )
-    if not args.no_redact:
-        cur = cur.withColumn(txc, redact_pii(F.col(txc)))
-    write_training_shards(
-        cur, args.output, idc, args.shards,
-        seed=args.seed + 1, mode="overwrite", files_per_shard=args.files_per_shard,
-    )
-    stage_flush()  # deferred stage counts: fired by the write above
-    try:
-        n_out = spark.read.parquet(args.output).count()
-    except Exception:  # noqa: BLE001 — zero-row write leaves no files to infer from
-        n_out = 0
-    print(
-        f"wrote {n_out} docs into {args.shards} shards "
-        f"x {args.files_per_shard} files at {args.output} ({time.time() - t0:.1f}s)"
-    )
-    if not preexisting:
-        spark.stop()
-    return 0
+    return _run_preset(args, "cs533_fineweb_cli", build)
 
 
 def _dolma_main(argv: list[str]) -> int:
@@ -1226,8 +942,9 @@ def _dolma_main(argv: list[str]) -> int:
     ``paragraph_dedup_bipartite_bloom``); ``--no-verify`` switches
     them to Dolma's unverified one-sided trade (no history join at
     all, ~fpp of genuinely-new content lost). Without ``--history``
-    they fall back to the within-corpus batch spellings. The CLI twin
-    of the ``dolma_pipeline`` driver row."""
+    they fall back to the within-corpus batch spellings. The stage
+    order lives in ``operators/pipelines.py``; the ``dolma_pipeline``
+    driver row runs the same preset."""
     ap = argparse.ArgumentParser(
         prog="cs533_big_data_data_mining_spark dolma",
         description="Dolma-ordered curation: pool [-> vs history] -> filtered shards",
@@ -1286,140 +1003,23 @@ def _dolma_main(argv: list[str]) -> int:
     ap.add_argument("--files-per-shard", type=int, default=1)
     ap.add_argument("--seed", type=int, default=0)
     ap.add_argument("--checkpoint-dir", default=None, help="reliable-checkpoint directory")
-    ap.add_argument("--no-stage-counts", action="store_true")
     ap.add_argument("--repartition", type=int, default=None)
     ap.add_argument("--master", default=None)
     args = ap.parse_args(argv)
-
-    from pyspark.sql import SparkSession
-    from pyspark.sql import functions as F
-
-    from cs533_big_data_data_mining_spark.functions.text import redact_pii
-    from cs533_big_data_data_mining_spark.operators.decontaminate import (
-        decontaminate_bloom,
-    )
-    from cs533_big_data_data_mining_spark.operators.dedup import (
-        exact_dedup,
-        exact_dedup_bipartite_bloom,
-        paragraph_dedup,
-        paragraph_dedup_bipartite_bloom,
-        url_dedup,
-        url_dedup_bipartite_bloom,
-    )
-    from cs533_big_data_data_mining_spark.operators.packing import write_training_shards
-    from cs533_big_data_data_mining_spark.operators.quality import c4_filters, gopher_rules
-    from cs533_big_data_data_mining_spark.session import get_spark
-
-    if (args.blocked_domains or args.url_kw) and not args.url_col:
-        raise SystemExit("--blocked-domains / --url-kw need --url-col")
-    if args.url_kw_max <= 0:
-        raise SystemExit("--url-kw-max must be > 0")
+    blocked, kw = _url_gate_flags(args)
     if not (0 < args.fpp < 1):
         raise SystemExit("--fpp must be in (0, 1)")
-    preexisting = SparkSession.getActiveSession() is not None
-    spark = get_spark(app_name="cs533_dolma_cli", master=args.master)
-    t0 = time.time()
-    idc, txc = args.id_col, args.text_col
-    hist_txc = args.history_text_col or txc
-    if args.checkpoint_dir:
-        spark.sparkContext.setCheckpointDir(args.checkpoint_dir)
 
-    stage, stage_flush = _make_stage(args, t0)
-    docs_in = spark.read.parquet(args.input)
-    if args.repartition:
-        docs_in = docs_in.repartition(args.repartition)
-    hist = spark.read.parquet(args.history) if args.history else None
-    cur = stage("input", docs_in)
-    cur = _url_gate_stage(stage, cur, idc, args)
-    cur = _lang_gate_stage(stage, cur, txc, args)
-    if not args.skip_gopher:
-        g = gopher_rules(
-            cur, idc, txc,
-            min_words=args.min_words, min_stopword_hits=args.min_stopword_hits,
-        )
-        # checkpoint: the next stage self-joins this frame (clean text
-        # join), which would otherwise recompute the gopher lineage
-        # once per join side
-        cur = stage(
-            "gopher",
-            cur.join(g.filter("keep").select(F.col("id").alias(idc)), idc, "left_semi"),
-            checkpoint=True,
-        )
-    if not args.skip_c4:
-        c4 = c4_filters(cur, idc, txc, line_terminal_punct=False)
-        cur = stage(
-            "c4_minus_terminal_punct",
-            cur.drop(txc).join(
-                c4.filter("keep").select(F.col("id").alias(idc), F.col("clean").alias(txc)),
-                idc,
-            ),
-        )
-    if not args.no_redact:  # Dolma masks PII BEFORE the dedup ladder
-        cur = cur.withColumn(txc, redact_pii(F.col(txc)))
-    if args.url_col and not args.skip_url_dedup:
-        if hist is not None and args.url_col in hist.columns:
-            # vs-history URL dedup (Dolma dedups URLs against the
-            # admitted corpus too) — Bloom route, then within-pool
-            ud = url_dedup_bipartite_bloom(
-                cur, hist, idc, args.url_col,
-                fpp=args.fpp, exact=not args.no_verify,
-            )
-        else:
-            ud = url_dedup(cur, idc, args.url_col)
-        cur = stage(
-            "url_dedup", cur.join(ud.select(F.col("id").alias(idc)), idc, "left_semi")
-        )
-    if not args.skip_doc_dedup:
-        if hist is not None:
-            ded = exact_dedup_bipartite_bloom(
-                cur, hist, idc, txc,
-                history_content_col=hist_txc,
-                fpp=args.fpp, exact=not args.no_verify,
-            )
-        else:
-            ded = exact_dedup(cur, idc, txc)
-        cur = stage("doc_dedup", ded, checkpoint=True)
-    if not args.skip_paragraph_dedup:
-        if hist is not None:
-            pd_out = paragraph_dedup_bipartite_bloom(
-                hist.withColumnRenamed(hist_txc, txc) if hist_txc != txc else hist,
-                cur, idc, txc,
-                fpp=args.fpp, exact=not args.no_verify,
-            )
-        else:
-            pd_out = paragraph_dedup(cur, idc, txc, mode="keep_first")
-        survivors = pd_out.filter(F.col("clean").isNotNull() & (F.col("clean") != "")).select(
-            F.col("id").alias(idc), F.col("clean").alias(txc)
-        )
-        cur = stage(
-            "paragraph_dedup",
-            cur.drop(txc).join(survivors, idc),
-            checkpoint=True,
-        )
-    if args.bench:  # Dolma decontaminates against eval sets too
-        bench = spark.read.parquet(args.bench)
-        flags = decontaminate_bloom(cur, bench, idc, txc, n=args.decontam_ngram)
-        cur = stage(
-            "decontaminate",
-            cur.join(flags.filter("keep").select(F.col("id").alias(idc)), idc, "left_semi"),
-            checkpoint=True,
-        )
-    write_training_shards(
-        cur, args.output, idc, args.shards,
-        seed=args.seed + 1, mode="overwrite", files_per_shard=args.files_per_shard,
-    )
-    stage_flush()  # deferred stage counts: fired by the write above
-    try:
-        n_out = spark.read.parquet(args.output).count()
-    except Exception:  # noqa: BLE001 — zero-row write leaves no files to infer from
-        n_out = 0
-    print(
-        f"wrote {n_out} docs into {args.shards} shards "
-        f"x {args.files_per_shard} files at {args.output} ({time.time() - t0:.1f}s)"
-    )
-    if not preexisting:
-        spark.stop()
-    return 0
+    def build(spark):
+        from cs533_big_data_data_mining_spark.operators.pipelines import dolma
+
+        return dolma(**_preset_kwargs(
+            args, dolma, blocked_domains=blocked, url_kw=kw,
+            history=spark.read.parquet(args.history) if args.history else None,
+            bench=spark.read.parquet(args.bench) if args.bench else None,
+        ))
+
+    return _run_preset(args, "cs533_dolma_cli", build)
 
 
 def _ingest_shard_main(argv: list[str]) -> int:

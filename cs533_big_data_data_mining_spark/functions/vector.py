@@ -34,12 +34,3 @@ def norm2(a: str | Column) -> Column:
 def cosine(a: str | Column, b: str | Column) -> Column:
     """Cosine similarity; assumes nonzero vectors."""
     return dot(a, b) / (norm2(a) * norm2(b))
-
-
-def dot_sql(a: str, b: str) -> str:
-    """DuckDB twin of ``dot`` — same left-to-right fold."""
-    return (
-        f"list_reduce(list_prepend(CAST(0.0 AS DOUBLE), "
-        f"list_transform(range(1, len({a})+1), i -> "
-        f"CAST({a}[i] AS DOUBLE) * CAST({b}[i] AS DOUBLE))), (acc, x) -> acc + x)"
-    )

@@ -242,14 +242,6 @@ def _validate_dense(
         )
 
 
-def core_flags(points: DataFrame, eps: float, min_pts: int, spec: GridSpec) -> DataFrame:
-    """(id, n_neighbors, is_core) — op 9's core predicate as a
-    HAVING-count-style aggregate over the cell kernel."""
-    celled = ghost_expand(points, spec)
-    counts = neighbor_counts(celled, eps)
-    return counts.withColumn("is_core", F.col("n_neighbors") >= F.lit(int(min_pts)))
-
-
 def dbscan(
     points: DataFrame,
     eps: float,

@@ -45,26 +45,7 @@ from pyspark.sql import types as T
 
 from cs533_big_data_data_mining_spark.session import local_df
 
-# Memory budget per distance block: rows_per_block * n * 8 bytes <= ~128 MB
-_BLOCK_BYTES = 128 * 1024 * 1024
-
 _EMPTY = np.empty(0, dtype=np.int64)
-
-
-def _block_rows(n: int) -> int:
-    return max(16, min(4096, _BLOCK_BYTES // max(1, 8 * n)))
-
-
-def _dist2_block(a: np.ndarray, b: np.ndarray) -> np.ndarray:
-    """Exact squared distances, per-dim accumulation (dim-ascending,
-    float64) — matches SQL left-to-right sum bit-for-bit. Used by the
-    boundary-band recheck and by tests; the bulk path is the BLAS
-    Gram form in ``_blas_hit_pairs``."""
-    out = np.zeros((a.shape[0], b.shape[0]), dtype=np.float64)
-    for j in range(a.shape[1]):
-        d = a[:, j : j + 1] - b[None, :, j]
-        out += d * d
-    return out
 
 
 def _exact_d2_rows(a: np.ndarray, b: np.ndarray) -> np.ndarray:

@@ -28,14 +28,6 @@ from cs533_big_data_data_mining_spark.functions.vector import as_double_array, d
 from cs533_big_data_data_mining_spark.session import local_df
 
 
-def _normalized(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
-    v = as_double_array(vec_col)
-    return df.select(
-        F.col(id_col).alias("id"),
-        F.transform(v, lambda x: x / norm2(v)).alias("vec"),
-    )
-
-
 def cosine_topk_bruteforce(
     corpus: DataFrame,
     queries: DataFrame,

@@ -25,3 +25,19 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return f"{TESTDATA}/sf0.001"
+
+
+@pytest.fixture
+def session_state(spark):
+    """Snapshot callable of what a run can leave behind in the session:
+    the persistent-RDD ids and the number of CacheManager registrations
+    (read through reflection — Spark has no public listing)."""
+
+    def snap():
+        rdds = frozenset(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+        cm = spark._jsparkSession.sharedState().cacheManager()
+        field = cm.getClass().getDeclaredField("cachedData")
+        field.setAccessible(True)
+        return rdds, int(field.get(cm).size())
+
+    return snap

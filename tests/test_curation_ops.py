@@ -473,8 +473,7 @@ def test_cli_refinedweb_end_to_end(spark, tmp_path):
 def test_cli_refinedweb_checkpoint_dir_identical(spark, tmp_path):
     # --checkpoint-dir swaps localCheckpoint for reliable checkpoint()
     # at the stage boundaries (the cluster fault-tolerance spelling)
-    # and --no-stage-counts drops the non-checkpoint count actions;
-    # neither may change the produced shards in any way
+    # and may not change the produced shards in any way
     from cs533_big_data_data_mining_spark.__main__ import main
 
     src = str(tmp_path / "ck_docs.parquet")
@@ -497,8 +496,7 @@ def test_cli_refinedweb_checkpoint_dir_identical(spark, tmp_path):
     assert main(["refinedweb", "-i", src, "-o", out_local, *common]) == 0
     assert main([
         "refinedweb", "-i", src, "-o", out_rel,
-        "--checkpoint-dir", str(tmp_path / "ckpt"),
-        "--no-stage-counts", *common,
+        "--checkpoint-dir", str(tmp_path / "ckpt"), *common,
     ]) == 0
     a = sorted(map(tuple, spark.read.parquet(out_local).collect()))
     b = sorted(map(tuple, spark.read.parquet(out_rel).collect()))
@@ -1689,7 +1687,7 @@ def test_cli_dolma_end_to_end(spark, tmp_path):
         "dolma", "-i", src, "-o", out, "--history", hist, "--bench", bench,
         "--url-col", "url", "--min-stopword-hits", "1", "--min-words", "20",
         "--fpp", "0.5",  # deliberately tiny filter: FPs must verify away
-        "--shards", "4", "--seed", "3", "--no-stage-counts",
+        "--shards", "4", "--seed", "3",
     ])
     assert rc == 0
     got = spark.read.parquet(out)
@@ -1713,7 +1711,7 @@ def test_cli_dolma_end_to_end(spark, tmp_path):
         "dolma", "-i", src, "-o", out2, "--history", hist, "--bench", bench,
         "--url-col", "url", "--min-stopword-hits", "1", "--min-words", "20",
         "--fpp", "0.5", "--no-verify",
-        "--shards", "4", "--seed", "3", "--no-stage-counts",
+        "--shards", "4", "--seed", "3",
     ])
     assert rc == 0
     ids2 = {r["doc_id"] for r in spark.read.parquet(out2).select("doc_id").collect()}
@@ -1750,7 +1748,7 @@ def test_cli_dolma_history_text_col(spark, tmp_path):
         "dolma", "-i", src, "-o", out, "--history", hist,
         "--history-text-col", "content",
         "--lang", "", "--skip-gopher", "--skip-c4", "--no-redact",
-        "--fpp", "0.5", "--shards", "2", "--no-stage-counts",
+        "--fpp", "0.5", "--shards", "2",
     ])
     assert rc == 0
     got = {r["doc_id"]: r["text"] for r in spark.read.parquet(out).collect()}
@@ -1906,13 +1904,62 @@ def test_cli_dolma_langid_nb_route(spark, tmp_path):
         "--langid-route", "nb",
         "--skip-gopher", "--skip-c4", "--no-redact",
         "--skip-doc-dedup", "--skip-paragraph-dedup",
-        "--shards", "2", "--no-stage-counts",
+        "--shards", "2",
     ])
     assert rc == 0
     ids = {r["doc_id"] for r in spark.read.parquet(out).select("doc_id").collect()}
     assert 20 not in ids
     assert 21 in ids  # the marker route would have dropped this one
     assert set(range(12)) <= ids
+
+
+def test_cli_presets_release_session_state(spark, tmp_path, session_state):
+    """The refinedweb, fineweb and dolma CLIs leave no cache or
+    checkpoint block behind in a reused session: after each run the
+    persistent RDDs and the CacheManager are as they were before. The
+    session starts with no registrations, as a CLI process does (the
+    runner then also drops the one an operator keeps to itself —
+    decontaminate_bloom's hit table on the dolma --bench path)."""
+    spark.catalog.clearCache()
+    before = session_state()
+    for run in (
+        test_cli_refinedweb_end_to_end,
+        test_cli_fineweb_preset,
+        test_cli_dolma_end_to_end,
+    ):
+        d = tmp_path / run.__name__
+        d.mkdir()
+        run(spark, d)
+        assert session_state() == before, run.__name__
+
+
+def test_stage_runner_releases_on_error(spark, session_state):
+    """A run whose second stage raises after the first materialized
+    still releases its checkpoint and every frame a stage handed it —
+    and leaves a caller's own cache registered."""
+    from cs533_big_data_data_mining_spark.operators.pipelines import Stage, StageRunner
+
+    sentinel = spark.range(5).cache()
+    sentinel.count()
+    before = session_state()
+
+    def owned(df, caches):
+        side = df.selectExpr("id * 2 AS id").cache()
+        side.count()
+        caches.append(side)
+        return df.join(side, "id", "left_semi")
+
+    def boom(df, caches):
+        raise RuntimeError("stage failed")
+
+    with pytest.raises(RuntimeError, match="stage failed"):
+        with StageRunner(spark) as run:
+            run.run(spark.range(100), [Stage("owned", owned, True), Stage("boom", boom)])
+    assert run.count("owned") == 50
+    assert session_state() == before
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    assert cm.lookupCachedData(sentinel._jdf).isDefined()
+    sentinel.unpersist()
 
 
 def test_cli_ingest_shard_paragraph_and_bloom_dir(spark, tmp_path):

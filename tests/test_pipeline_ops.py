@@ -1146,12 +1146,14 @@ def test_cms_load_accepts_legacy_single_meta(spark, tmp_path):
     assert (depth, width) == (2, 64) and loaded.filter("d < 0").count() == 0
 
 
-def test_fineweb_pipeline_flagship_contracts(spark):
+def test_fineweb_pipeline_flagship_contracts(spark, sf_dir, session_state):
     """The FineWeb-ordered flagship at sf0.001: stage survivor counts
     are monotone non-increasing in published order, every planted
     failure class is absent from the survivors, and the planted email
-    is redacted in every surviving text. (Exact value parity vs the
-    composed SQL twin is the driver row's job.)"""
+    is redacted in every surviving text. The unwrapped row (no
+    ``_leakproof``) leaves the persistent RDDs and the CacheManager as
+    it found them. (Exact value parity vs the composed SQL twin is the
+    driver row's job.)"""
     import importlib.util
 
     spec = importlib.util.spec_from_file_location(
@@ -1160,7 +1162,9 @@ def test_fineweb_pipeline_flagship_contracts(spark):
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
 
-    out = mod.queries()["fineweb_pipeline"](spark, "/root/testdata/sf0.001").collect()
+    before = session_state()
+    out = mod._q_fineweb_pipeline(spark, sf_dir).collect()
+    assert session_state() == before
     assert out, "pipeline produced no survivors"
     r0 = out[0]
     counts = [r0["n_url"], r0["n_lang"], r0["n_rep"], r0["n_gopher"], r0["n_dedup"], r0["n_c4"]]

@@ -20,14 +20,17 @@ import duckdb
 import numpy as np
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, REPO)
 
 from cs533_big_data_data_mining_spark.session import get_spark  # noqa: E402
 from cs533_big_data_data_mining_spark.sources.tables import TABLES  # noqa: E402
 
 
 def load_entry():
-    spec = importlib.util.spec_from_file_location("spark_entry", "/root/repo/__spark_entry__.py")
+    spec = importlib.util.spec_from_file_location(
+        "spark_entry", os.path.join(REPO, "__spark_entry__.py")
+    )
     mod = importlib.util.module_from_spec(spec)
     spec.loader.exec_module(mod)
     return mod
@@ -90,6 +93,9 @@ def main():
     only = set(sys.argv[2:])
     mod = load_entry()
     qs, oracles = mod.queries(), mod.oracle_sql()
+    unknown = sorted(only - set(qs))
+    if unknown:
+        sys.exit(f"unknown query keys (not in queries()): {', '.join(unknown)}")
     # SPARK_GRAFT_CHECK_SHUFFLE=<seed>: randomize execution order —
     # determinism evidence that no query depends on session state left
     # by an earlier one (registry order is the driver's order)
