@@ -12,6 +12,8 @@ so the DuckDB gate checks them bit-for-bit.
 
 from __future__ import annotations
 
+from collections.abc import Callable
+
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
@@ -40,31 +42,48 @@ def token_count(col: str | Column) -> Column:
     return F.size(tokenize(col))
 
 
-def word_shingles(col: str | Column, n: int) -> Column:
-    """Distinct word n-grams (space-joined), the shingle unit for
-    Jaccard / MinHash dedup. Docs shorter than n yield an empty array
-    (NB: Spark's sequence(1, m) counts DOWN for m < 1, so the guard
-    is a when(), not a greatest())."""
-    toks = tokenize(col)
+def let(value: Column, body: Callable[[Column], Column]) -> Column:
+    """``body(v)`` with ``v`` bound to ``value``, evaluated once per row.
+
+    Spark inlines a Column wherever it is used, and a higher-order
+    function re-evaluates everything its lambda references for EVERY
+    element — so ``transform(seq, i -> slice(tokenize(text), i, n))``
+    re-splits the document once per gram, O(words^2) per row. Passing
+    the value through a one-element ``transform`` makes it a lambda
+    variable: computed once, then read by reference.
+
+    ``body`` must not read ``v`` inside a lambda of its own: Spark then
+    leaves a Python UDF that consumes the result unextracted and fails
+    with "Cannot evaluate expression". Hand ``v`` to inner lambdas as
+    their argument instead (``array_repeat``, see :func:`token_ngrams`)."""
+    return F.transform(F.array(value), body)[0]
+
+
+def token_ngrams(toks: Column, n: int) -> Column:
+    """ALL space-joined n-grams of a token ARRAY, in order (duplicates
+    kept); NULL and arrays shorter than n yield an empty array. Gram i
+    slices the i-th entry of ``array_repeat(toks, cnt)`` — cnt
+    references to one array, no token copies — so the lambda gets the
+    tokens as its argument (see :func:`let`)."""
     cnt = F.size(toks) - F.lit(n - 1)
     grams = F.transform(
-        F.sequence(F.lit(1), cnt), lambda i: F.concat_ws(" ", F.slice(toks, i, n))
+        F.array_repeat(toks, cnt), lambda w, i: F.concat_ws(" ", F.slice(w, i + 1, n))
     )
-    return F.when(cnt >= 1, F.array_distinct(grams)).otherwise(
-        F.array().cast("array<string>")
-    )
+    return F.when(cnt >= 1, grams).otherwise(F.array().cast("array<string>"))
 
 
 def word_ngrams(col: str | Column, n: int) -> Column:
     """ALL word n-grams in order (duplicates kept) — the frequency
     unit for repetition statistics, unlike ``word_shingles`` whose
-    distinct sets feed Jaccard. Same short-input empty-array guard."""
-    toks = tokenize(col)
-    cnt = F.size(toks) - F.lit(n - 1)
-    grams = F.transform(
-        F.sequence(F.lit(1), cnt), lambda i: F.concat_ws(" ", F.slice(toks, i, n))
-    )
-    return F.when(cnt >= 1, grams).otherwise(F.array().cast("array<string>"))
+    distinct sets feed Jaccard. Docs shorter than n yield an empty
+    array; the text is tokenized once, not once per gram."""
+    return let(tokenize(col), lambda toks: token_ngrams(toks, n))
+
+
+def word_shingles(col: str | Column, n: int) -> Column:
+    """Distinct word n-grams (space-joined), the shingle unit for
+    Jaccard / MinHash dedup. Docs shorter than n yield an empty array."""
+    return F.array_distinct(word_ngrams(col, n))
 
 
 def char_ngrams(col: str | Column, n: int) -> Column:

@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from cs533_big_data_data_mining_spark.functions.text import let
+
 #: query parameters that never change page content — dropped by the
 #: normalizer. Deliberately NOT including bare ``ref``: real sites use
 #: it content-bearingly (e.g. a VCS web UI's ``?ref=<branch>`` selects
@@ -143,11 +145,14 @@ def host_suffixes(col: str | Column) -> Column:
     blocklist side broadcasts; the suffix fan-out is the host's label
     count, <= ~5 in practice). Empty array for empty/null hosts."""
     h = F.col(col) if isinstance(col, str) else col
-    parts = F.split(h, r"\.")
-    n = F.size(parts)
-    return F.when(h.isNull() | (h == ""), F.array().cast("array<string>")).otherwise(
-        F.transform(
-            F.sequence(F.lit(1), n),
-            lambda i: F.array_join(F.slice(parts, i, n), "."),
+
+    def suffixes(parts):
+        # the lambda reads the labels through its argument (see let)
+        return F.transform(
+            F.array_repeat(parts, F.size(parts)),
+            lambda p, i: F.array_join(F.slice(p, i + 1, F.size(p)), "."),
         )
+
+    return F.when(h.isNull() | (h == ""), F.array().cast("array<string>")).otherwise(
+        let(F.split(h, r"\."), suffixes)
     )

@@ -180,31 +180,35 @@ def chunk_documents(
     (``(n - chunk + stride - 1) div stride + 1``) so the boundary is
     bit-identical on every engine.
     """
-    from cs533_big_data_data_mining_spark.functions.text import tokenize
+    from cs533_big_data_data_mining_spark.functions.text import let, tokenize
 
     ck, sd = int(chunk_tokens), int(stride or chunk_tokens)
     if ck <= 0 or sd <= 0:
         raise ValueError("chunk_tokens and stride must be positive")
-    toks = tokenize(text_col)
-    n = F.size(toks)
-    # k = #chunks - 1 (inclusive sequence bound); -1 = none. The
-    # coverage bound ceil((n-ck)/sd) alone can start a window AT/past
-    # the end when stride > chunk (an empty junk chunk) — cap it at
-    # floor((n-1)/sd), the last non-empty start.
-    k = F.when(
-        n > 0,
-        F.least(
-            ((F.greatest(n - F.lit(ck), F.lit(0)) + F.lit(sd - 1)) / F.lit(sd)).cast("int"),
-            ((n - F.lit(1)) / F.lit(sd)).cast("int"),
-        ),
-    ).otherwise(F.lit(-1)).cast("int")
-    windows = F.when(
-        k >= 0,
-        F.transform(
-            F.sequence(F.lit(0), k),
-            lambda i: F.slice(toks, i * F.lit(sd) + F.lit(1), F.lit(ck)),
-        ),
-    ).otherwise(F.array().cast("array<array<string>>"))
+
+    def chunk_windows(toks):
+        n = F.size(toks)
+        # k = #chunks - 1; -1 = none. The
+        # coverage bound ceil((n-ck)/sd) alone can start a window AT/past
+        # the end when stride > chunk (an empty junk chunk) — cap it at
+        # floor((n-1)/sd), the last non-empty start.
+        k = F.when(
+            n > 0,
+            F.least(
+                ((F.greatest(n - F.lit(ck), F.lit(0)) + F.lit(sd - 1)) / F.lit(sd)).cast("int"),
+                ((n - F.lit(1)) / F.lit(sd)).cast("int"),
+            ),
+        ).otherwise(F.lit(-1)).cast("int")
+        # the lambda reads the tokens through its argument (see let)
+        return F.when(
+            k >= 0,
+            F.transform(
+                F.array_repeat(toks, k + F.lit(1)),
+                lambda w, i: F.slice(w, i * F.lit(sd) + F.lit(1), F.lit(ck)),
+            ),
+        ).otherwise(F.array().cast("array<array<string>>"))
+
+    windows = let(tokenize(text_col), chunk_windows)
     return (
         df.select(F.col(id_col).alias("id"), windows.alias("__w"))
         .select("id", F.posexplode("__w").alias("chunk_idx", "__t"))

@@ -29,7 +29,7 @@ from pyspark import SparkContext
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from cs533_big_data_data_mining_spark.functions.text import tokenize, word_ngrams
+from cs533_big_data_data_mining_spark.functions.text import token_ngrams, tokenize, word_ngrams
 
 
 def _expr_memo(key: tuple, builder):
@@ -1023,15 +1023,6 @@ def _gopher_repetition_layers(
         *[F.col(c) for c in carry],
     ]
 
-    def _grams(n):
-        # word_ngrams over the materialized token column (duplicates
-        # kept, same short-input empty guard)
-        cnt = F.size(F.col("__toks")) - F.lit(n - 1)
-        g = F.transform(
-            F.sequence(F.lit(1), cnt), lambda i: F.concat_ws(" ", F.slice(F.col("__toks"), i, n))
-        )
-        return F.when(cnt >= 1, g).otherwise(F.array().cast("array<string>"))
-
     lines = F.filter(F.transform(F.split("__t", r"\n"), lambda x: F.trim(x)), lambda x: x != "")
     paras = F.filter(F.transform(F.split("__t", r"\n{2,}"), lambda x: F.trim(x)), lambda x: x != "")
 
@@ -1046,7 +1037,7 @@ def _gopher_repetition_layers(
     # crosses a document boundary.)
     kinds = {"line": (lines, 0), "para": (paras, 0)}
     # grams are space-joined: non-space char length = len - (n-1)
-    kinds.update({f"g{n}": (_grams(n), n - 1) for n in top_ns + dup_ns})
+    kinds.update({f"g{n}": (token_ngrams(F.col("__toks"), n), n - 1) for n in top_ns + dup_ns})
     sorted_cols = [
         F.col("id"),
         *[F.col(c) for c in carry],

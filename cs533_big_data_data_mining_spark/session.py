@@ -60,9 +60,9 @@ def get_spark(
     """
     cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "0")) or (os.cpu_count() or 4)
     master = master or f"local[{cpus}]"
-    # one task wave per stage: AQE splits genuinely large partitions
-    # (skew join) and coalesces small ones, so over-provisioning the
-    # initial count only adds scheduling overhead per reduce stage
+    # AQE splits genuinely large partitions (skew join) and coalesces
+    # small ones, cached frames included (conf below), so a generous
+    # initial count costs little per reduce stage
     shuffle_partitions = shuffle_partitions or max(cpus, 32)
 
     builder = (
@@ -72,6 +72,12 @@ def get_spark(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        # Spark keeps a cached plan's output partitioning by default, so
+        # AQE may not coalesce a cache built after a shuffle: it keeps
+        # all shuffle_partitions partitions, and every later scan of it
+        # (the PPJoin ordered-docs cache, the connected-components edge
+        # cache) runs that many near-empty tasks. Let AQE coalesce them.
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "32g"))

@@ -409,3 +409,20 @@ def test_gopher_repetition_fence_keeps_filter_boolean(spark):
     assert any("codegen" in l for l in filt_headers), (
         f"Filter fell out of whole-stage codegen: {filt_headers}"
     )
+
+
+def test_cached_shuffle_output_is_coalesced(spark):
+    """A frame cached after a shuffle must let AQE coalesce its
+    partitions: otherwise every later scan of the cache (the PPJoin
+    ordered-docs cache, the connected-components edge cache) runs
+    spark.sql.shuffle.partitions near-empty tasks. Spark keeps a cached
+    plan's partitioning unless get_spark turns
+    canChangeCachedPlanOutputPartitioning on."""
+    df = spark.range(100).groupBy((F.col("id") % 5).alias("k")).count().cache()
+    try:
+        assert df.count() == 5
+        n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions"))
+        assert n_shuffle > 1
+        assert df.rdd.getNumPartitions() < n_shuffle
+    finally:
+        df.unpersist()

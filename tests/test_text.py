@@ -1,5 +1,6 @@
 """Text functions (tokenize/lang-id/quality/fingerprint/shingles)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from cs533_big_data_data_mining_spark.functions.text import (
@@ -10,6 +11,7 @@ from cs533_big_data_data_mining_spark.functions.text import (
     quality_score,
     token_count,
     tokenize,
+    word_ngrams,
     word_shingles,
 )
 
@@ -24,13 +26,44 @@ def test_tokenize_edges(spark):
     assert _one(spark, "one", token_count("text")) == 1
 
 
+def _py_ngrams(text, n):
+    """Python twin of word_ngrams: whitespace tokens, all n-grams in order."""
+    toks = (text or "").split()
+    return [" ".join(toks[i : i + n]) for i in range(len(toks) - n + 1)]
+
+
+def _py_shingles(text, n):
+    """Python twin of word_shingles: the n-grams, first occurrence kept."""
+    return list(dict.fromkeys(_py_ngrams(text, n)))
+
+
+_GRAM_TEXTS = [
+    # NULL, empty, blank, tabs and runs of spaces
+    None, "", "   ", "\t \t", "  a\t\tb   c  d\t",
+    # fewer than, exactly and more than n tokens for n in 1..3
+    "a", "one", "a b", "a b c", "a b c d",
+    # repeated grams
+    "x y x y x y", "to be or not to be", "a a a a",
+]
+
+
 def test_word_shingles(spark):
-    got = _one(spark, "a b c d", word_shingles("text", 2))
-    assert got == ["a b", "b c", "c d"]
-    # shorter than n -> empty
-    assert _one(spark, "a", word_shingles("text", 3)) == []
-    # distinct
-    assert _one(spark, "x y x y x y", word_shingles("text", 2)) == ["x y", "y x"]
+    # word_ngrams keeps repeated grams, word_shingles drops them
+    df = spark.createDataFrame(list(enumerate(_GRAM_TEXTS)), "id int, text string")
+    for fn, twin in ((word_ngrams, _py_ngrams), (word_shingles, _py_shingles)):
+        rows = df.select("id", *[fn("text", n).alias(f"g{n}") for n in (1, 2, 3)]).collect()
+        for r in rows:
+            for n in (1, 2, 3):
+                text = _GRAM_TEXTS[r["id"]]
+                assert r[f"g{n}"] == twin(text, n), (fn.__name__, text, n)
+
+
+@pytest.mark.parametrize("fn", [word_ngrams, word_shingles])
+def test_word_grams_tokenize_once(spark, fn):
+    # the gram builder reads the token array by reference: the analyzed
+    # plan holds ONE split of the text, not one per gram
+    df = spark.createDataFrame([("a b c d",)], "text string").select(fn("text", 3).alias("g"))
+    assert df._jdf.queryExecution().analyzed().toString().count("split(") == 1
 
 
 def test_char_shingles(spark):
