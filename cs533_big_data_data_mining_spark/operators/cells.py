@@ -224,217 +224,85 @@ def assign_cells(points: DataFrame, spec: GridSpec) -> DataFrame:
     return points.withColumn("cell", cell)
 
 
-def ghost_expand(points: DataFrame, spec: GridSpec) -> DataFrame:
+def ghost_expand(points: DataFrame, spec: GridSpec, reach: int = 1) -> DataFrame:
     """Explode each point into its home cell plus every adjacent cell
-    whose slab it eps-touches (op 6). Output columns:
-    ``cell, id, xs, is_home``.
+    whose slab it ``reach*eps``-touches (op 6). Output columns:
+    ``cell, id, xs, is_home`` — plus ``is_near`` at ``reach=2``.
 
-    A neighbor at Euclidean distance <= eps differs by <= eps along
-    every grid axis (cell side >= eps), so home+ghost rows of a cell
-    contain ALL eps-neighbors of that cell's home points — the same
-    closure property the reference's halo exchange guarantees
-    (``geometric_partitioning.cpp:46-51`` extends each box by eps).
+    ``reach=1``: a neighbor at Euclidean distance <= eps differs by
+    <= eps along every grid axis (cell side >= eps), so home+ghost
+    rows of a cell contain ALL eps-neighbors of that cell's home
+    points — the same closure property the reference's halo exchange
+    guarantees (``geometric_partitioning.cpp:46-51`` extends each box
+    by eps).
+
+    ``reach=2`` is the closure of the fused DBSCAN local phase
+    (``neighbors.fused_local_phase``). ``is_near`` marks the rows
+    that eps-touch the cell (exactly the ``reach=1`` rows); a near
+    row's OWN eps-neighborhood lies within 2*eps of the cell slab, so
+    its neighbor count — hence its coreness — is decidable inside the
+    cell. Every cell side must exceed 2*eps so +-1 offsets still cover
+    the closure (raised otherwise).
     """
-    if not spec.dims:
-        return points.select(F.lit(0).cast("long").alias("cell"), "id", "xs", F.lit(True).alias("is_home"))
-
-    strides = spec.strides
-    idx = _cell_index_cols(spec)
-    k = len(spec.dims)
-
-    # Two-step shape, sized by the OUTPUT not the offset table:
-    # (1) per-axis boundary flags (does this point eps-touch its
-    # cell's lower/upper slab?) are evaluated ONCE per point — n*k
-    # float comparisons; (2) the constant 3^k offset table is
-    # filtered per row by those boolean flags INSIDE the array
-    # (higher-order filter), so the explode emits only the surviving
-    # ~2x rows instead of materializing n*3^k offset rows and
-    # filtering after. The per-dbscan expression tree stays O(k)
-    # (round-1 finding: 3^k conditional struct builders made Catalyst
-    # re-analysis the bottleneck), and the probe/kernel explodes —
-    # which run this twice per dbscan() — stop paying 27x row
-    # machinery for a 1.3-2x survivor set (round-6 verdict #5: the
-    # clus50k probe was explode-bound, 1.35M transient rows for 98k
-    # kept).
-    flag_cols = []
-    for i, ix in enumerate(idx):
-        flag_cols.append(ix.alias(f"_c{i}"))
-    pts = points.select("id", "xs", *flag_cols)
-    touch_cols = []
-    for i in range(k):
-        xj = F.col("xs")[spec.dims[i]]
-        low = F.lit(spec.origin[i]) + F.col(f"_c{i}") * F.lit(spec.width[i])
-        touch_cols.append(
-            ((F.col(f"_c{i}") > 0) & ((xj - low) <= F.lit(spec.eps))).alias(f"_lo{i}")
-        )
-        touch_cols.append(
-            (
-                (F.col(f"_c{i}") < F.lit(spec.ncells[i] - 1))
-                & ((low + F.lit(spec.width[i]) - xj) <= F.lit(spec.eps))
-            ).alias(f"_hi{i}")
-        )
-    pts = pts.select("id", "xs", *[F.col(f"_c{i}") for i in range(k)], *touch_cols)
-
-    offsets = F.array(*[F.array(*[F.lit(d) for d in delta]) for delta in product((-1, 0, 1), repeat=k)])
-
-    if k <= 3:
-        # Small-k shape: 3^k <= 27 is a cheap explode, and the plain
-        # boolean filter over the precomputed flags beats the
-        # higher-order array filter/transform (lambda evaluation per
-        # row costs more than the 9-27x transient rows it avoids —
-        # measured on part64 2-D: probe 0.8 -> 0.3 s isolated).
-        ex = pts.withColumn("_d", F.explode(offsets))
-        cell = F.lit(0).cast("long")
-        cond = F.lit(True)
-        is_home = F.lit(True)
-        for i in range(k):
-            di = F.col("_d")[i]
-            cell = cell + (F.col(f"_c{i}") + di) * F.lit(strides[i])
-            cond = cond & (
-                (di == 0) | ((di == -1) & F.col(f"_lo{i}")) | ((di == 1) & F.col(f"_hi{i}"))
-            )
-            is_home = is_home & (di == 0)
-        return ex.filter(cond).select(cell.alias("cell"), "id", "xs", is_home.alias("is_home"))
-
-    def _keep(d):
-        c = F.lit(True)
-        for i in range(k):
-            di = d[i]
-            c = c & (
-                (di == 0) | ((di == -1) & F.col(f"_lo{i}")) | ((di == 1) & F.col(f"_hi{i}"))
-            )
-        return c
-
-    def _mk(d):
-        cell = F.lit(0).cast("long")
-        home = F.lit(True)
-        for i in range(k):
-            cell = cell + (F.col(f"_c{i}") + d[i]) * F.lit(strides[i])
-            home = home & (d[i] == 0)
-        return F.struct(cell.alias("cell"), home.alias("is_home"))
-
-    ex = pts.select(
-        "id", "xs", F.explode(F.transform(F.filter(offsets, _keep), _mk)).alias("_ch")
-    )
-    return ex.select(F.col("_ch.cell").alias("cell"), "id", "xs", F.col("_ch.is_home").alias("is_home"))
-
-
-def ghost_expand_2eps(points: DataFrame, spec: GridSpec) -> DataFrame:
-    """Ghost expansion with a **2-eps closure** for the fused DBSCAN
-    local phase. Output columns ``cell, id, xs, is_home, is_near``.
-
-    Each point visits its home cell plus every adjacent cell whose
-    slab it 2*eps-touches (requires every cell side >= 2*eps so +-1
-    offsets still cover the closure — raised otherwise). ``is_near``
-    marks the rows that eps-touch the cell (the classic ghost set,
-    home rows included).
-
-    Why 2*eps: a near row's OWN eps-neighborhood lies within 2*eps of
-    the cell slab, so its neighbor count — hence its coreness — is
-    locally decidable inside the cell. That lets counts + core
-    predicate + local union + border detection run in ONE
-    ``applyInPandas`` pass (``neighbors.fused_local_phase``) instead
-    of two kernel passes joined through an ``is_core`` shuffle: the
-    duplication grows from ~(1+2/wf)^k to ~(1+4/wf)^k rows shipped
-    ONCE, versus ~2x(1+2/wf)^k shipped twice plus a join — same bytes,
-    half the task/Arrow overhead (SCALE.md round-10 kernel profile:
-    ~90% of the part64 local phase was structural overhead, not math).
-    """
+    if reach not in (1, 2):
+        raise ValueError(f"reach must be 1 or 2, got {reach}")
+    near = reach == 2
     if not spec.dims:
         return points.select(
             F.lit(0).cast("long").alias("cell"),
             "id",
             "xs",
             F.lit(True).alias("is_home"),
-            F.lit(True).alias("is_near"),
+            *([F.lit(True).alias("is_near")] if near else []),
         )
-    r2 = 2.0 * spec.eps
     # STRICTLY greater: at width == 2*eps a point at per-axis distance
     # exactly 2*eps homes two cells away, beyond the +-1 offsets, and
     # the <=-inclusive boundary semantics make that row load-bearing
     # (an exactly-eps neighbor of an exactly-eps ghost)
-    bad = [w for w in spec.width if w <= r2]
-    if bad:
+    if near and any(w <= 2.0 * spec.eps for w in spec.width):
         raise ValueError(
-            f"ghost_expand_2eps needs every cell side > 2*eps={r2}; got widths {spec.width}"
+            f"ghost_expand(reach=2) needs every cell side > 2*eps={2.0 * spec.eps}; "
+            f"got widths {spec.width}"
         )
 
     strides = spec.strides
-    idx = _cell_index_cols(spec)
     k = len(spec.dims)
-
-    # same two-step shape as ghost_expand: per-axis boundary flags
-    # once per point, then the 3^k offset explode filtered by them.
-    # Two flag radii per boundary: 2*eps (inclusion) and eps (is_near).
-    pts = points.select("id", "xs", *[ix.alias(f"_c{i}") for i, ix in enumerate(idx)])
+    # per-axis boundary flags (does this point touch its cell's
+    # lower/upper slab?) are evaluated ONCE per point — n*k float
+    # comparisons — and the constant 3^k offset explode is filtered by
+    # them. The expression tree stays O(k) (3^k conditional struct
+    # builders made Catalyst re-analysis the bottleneck). Flag radii:
+    # reach*eps for inclusion, plus eps for is_near at reach=2.
+    radii = {"": reach * spec.eps}
+    if near:
+        radii["n"] = spec.eps
+    pts = points.select("id", "xs", *[ix.alias(f"_c{i}") for i, ix in enumerate(_cell_index_cols(spec))])
     touch_cols = []
     for i in range(k):
         xj = F.col("xs")[spec.dims[i]]
         low = F.lit(spec.origin[i]) + F.col(f"_c{i}") * F.lit(spec.width[i])
-        d_lo = xj - low
-        d_hi = low + F.lit(spec.width[i]) - xj
-        has_lo = F.col(f"_c{i}") > 0
-        has_hi = F.col(f"_c{i}") < F.lit(spec.ncells[i] - 1)
-        touch_cols += [
-            (has_lo & (d_lo <= F.lit(r2))).alias(f"_lo{i}"),
-            (has_hi & (d_hi <= F.lit(r2))).alias(f"_hi{i}"),
-            (has_lo & (d_lo <= F.lit(spec.eps))).alias(f"_lon{i}"),
-            (has_hi & (d_hi <= F.lit(spec.eps))).alias(f"_hin{i}"),
-        ]
+        for sfx, r in radii.items():
+            touch_cols += [
+                ((F.col(f"_c{i}") > 0) & ((xj - low) <= F.lit(r))).alias(f"_lo{sfx}{i}"),
+                (
+                    (F.col(f"_c{i}") < F.lit(spec.ncells[i] - 1))
+                    & ((low + F.lit(spec.width[i]) - xj) <= F.lit(r))
+                ).alias(f"_hi{sfx}{i}"),
+            ]
     pts = pts.select("id", "xs", *[F.col(f"_c{i}") for i in range(k)], *touch_cols)
 
+    def touches(i, di, sfx):
+        return (di == 0) | ((di == -1) & F.col(f"_lo{sfx}{i}")) | ((di == 1) & F.col(f"_hi{sfx}{i}"))
+
     offsets = F.array(*[F.array(*[F.lit(d) for d in delta]) for delta in product((-1, 0, 1), repeat=k)])
-
-    if k <= 3:
-        ex = pts.withColumn("_d", F.explode(offsets))
-        cell = F.lit(0).cast("long")
-        cond = F.lit(True)
-        is_home = F.lit(True)
-        is_near = F.lit(True)
-        for i in range(k):
-            di = F.col("_d")[i]
-            cell = cell + (F.col(f"_c{i}") + di) * F.lit(strides[i])
-            cond = cond & (
-                (di == 0) | ((di == -1) & F.col(f"_lo{i}")) | ((di == 1) & F.col(f"_hi{i}"))
-            )
-            is_home = is_home & (di == 0)
-            is_near = is_near & (
-                (di == 0) | ((di == -1) & F.col(f"_lon{i}")) | ((di == 1) & F.col(f"_hin{i}"))
-            )
-        return ex.filter(cond).select(
-            cell.alias("cell"), "id", "xs", is_home.alias("is_home"), is_near.alias("is_near")
-        )
-
-    def _keep2(d):
-        c = F.lit(True)
-        for i in range(k):
-            di = d[i]
-            c = c & (
-                (di == 0) | ((di == -1) & F.col(f"_lo{i}")) | ((di == 1) & F.col(f"_hi{i}"))
-            )
-        return c
-
-    def _mk2(d):
-        cell = F.lit(0).cast("long")
-        home = F.lit(True)
-        near = F.lit(True)
-        for i in range(k):
-            cell = cell + (F.col(f"_c{i}") + d[i]) * F.lit(strides[i])
-            home = home & (d[i] == 0)
-            near = near & (
-                (d[i] == 0)
-                | ((d[i] == -1) & F.col(f"_lon{i}"))
-                | ((d[i] == 1) & F.col(f"_hin{i}"))
-            )
-        return F.struct(cell.alias("cell"), home.alias("is_home"), near.alias("is_near"))
-
-    ex = pts.select(
-        "id", "xs", F.explode(F.transform(F.filter(offsets, _keep2), _mk2)).alias("_ch")
-    )
-    return ex.select(
-        F.col("_ch.cell").alias("cell"),
-        "id",
-        "xs",
-        F.col("_ch.is_home").alias("is_home"),
-        F.col("_ch.is_near").alias("is_near"),
-    )
+    ex = pts.withColumn("_d", F.explode(offsets))
+    cell = F.lit(0).cast("long")
+    cond = is_home = is_near = F.lit(True)
+    for i in range(k):
+        di = F.col("_d")[i]
+        cell = cell + (F.col(f"_c{i}") + di) * F.lit(strides[i])
+        cond = cond & touches(i, di, "")
+        is_home = is_home & (di == 0)
+        is_near = is_near & touches(i, di, "n")
+    out = [cell.alias("cell"), "id", "xs", is_home.alias("is_home")]
+    return ex.filter(cond).select(*out, *([is_near.alias("is_near")] if near else []))

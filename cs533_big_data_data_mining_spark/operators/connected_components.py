@@ -58,23 +58,39 @@ def _small_star(edges: DataFrame) -> DataFrame:
     return out.filter(F.col("src") != F.col("dst")).distinct()
 
 
-def _driver_union(e: DataFrame) -> DataFrame:
-    """Finish a small edge set locally: min-label pointer doubling on
-    NumPy arrays — same labels as the distributed path (component =
-    min node id), just without per-round job latency."""
-    pdf = e.toPandas()
-    src = pdf["src"].to_numpy(dtype=np.int64)
-    dst = pdf["dst"].to_numpy(dtype=np.int64)
-    nodes, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
-    u, v = inv[: len(src)], inv[len(src) :]
-    lab = np.arange(len(nodes), dtype=np.int64)
+def min_label_union(u: np.ndarray, v: np.ndarray, n: int) -> np.ndarray:
+    """Min-label components of the graph on nodes ``0..n-1`` with edges
+    ``(u[i], v[i])``: ``lab[i]`` = the smallest node reachable from i.
+
+    The engine's one union-find, serving the DBSCAN local phase and
+    the driver-side merge alike — the role of the reference's REMS
+    union with splicing (``dbscan.cpp:753-791``). Each round pulls the smaller
+    label across every edge with ``np.minimum.at`` (O(E)), then pointer
+    doubling (``lab = lab[lab]``) halves the label chains, so a
+    component converges in O(log n) rounds. Duplicate edges and self
+    loops are idempotent min-updates.
+    """
+    lab = np.arange(n, dtype=np.int64)
+    if u.size == 0:
+        return lab
     while True:
         before = lab.copy()
         np.minimum.at(lab, u, lab[v])
         np.minimum.at(lab, v, lab[u])
         lab = lab[lab]
         if np.array_equal(lab, before):
-            break
+            return lab
+
+
+def _driver_union(e: DataFrame) -> DataFrame:
+    """Finish a small edge set locally with ``min_label_union`` — same
+    labels as the distributed path (component = min node id), just
+    without per-round job latency."""
+    pdf = e.toPandas()
+    src = pdf["src"].to_numpy(dtype=np.int64)
+    dst = pdf["dst"].to_numpy(dtype=np.int64)
+    nodes, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
+    lab = min_label_union(inv[: len(src)], inv[len(src) :], len(nodes))
     out = pd.DataFrame({"node": nodes, "component": nodes[lab]})
     # explicit schema: with zero edges the frame is empty and schema
     # inference would fail

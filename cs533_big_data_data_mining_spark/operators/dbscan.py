@@ -40,11 +40,13 @@ from cs533_big_data_data_mining_spark.operators.cells import (
     GridSpec,
     choose_grid,
     ghost_expand,
-    ghost_expand_2eps,
     grid_from_stats,
     grid_stats,
 )
-from cs533_big_data_data_mining_spark.operators.connected_components import connected_components
+from cs533_big_data_data_mining_spark.operators.connected_components import (
+    connected_components,
+    min_label_union,
+)
 from cs533_big_data_data_mining_spark.session import local_df
 from cs533_big_data_data_mining_spark.operators.neighbors import (
     cell_block_components_and_borders,
@@ -66,22 +68,6 @@ from cs533_big_data_data_mining_spark.operators.stats import cluster_stats, samp
 DRIVER_LABEL_FASTPATH_ROWS = 2_000_000
 
 
-def _np_min_label(src: np.ndarray, dst: np.ndarray):
-    """Min-label components over an edge list: ``(nodes, root_of_node)``
-    — same pointer-doubling loop as connected_components._driver_union."""
-    nodes, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
-    u, v = inv[: len(src)], inv[len(src) :]
-    lab = np.arange(len(nodes), dtype=np.int64)
-    while True:
-        before = lab.copy()
-        np.minimum.at(lab, u, lab[v])
-        np.minimum.at(lab, v, lab[u])
-        lab = lab[lab]
-        if np.array_equal(lab, before):
-            break
-    return nodes, nodes[lab]
-
-
 def _driver_labels(lb_pdf: pd.DataFrame) -> pd.DataFrame:
     """(id, cluster_id) for every non-noise point, computed locally.
 
@@ -89,38 +75,34 @@ def _driver_labels(lb_pdf: pd.DataFrame) -> pd.DataFrame:
     core id reachable through star edges (kind=0); border point = min
     root over its adjacent cores' roots (kind=1); dense ids 1..K by
     ascending root. Bit-identical to the distributed path because
-    every reduction is a min / sorted rank.
+    every reduction is a min / sorted rank. Id -> row lookups are
+    ``searchsorted`` over the sorted unique arrays.
     """
     kind = lb_pdf["kind"].to_numpy()
     a = lb_pdf["a"].to_numpy(dtype=np.int64)
     b = lb_pdf["b"].to_numpy(dtype=np.int64)
     k0 = kind == 0
-    cores, roots = _np_min_label(a[k0], b[k0])
+    src, dst = a[k0], b[k0]
+    cores, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
     if cores.size == 0:
         return pd.DataFrame({"id": pd.Series(dtype="int64"), "cluster_id": pd.Series(dtype="int32")})
-
-    uniq_roots = np.unique(roots)  # sorted ascending
-    dense = {int(r): i + 1 for i, r in enumerate(uniq_roots)}
-    core_cluster = np.array([dense[int(r)] for r in roots], dtype=np.int32)
-
-    k1 = kind == 1
+    roots = cores[min_label_union(inv[: src.size], inv[src.size :], cores.size)]
+    uniq_roots = np.unique(roots)  # sorted ascending -> dense id = rank + 1
     out_id = [cores]
-    out_cl = [core_cluster]
+    out_root = [roots]
+    k1 = kind == 1
     if k1.any():
-        ba, bb = a[k1], b[k1]
-        # border root = min over adjacent cores' global roots
-        root_of = dict(zip(cores.tolist(), roots.tolist()))
-        broot = np.array([root_of[int(x)] for x in bb], dtype=np.int64)
+        ba = a[k1]
+        # border root = min over adjacent cores' global roots (every
+        # kind=1 b is a core id, hence present in ``cores``)
+        broot = roots[np.searchsorted(cores, b[k1])]
         order = np.lexsort((broot, ba))
         ba_s, br_s = ba[order], broot[order]
-        first = np.concatenate(([True], ba_s[1:] != ba_s[:-1]))
-        bids = ba_s[first]
-        bmin = np.minimum.reduceat(br_s, np.flatnonzero(first))
-        out_id.append(bids)
-        out_cl.append(np.array([dense[int(r)] for r in bmin], dtype=np.int32))
-    return pd.DataFrame(
-        {"id": np.concatenate(out_id), "cluster_id": np.concatenate(out_cl).astype(np.int32)}
-    )
+        first = np.flatnonzero(np.concatenate(([True], ba_s[1:] != ba_s[:-1])))
+        out_id.append(ba_s[first])
+        out_root.append(np.minimum.reduceat(br_s, first))
+    cluster = np.searchsorted(uniq_roots, np.concatenate(out_root)) + 1
+    return pd.DataFrame({"id": np.concatenate(out_id), "cluster_id": cluster.astype(np.int32)})
 
 
 class DenseIndexInvariantError(AssertionError):
@@ -256,7 +238,6 @@ def dbscan(
     block_fallback_rows: int = 8192,
     driver_label_rows: int = DRIVER_LABEL_FASTPATH_ROWS,
     stage_times: dict | None = None,
-    fused: bool | None = None,
 ) -> DataFrame:
     """Cluster a canonical point frame ``(id, xs)``.
 
@@ -309,53 +290,23 @@ def dbscan(
         )
     t["grid"] = round(time.time() - t0, 3)
 
-    # Fused skew/degeneracy probe (replaces round 1's separate
-    # points.count() + max-cell probe + whole-job block flip): one
-    # aggregation yields every oversized cell and its size. Skipped
-    # entirely when no cell CAN be oversized (a cell holds each point
-    # at most once, so cell population <= n_rows).
-    #
-    # The probe's measured cost (round-6 verdict #5, clus50k 50k x
-    # 10-D): executing the count is ~0.19 s with a reused plan; the
-    # in-pipeline stage reads ~0.45-0.55 s because each dbscan() call
-    # builds a fresh DataFrame — Catalyst analysis + codegen-cache
-    # lookup + two-stage scheduling is a ~0.3 s per-query session
-    # floor that every stage here pays once, not probe-specific work.
-    # The explode itself filters the 3^k offset table per-row BEFORE
-    # exploding (cells.ghost_expand), so the probe never materializes
-    # n*3^k transient rows. On small inputs (<= block_fallback_rows)
-    # the probe is skipped entirely — no cell can be oversized.
-    # Fused local phase (round-11, VERDICT r10 #1): with every cell
-    # side >= 2*eps — true for any grid_from_stats grid, since cell
-    # sides are >= width_factor*eps and width_factor >= 2 there — the
-    # 2*eps ghost closure makes coreness locally decidable for every
-    # near row, so counts + core predicate + union + borders run in
-    # ONE applyInPandas pass and the is_core join disappears. An
-    # externally-supplied spec with thinner cells falls back to the
-    # two-pass path (identical semantics, one extra kernel ship).
-    # ``fused=None`` auto-selects; ``fused=False`` forces the two-pass
-    # path (A/B instrumentation + a guaranteed-available fallback);
-    # ``fused=True`` asserts the closure requirement holds.
-    #
-    # Auto rule (round-11 A/B, quiet box): fuse only on <=2 grid axes.
-    # The 2eps closure multiplies shipped+scanned rows by
-    # (1+4/wf)^k / (1+2/wf)^k vs the eps frame — 1.5x at k=1, 1.8x at
-    # k=2, 2.4x at k=3 (wf=4) — while it saves one fixed Arrow/task
-    # round plus the is_core join. Measured: part64 (k=2, 64k)
-    # local+merge 0.64-0.76 s fused vs 1.18-1.27 two-pass; clus50k
-    # (k=3, dense) 3.6 vs 2.5 AGAINST; 3M uniform k=3 local stage 87 s
-    # vs 14 s against. The overhead saving is a constant; the extra
-    # kernel work scales with data — so the duplication ratio, i.e.
-    # the axis count, is the gate.
-    fused_ok = (not spec.dims) or all(w > 2.0 * spec.eps for w in spec.width)
-    if fused is True and not fused_ok:
-        raise ValueError(
-            f"fused=True needs every cell side > 2*eps={2.0 * spec.eps}; widths {spec.width}"
-        )
-    fused = (fused_ok and len(spec.dims) <= 2) if fused is None else bool(fused)
+    # Local-phase route. Fused (one applyInPandas pass: counts, core
+    # predicate, local union and borders) needs the 2*eps ghost
+    # closure, so every cell side must exceed 2*eps. It pays only on
+    # <= 2 grid axes: the 2*eps frame ships (1+4/wf)^k / (1+2/wf)^k
+    # times the rows of the eps frame (1.5x at k=1, 1.8x at k=2, 2.4x
+    # at k=3 for wf=4), and that kernel work grows with the data while
+    # the pass and is_core join it saves are a fixed cost. Measured:
+    # part64 (k=2) local+merge 0.64-0.76 s fused vs 1.18-1.27 s
+    # two-pass; clus50k (k=3) 3.6 s vs 2.5 s and the 3M uniform k=3
+    # local stage 87 s vs 14 s against fusing.
+    fused = len(spec.dims) <= 2 and all(w > 2.0 * spec.eps for w in spec.width)
 
     t0 = time.time()
-    celled = ghost_expand_2eps(points, spec) if fused else ghost_expand(points, spec)
+    celled = ghost_expand(points, spec, reach=2 if fused else 1)
+    # Skew probe: one aggregation yields every oversized cell and its
+    # size. Skipped when no cell CAN be oversized (a cell holds each
+    # point at most once, so cell population <= n_rows).
     if n_rows > block_fallback_rows:
         # cache BEFORE the probe: the probe aggregation materializes
         # the ghost-expanded frame while it counts, so the kernel
@@ -381,70 +332,44 @@ def dbscan(
     is_big = F.col("cell").isin(list(big_sizes)) if big_sizes else F.lit(False)
     tmp_caches: list[DataFrame] = []
     mp_lit = F.lit(int(min_pts))
+    small = celled.filter(~is_big) if big_sizes else celled
 
+    # small cells: the fused kernel (its kind=2 rows are the counts) or
+    # the count pass of the two-pass route
     if fused:
-        # one kernel pass over the small cells; oversized cells keep
-        # the two-pass block-pair route (their counts must complete
-        # across block pairs before coreness is known), fed by the
-        # near rows only — exactly the classic eps ghost set
-        lb_small = fused_local_phase(celled.filter(~is_big), spec.eps, min_pts)
-        flags = None
-        if big_sizes:
-            lb_small = lb_small.cache()
-            tmp_caches.append(lb_small)
-            big_near = celled.filter(is_big & F.col("is_near")).select(
-                "cell", "id", "xs", "is_home"
-            )
-            counts_big = cell_block_neighbor_counts(big_near, big_sizes, eps).cache()
-            tmp_caches.append(counts_big)
-            # core flags for the big-cell union pass must cover ghost
-            # rows homed anywhere: small-cell homes come from the
-            # fused kind=2 counts, big-cell homes from the block pass
-            flags = (
-                lb_small.filter(F.col("kind") == 2)
-                .select(F.col("a").alias("id"), (F.col("b") >= mp_lit).alias("is_core"))
-                .unionByName(
-                    counts_big.select("id", (F.col("n_neighbors") >= mp_lit).alias("is_core"))
-                )
-            )
-            big_flagged = big_near.join(flags, "id")
-            lb = (
-                lb_small.unionByName(
-                    counts_big.select(
-                        F.lit(2).cast("int").alias("kind"),
-                        F.col("id").alias("a"),
-                        F.col("n_neighbors").alias("b"),
-                    )
-                )
-                .unionByName(
-                    cell_block_components_and_borders(big_flagged, big_sizes, spec.eps)
-                )
-            )
-        else:
-            lb = lb_small
+        lb = fused_local_phase(small, spec.eps, min_pts)
+        if big_sizes:  # feeds both lb and the big cells' core flags
+            lb = lb.cache()
+            tmp_caches.append(lb)
+        counts = lb.filter(F.col("kind") == 2).select(
+            F.col("a").alias("id"), F.col("b").alias("n_neighbors")
+        )
+        # oversized cells need their counts complete across block pairs
+        # before coreness is known: they take the block-pair route on
+        # the near rows only — exactly the classic eps ghost set
+        big = celled.filter(is_big & F.col("is_near")).drop("is_near")
     else:
-        if big_sizes:
-            counts = neighbor_counts(celled.filter(~is_big), eps).unionByName(
-                cell_block_neighbor_counts(celled.filter(is_big), big_sizes, eps)
-            )
-        else:
-            counts = neighbor_counts(celled, eps)
-        # cached on the distributed path only: there the flags feed the
-        # join AND core_roots; on the fastpath they have one consumer
-        flags = counts.select("id", (F.col("n_neighbors") >= mp_lit).alias("is_core"))
-        if not fastpath:
-            flags = flags.cache()
+        counts = neighbor_counts(small, eps)
+        big = celled.filter(is_big)
 
-        # carry core flags back onto the ghost-expanded frame (AQE picks
-        # broadcast vs shuffle; flags is one boolean per point)
-        celled_flagged = celled.join(flags, "id")
-
-        if big_sizes:
-            lb = local_components_and_borders(celled_flagged.filter(~is_big), spec.eps).unionByName(
-                cell_block_components_and_borders(celled_flagged.filter(is_big), big_sizes, spec.eps)
-            )
-        else:
-            lb = local_components_and_borders(celled_flagged, spec.eps)
+    # oversized cells, either route: block-pair counts -> core flags ->
+    # block-pair components
+    if big_sizes:
+        counts = counts.unionByName(cell_block_neighbor_counts(big, big_sizes, eps))
+    flags = counts.select("id", (F.col("n_neighbors") >= mp_lit).alias("is_core"))
+    # cached when the flags feed both a join inside lb AND core_roots
+    # (distributed labels); the fused route without oversized cells
+    # reads its flags back from the cached lb instead
+    if not fastpath and (big_sizes or not fused):
+        flags = flags.cache()
+    if not fused:
+        # carry core flags back onto the ghost-expanded frame (AQE
+        # picks broadcast vs shuffle; flags is one boolean per point)
+        lb = local_components_and_borders(small.join(flags, "id"), spec.eps)
+    if big_sizes:
+        lb = lb.unionByName(
+            cell_block_components_and_borders(big.join(flags, "id"), big_sizes, spec.eps)
+        )
 
     if fastpath:
         # Driver label fastpath: ONE collect of the cell-contracted
@@ -455,10 +380,9 @@ def dbscan(
         # the kind-count collect, the CC job, the dense-id window and
         # two label joins with collect + join — for small inputs those
         # were pure driver-synchronization latency (round-2 verdict
-        # "what's wrong" #1).
-        # the fused path's kind=2 count rows are only needed to derive
-        # big-cell core flags — drop them before the collect (filter is
-        # evaluated kernel-side, so only edges/borders ship)
+        # "what's wrong" #1). The fused kernel's kind=2 count rows only
+        # feed core flags — drop them before the collect (the filter is
+        # evaluated kernel-side, so only edges/borders ship).
         lb_pdf = lb.filter(F.col("kind") != 2).toPandas()
         celled.unpersist()
         for frame in tmp_caches:
@@ -493,13 +417,6 @@ def dbscan(
     celled.unpersist()
     for frame in tmp_caches:
         frame.unpersist()
-    if fused:
-        # re-derive core flags from the CACHED lb (kind=2 carries the
-        # exact neighbor counts), so the big-cell intermediates above
-        # can be released without re-running their kernels
-        flags = lb.filter(F.col("kind") == 2).select(
-            F.col("a").alias("id"), (F.col("b") >= mp_lit).alias("is_core")
-        )
     t["local"] = round(time.time() - t0, 3)
 
     t0 = time.time()

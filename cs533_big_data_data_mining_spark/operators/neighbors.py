@@ -41,11 +41,19 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
+from cs533_big_data_data_mining_spark.operators.connected_components import min_label_union
 from cs533_big_data_data_mining_spark.session import local_df
 
 _EMPTY = np.empty(0, dtype=np.int64)
+# (kind, a, b) rows of the DBSCAN local phase (see fused_local_phase)
+_KAB = "kind int, a long, b long"
+
+
+def _empty_kab() -> pd.DataFrame:
+    return pd.DataFrame(
+        {"kind": pd.Series(dtype="int32"), "a": pd.Series(dtype="int64"), "b": pd.Series(dtype="int64")}
+    )
 
 
 def _exact_d2_rows(a: np.ndarray, b: np.ndarray) -> np.ndarray:
@@ -167,29 +175,6 @@ def _eps_pairs_sweep(A: np.ndarray, B: np.ndarray, eps2: float, eps: float):
     return np.concatenate(out_a), np.concatenate(out_b)
 
 
-def _np_components(u: np.ndarray, v: np.ndarray, n: int) -> np.ndarray:
-    """Min-label components over local index pairs: ``lab[i]`` = the
-    smallest index reachable from i. Sort-based grouped-min rounds +
-    pointer halving — vectorized, no ufunc.at in the hot loop."""
-    lab = np.arange(n, dtype=np.int64)
-    if u.size == 0:
-        return lab
-    k = np.concatenate([u, v])
-    order = np.argsort(k, kind="stable")
-    ks = k[order]
-    starts = np.flatnonzero(np.concatenate(([True], ks[1:] != ks[:-1])))
-    keys = ks[starts]
-    while True:
-        before = lab
-        val = np.concatenate([lab[v], lab[u]])[order]
-        gmin = np.minimum.reduceat(val, starts)
-        lab = lab.copy()
-        lab[keys] = np.minimum(lab[keys], gmin)
-        lab = lab[lab]
-        if np.array_equal(lab, before):
-            return lab
-
-
 def _strip_ranges(sbs: np.ndarray, s: int, c0: int, c1_: int):
     """Sorted-row ranges of candidate strips s-1, s, s+1 within
     [c0, c1_). Each range is sorted by the sweep dimension."""
@@ -240,9 +225,6 @@ def neighbor_counts(celled: DataFrame, eps: float) -> DataFrame:
     profile as the reference (SURVEY §4).
     """
     eps2 = float(eps) * float(eps)
-    schema = T.StructType(
-        [T.StructField("id", T.LongType()), T.StructField("n_neighbors", T.LongType())]
-    )
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         x = _cell_matrix(pdf)
@@ -250,17 +232,17 @@ def neighbor_counts(celled: DataFrame, eps: float) -> DataFrame:
         counts = _eps_counts_sweep(x[home], x, eps2, float(eps))
         return pd.DataFrame({"id": pdf["id"].to_numpy()[home], "n_neighbors": counts})
 
-    return _by_cell(celled).applyInPandas(kernel, schema=schema)
+    return _by_cell(celled).applyInPandas(kernel, schema="id long, n_neighbors long")
 
 
 def fused_local_phase(celled2: DataFrame, eps: float, min_pts: int) -> DataFrame:
     """The ENTIRE per-cell DBSCAN local phase in ONE ``applyInPandas``
     pass — counts, core predicate, local union, border candidates —
-    enabled by the 2*eps ghost closure (``cells.ghost_expand_2eps``):
+    enabled by the 2*eps ghost closure (``cells.ghost_expand(reach=2)``):
     every row that eps-touches the cell ("near": home + classic
     ghosts) has its full eps-neighborhood present, so its coreness is
     locally decidable and no ``is_core`` join or second kernel pass is
-    needed. Replaces ``neighbor_counts`` + flags-join +
+    needed. Does the work of ``neighbor_counts`` + flags-join +
     ``local_components_and_borders`` (which shipped the ghost frame
     through Arrow twice; SCALE.md round-10 profile: ~90% of the part64
     local phase was that structural overhead).
@@ -286,22 +268,6 @@ def fused_local_phase(celled2: DataFrame, eps: float, min_pts: int) -> DataFrame
     """
     eps2 = float(eps) * float(eps)
     mp = int(min_pts)
-    schema = T.StructType(
-        [
-            T.StructField("kind", T.IntegerType()),
-            T.StructField("a", T.LongType()),
-            T.StructField("b", T.LongType()),
-        ]
-    )
-
-    def _empty() -> pd.DataFrame:
-        return pd.DataFrame(
-            {
-                "kind": pd.Series(dtype="int32"),
-                "a": pd.Series(dtype="int64"),
-                "b": pd.Series(dtype="int64"),
-            }
-        )
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         x = _cell_matrix(pdf)
@@ -312,7 +278,7 @@ def fused_local_phase(celled2: DataFrame, eps: float, min_pts: int) -> DataFrame
         qidx = np.flatnonzero(near)
         nq = qidx.size
         if nq == 0:
-            return _empty()
+            return _empty_kab()
         # ONE pairs pass: near rows (queries) x all rows (candidates,
         # incl. the 2eps-only shell that completes near neighborhoods)
         ai, bi = _eps_pairs_sweep(x[qidx], x, eps2, float(eps))
@@ -337,16 +303,7 @@ def fused_local_phase(celled2: DataFrame, eps: float, min_pts: int) -> DataFrame
         # core component, exactly local_components_and_borders's roots.
         u, v = ai[core_hit], bq[core_hit]
         keep = u < v
-        u, v = u[keep], v[keep]
-        labels = np.arange(nq, dtype=np.int64)
-        if u.size:
-            while True:
-                before = labels.copy()
-                np.minimum.at(labels, u, labels[v])
-                np.minimum.at(labels, v, labels[u])
-                labels = labels[labels]  # pointer jump
-                if np.array_equal(labels, before):
-                    break
+        labels = min_label_union(u[keep], v[keep], nq)
         minid = np.full(nq, np.iinfo(np.int64).max)
         np.minimum.at(minid, labels, qids)
         root_ids = minid[labels]
@@ -369,7 +326,7 @@ def fused_local_phase(celled2: DataFrame, eps: float, min_pts: int) -> DataFrame
         out["kind"] = out["kind"].astype("int32")
         return out
 
-    return _by_cell(celled2).applyInPandas(kernel, schema=schema)
+    return _by_cell(celled2).applyInPandas(kernel, schema=_KAB)
 
 
 def epsilon_self_join(celled: DataFrame, eps: float) -> DataFrame:
@@ -382,7 +339,6 @@ def epsilon_self_join(celled: DataFrame, eps: float) -> DataFrame:
     so each ordered pair appears exactly once globally.
     """
     eps2 = float(eps) * float(eps)
-    schema = T.StructType([T.StructField("a", T.LongType()), T.StructField("b", T.LongType())])
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         x = _cell_matrix(pdf)
@@ -392,7 +348,7 @@ def epsilon_self_join(celled: DataFrame, eps: float) -> DataFrame:
         ai, bi = _eps_pairs_sweep(hx, x, eps2, float(eps))
         return pd.DataFrame({"a": hid[ai], "b": ids[bi]})
 
-    return _by_cell(celled).applyInPandas(kernel, schema=schema)
+    return _by_cell(celled).applyInPandas(kernel, schema="a long, b long")
 
 
 def epsilon_join_two(l_celled: DataFrame, r_celled: DataFrame, eps: float) -> DataFrame:
@@ -410,7 +366,6 @@ def epsilon_join_two(l_celled: DataFrame, r_celled: DataFrame, eps: float) -> Da
     the per-cell kernel is the same strip-sweep used everywhere else.
     """
     eps2 = float(eps) * float(eps)
-    schema = T.StructType([T.StructField("a", T.LongType()), T.StructField("b", T.LongType())])
 
     u = l_celled.select("cell", "id", "xs", F.lit(0).alias("side")).unionByName(
         r_celled.select("cell", "id", "xs", F.lit(1).alias("side"))
@@ -427,7 +382,7 @@ def epsilon_join_two(l_celled: DataFrame, r_celled: DataFrame, eps: float) -> Da
         ai, bi = _eps_pairs_sweep(A, B, eps2, float(eps))
         return pd.DataFrame({"a": ids[lmask][ai], "b": ids[~lmask][bi]})
 
-    return _by_cell(u).applyInPandas(kernel, schema=schema)
+    return _by_cell(u).applyInPandas(kernel, schema="a long, b long")
 
 
 def cell_block_epsilon_join_two(
@@ -448,50 +403,21 @@ def cell_block_epsilon_join_two(
     one block pair (id -> block is a function per side), so no dedup
     is needed."""
     eps2 = float(eps) * float(eps)
-    spark = l_big.sparkSession
-    cells = sorted(set(l_sizes) | set(r_sizes))
-    mdf = local_df(
-        spark,
-        [
-            (
-                int(c),
-                max(1, math.ceil(l_sizes.get(c, 0) / block_rows)),
-                max(1, math.ceil(r_sizes.get(c, 0) / block_rows)),
-            )
-            for c in cells
-        ],
-        "cell long, ml int, mr int",
-    )
-    lp = (
-        l_big.join(F.broadcast(mdf.select("cell", "ml")), "cell")
-        .withColumn("blk", F.pmod(F.xxhash64("id"), F.col("ml").cast("long")).cast("int"))
-        .groupBy("cell", "blk")
-        .agg(F.collect_list("id").alias("ids_"), F.collect_list("xs").alias("xss_"))
-    )
-    rp = (
-        r_big.join(F.broadcast(mdf.select("cell", "mr")), "cell")
-        .withColumn("yblk", F.pmod(F.xxhash64("id"), F.col("mr").cast("long")).cast("int"))
-        .groupBy("cell", "yblk")
-        .agg(F.collect_list("id").alias("yids_"), F.collect_list("xs").alias("yxss_"))
-    )
+    cols = ["id", "xs"]
+    lp = _pack_blocks(l_big, l_sizes, block_rows, cols)
+    rp = _pack_blocks(r_big, r_sizes, block_rows, cols, prefix="y")
     npairs = sum(
-        max(1, math.ceil(l_sizes.get(c, 0) / block_rows))
-        * max(1, math.ceil(r_sizes.get(c, 0) / block_rows))
-        for c in cells
+        _n_blocks(l_sizes.get(c, 0), block_rows) * _n_blocks(r_sizes.get(c, 0), block_rows)
+        for c in set(l_sizes) | set(r_sizes)
     )
     pairs = lp.join(rp, "cell").repartition(min(max(npairs, 1), 2048))
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                xi = np.asarray(list(row.ids_), dtype=np.int64)
-                X = np.asarray([np.asarray(v) for v in row.xss_], dtype=np.float64)
-                yi = np.asarray(list(row.yids_), dtype=np.int64)
-                Y = np.asarray([np.asarray(v) for v in row.yxss_], dtype=np.float64)
-                ai, bi = _eps_pairs_sweep(X, Y, eps2, float(eps))
-                yield pd.DataFrame({"a": xi[ai], "b": yi[bi]})
+    def pair_hits(row) -> pd.DataFrame:
+        (xi, X), (yi, Y) = _unpack_pair(row, cols, same=False)
+        ai, bi = _eps_pairs_sweep(X, Y, eps2, float(eps))
+        return pd.DataFrame({"a": xi[ai], "b": yi[bi]})
 
-    return pairs.mapInPandas(kernel, "a long, b long")
+    return _map_pairs(pairs, pair_hits, "a long, b long")
 
 
 def epsilon_join(
@@ -583,55 +509,78 @@ def brute_force_neighbor_counts(points: DataFrame, eps: float, dims: int) -> Dat
     )
 
 
-def _pack_cell_blocks(
-    big_celled: DataFrame, sizes: dict[int, int], block_rows: int, cols: list[str]
+def _n_blocks(n: int, block_rows: int) -> int:
+    return max(1, math.ceil(n / block_rows))
+
+
+def _pack_blocks(
+    celled: DataFrame, sizes: dict[int, int], block_rows: int, cols: list[str], prefix: str = ""
 ) -> DataFrame:
-    """Pack each oversized cell's rows into ``m_c = ceil(n_c /
-    block_rows)`` single-row blocks (hash-assigned by id) and join the
-    unordered same-cell block pairs (blk <= yblk). Each output row
-    carries two whole blocks — task memory is bounded by 2*block_rows
-    regardless of cell size, and the sum of per-cell m_c*(m_c+1)/2
-    pairs is the unit of parallelism. ``sizes`` (cell -> rowcount)
-    comes from the caller's single probe aggregation, so per-cell
-    block counts cost no extra pass."""
-    spark = big_celled.sparkSession
+    """The one block packer of the oversized-cell kernels: each cell's
+    rows go to ``m_c = ceil(n_c / block_rows)`` blocks hash-assigned by
+    id, one output row per ``(cell, {prefix}blk)`` carrying a
+    ``collect_list`` per column of ``cols`` (named
+    ``{prefix}{col}s_``). ``sizes`` (cell -> rowcount) comes from the
+    caller's single probe aggregation, so per-cell block counts cost
+    no extra pass."""
     mdf = local_df(
-        spark,
-        [(int(c), max(1, math.ceil(n / block_rows))) for c, n in sizes.items()],
+        celled.sparkSession,
+        [(int(c), _n_blocks(n, block_rows)) for c, n in sizes.items()],
         "cell long, m int",
     )
-    aggs = [F.collect_list(c).alias(f"{c}s_") for c in cols]
-    packed = (
-        big_celled.join(F.broadcast(mdf), "cell")
-        .withColumn("blk", F.pmod(F.xxhash64("id"), F.col("m").cast("long")).cast("int"))
-        .groupBy("cell", "blk")
-        .agg(*aggs)
+    return (
+        celled.join(F.broadcast(mdf), "cell")
+        .withColumn(f"{prefix}blk", F.pmod(F.xxhash64("id"), F.col("m").cast("long")).cast("int"))
+        .groupBy("cell", f"{prefix}blk")
+        .agg(*[F.collect_list(c).alias(f"{prefix}{c}s_") for c in cols])
     )
+
+
+def _same_cell_block_pairs(
+    big_celled: DataFrame, sizes: dict[int, int], block_rows: int, cols: list[str]
+) -> DataFrame:
+    """Join the unordered same-cell block pairs (blk <= yblk) of the
+    packed blocks. Each output row carries two whole blocks — task
+    memory is bounded by 2*block_rows regardless of cell size, and the
+    sum of per-cell m_c*(m_c+1)/2 pairs is the unit of parallelism."""
+    packed = _pack_blocks(big_celled, sizes, block_rows, cols)
     right = packed.select(
         F.col("cell").alias("ycell"),
         F.col("blk").alias("yblk"),
         *[F.col(f"{c}s_").alias(f"y{c}s_") for c in cols],
     )
     pairs = packed.join(right, (F.col("cell") == F.col("ycell")) & (F.col("blk") <= F.col("yblk")))
-    npairs = sum(
-        max(1, math.ceil(n / block_rows)) * (max(1, math.ceil(n / block_rows)) + 1) // 2
-        for n in sizes.values()
-    )
+    npairs = sum(m * (m + 1) // 2 for m in (_n_blocks(n, block_rows) for n in sizes.values()))
     return pairs.repartition(min(max(npairs, 1), 2048))
 
 
-def _unpack_pair(row, flagged: bool):
-    xi = np.asarray(list(row.ids_), dtype=np.int64)
-    X = np.asarray([np.asarray(v) for v in row.xss_], dtype=np.float64)
-    xh = np.asarray(list(row.is_homes_), dtype=bool)
-    xc = np.asarray(list(row.is_cores_), dtype=bool) if flagged else None
-    if row.blk == row.yblk:
-        return True, xi, X, xh, xc, xi, X, xh, xc
-    yi = np.asarray(list(row.yids_), dtype=np.int64)
-    Y = np.asarray([np.asarray(v) for v in row.yxss_], dtype=np.float64)
-    yh = np.asarray(list(row.yis_homes_), dtype=bool)
-    yc = np.asarray(list(row.yis_cores_), dtype=bool) if flagged else None
-    return False, xi, X, xh, xc, yi, Y, yh, yc
+def _unpack_block(row, prefix: str, cols: list[str]) -> list[np.ndarray]:
+    out = []
+    for c in cols:
+        vals = getattr(row, f"{prefix}{c}s_")
+        if c == "xs":
+            out.append(np.asarray([np.asarray(v) for v in vals], dtype=np.float64))
+        else:
+            out.append(np.asarray(list(vals), dtype=np.int64 if c == "id" else bool))
+    return out
+
+
+def _unpack_pair(row, cols: list[str], same: bool):
+    """Both blocks of a packed pair row as ``[ids, X, flags...]`` per
+    ``cols``; a diagonal (same-block) pair decodes once."""
+    x = _unpack_block(row, "", cols)
+    return x, (x if same else _unpack_block(row, "y", cols))
+
+
+def _map_pairs(pairs: DataFrame, fn, schema: str) -> DataFrame:
+    """``fn(row) -> pd.DataFrame`` over every block-pair row."""
+
+    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            for row in pdf.itertuples(index=False):
+                yield fn(row)
+
+    return pairs.mapInPandas(kernel, schema)
 
 
 def cell_block_neighbor_counts(
@@ -646,23 +595,21 @@ def cell_block_neighbor_counts(
     so the union with the small-cell kernel's output covers every
     point exactly once."""
     eps2 = float(eps) * float(eps)
-    pairs = _pack_cell_blocks(big_celled, sizes, block_rows, ["id", "xs", "is_home"])
+    cols = ["id", "xs", "is_home"]
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                same, xi, X, xh, _, yi, Y, yh, _ = _unpack_pair(row, flagged=False)
-                ai, bi = _eps_pairs_sweep(X, Y, eps2, float(eps))
-                out_id = [xi[xh]]
-                out_c = [np.bincount(ai, minlength=X.shape[0]).astype(np.int64)[xh]]
-                if not same:
-                    out_id.append(yi[yh])
-                    out_c.append(np.bincount(bi, minlength=Y.shape[0]).astype(np.int64)[yh])
-                yield pd.DataFrame(
-                    {"id": np.concatenate(out_id), "pc": np.concatenate(out_c)}
-                )
+    def pair_counts(row) -> pd.DataFrame:
+        same = row.blk == row.yblk
+        (xi, X, xh), (yi, Y, yh) = _unpack_pair(row, cols, same)
+        ai, bi = _eps_pairs_sweep(X, Y, eps2, float(eps))
+        out_id = [xi[xh]]
+        out_c = [np.bincount(ai, minlength=X.shape[0]).astype(np.int64)[xh]]
+        if not same:
+            out_id.append(yi[yh])
+            out_c.append(np.bincount(bi, minlength=Y.shape[0]).astype(np.int64)[yh])
+        return pd.DataFrame({"id": np.concatenate(out_id), "pc": np.concatenate(out_c)})
 
-    partials = pairs.mapInPandas(kernel, "id long, pc long")
+    pairs = _same_cell_block_pairs(big_celled, sizes, block_rows, cols)
+    partials = _map_pairs(pairs, pair_counts, "id long, pc long")
     return partials.groupBy("id").agg(F.sum("pc").alias("n_neighbors"))
 
 
@@ -686,73 +633,61 @@ def cell_block_components_and_borders(
     needed; cross-cell duplicates are absorbed by CC's distinct and
     the border min-root aggregate."""
     eps2 = float(eps) * float(eps)
-    pairs = _pack_cell_blocks(big_flagged, sizes, block_rows, ["id", "xs", "is_home", "is_core"])
-    schema = T.StructType(
-        [
-            T.StructField("kind", T.IntegerType()),
-            T.StructField("a", T.LongType()),
-            T.StructField("b", T.LongType()),
-        ]
-    )
+    cols = ["id", "xs", "is_home", "is_core"]
 
-    def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for row in pdf.itertuples(index=False):
-                same, xi, X, xh, xc, yi, Y, yh, yc = _unpack_pair(row, flagged=True)
-                ai, bi = _eps_pairs_sweep(X, Y, eps2, float(eps))
-                ga, gb = xi[ai], yi[bi]
-                ca, cb = xc[ai], yc[bi]
-                ka, kb, kk = [], [], []
-                # core-core connectivity, CONTRACTED within the task:
-                # a local min-label union over the pair's core-core
-                # hits replaces the raw edge list with <= |nodes|
-                # (node -> local root) edges — raw emission made the
-                # global CC ingest O(sum of per-task hit counts),
-                # which for dense graphs (e.g. minPts=2 feature sets)
-                # is millions of rows per task
-                ccm = ca & cb & ((ai < bi) if same else (ga != gb))
-                if same:
-                    nodes = xi
-                    u, v = ai[ccm], bi[ccm]
-                else:
-                    nodes = np.concatenate([xi, yi])
-                    u, v = ai[ccm], X.shape[0] + bi[ccm]
-                lab = _np_components(u, v, nodes.size)
-                if same:
-                    # the diagonal task emits EVERY core of its block
-                    # (including singletons, as (c, c)) — each core
-                    # lives in exactly one diagonal task per cell, so
-                    # the union of kind=0 rows covers the full core
-                    # set; the driver label fastpath relies on this
-                    # (dbscan._driver_labels derives cores from kind=0
-                    # nodes instead of re-collecting the flags frame)
-                    emit = xc
-                else:
-                    emit = lab != np.arange(nodes.size)
-                cu, cv = nodes[emit], nodes[lab[emit]]
-                kk.append(np.zeros(cu.size, dtype=np.int32))
-                ka.append(np.minimum(cu, cv))
-                kb.append(np.maximum(cu, cv))
-                # border candidates: home non-core -> adjacent core
-                # (same-block both orders covered by full enumeration)
-                xb = xh[ai] & ~ca & cb
-                kk.append(np.ones(int(xb.sum()), dtype=np.int32))
-                ka.append(ga[xb])
-                kb.append(gb[xb])
-                if not same:
-                    yb = yh[bi] & ~cb & ca
-                    kk.append(np.ones(int(yb.sum()), dtype=np.int32))
-                    ka.append(gb[yb])
-                    kb.append(ga[yb])
-                yield pd.DataFrame(
-                    {
-                        "kind": np.concatenate(kk),
-                        "a": np.concatenate(ka),
-                        "b": np.concatenate(kb),
-                    }
-                )
+    def pair_edges(row) -> pd.DataFrame:
+        same = row.blk == row.yblk
+        (xi, X, xh, xc), (yi, Y, yh, yc) = _unpack_pair(row, cols, same)
+        ai, bi = _eps_pairs_sweep(X, Y, eps2, float(eps))
+        ga, gb = xi[ai], yi[bi]
+        ca, cb = xc[ai], yc[bi]
+        ka, kb, kk = [], [], []
+        # core-core connectivity, CONTRACTED within the task: a local
+        # min-label union over the pair's core-core hits replaces the
+        # raw edge list with <= |nodes| (node -> local root) edges —
+        # raw emission made the global CC ingest O(sum of per-task hit
+        # counts), which for dense graphs (e.g. minPts=2 feature sets)
+        # is millions of rows per task
+        ccm = ca & cb & ((ai < bi) if same else (ga != gb))
+        if same:
+            nodes = xi
+            u, v = ai[ccm], bi[ccm]
+        else:
+            nodes = np.concatenate([xi, yi])
+            u, v = ai[ccm], X.shape[0] + bi[ccm]
+        lab = min_label_union(u, v, nodes.size)
+        if same:
+            # the diagonal task emits EVERY core of its block
+            # (including singletons, as (c, c)) — each core lives in
+            # exactly one diagonal task per cell, so the union of
+            # kind=0 rows covers the full core set; the driver label
+            # fastpath relies on this (dbscan._driver_labels derives
+            # cores from kind=0 nodes instead of re-collecting the
+            # flags frame)
+            emit = xc
+        else:
+            emit = lab != np.arange(nodes.size)
+        cu, cv = nodes[emit], nodes[lab[emit]]
+        kk.append(np.zeros(cu.size, dtype=np.int32))
+        ka.append(np.minimum(cu, cv))
+        kb.append(np.maximum(cu, cv))
+        # border candidates: home non-core -> adjacent core
+        # (same-block both orders covered by full enumeration)
+        xb = xh[ai] & ~ca & cb
+        kk.append(np.ones(int(xb.sum()), dtype=np.int32))
+        ka.append(ga[xb])
+        kb.append(gb[xb])
+        if not same:
+            yb = yh[bi] & ~cb & ca
+            kk.append(np.ones(int(yb.sum()), dtype=np.int32))
+            ka.append(gb[yb])
+            kb.append(ga[yb])
+        return pd.DataFrame(
+            {"kind": np.concatenate(kk), "a": np.concatenate(ka), "b": np.concatenate(kb)}
+        )
 
-    return pairs.mapInPandas(kernel, schema)
+    pairs = _same_cell_block_pairs(big_flagged, sizes, block_rows, cols)
+    return _map_pairs(pairs, pair_edges, _KAB)
 
 
 def local_components_and_borders(celled_flagged: DataFrame, eps: float) -> DataFrame:
@@ -775,13 +710,6 @@ def local_components_and_borders(celled_flagged: DataFrame, eps: float) -> DataF
     merge buffers become ordinary shuffle rows.
     """
     eps2 = float(eps) * float(eps)
-    schema = T.StructType(
-        [
-            T.StructField("kind", T.IntegerType()),
-            T.StructField("a", T.LongType()),
-            T.StructField("b", T.LongType()),
-        ]
-    )
 
     def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
         ids = pdf["id"].to_numpy()
@@ -797,16 +725,7 @@ def local_components_and_borders(celled_flagged: DataFrame, eps: float) -> DataF
             # core-core adjacency -> local min-label union
             u, v = _eps_pairs_sweep(cx, cx, eps2, float(eps))
             keep = u < v
-            u, v = u[keep], v[keep]
-            labels = np.arange(nc, dtype=np.int64)
-            if u.size:
-                while True:
-                    before = labels.copy()
-                    np.minimum.at(labels, u, labels[v])
-                    np.minimum.at(labels, v, labels[u])
-                    labels = labels[labels]  # pointer jump
-                    if np.array_equal(labels, before):
-                        break
+            labels = min_label_union(u[keep], v[keep], nc)
             # component label -> min member id (rows arrive in arbitrary
             # order, so index-min is not id-min; reduce explicitly)
             minid = np.full(nc, np.iinfo(np.int64).max)
@@ -826,9 +745,7 @@ def local_components_and_borders(celled_flagged: DataFrame, eps: float) -> DataF
                     frames.append(uniq)
 
         if not frames:
-            return pd.DataFrame({"kind": pd.Series(dtype="int32"),
-                                 "a": pd.Series(dtype="int64"),
-                                 "b": pd.Series(dtype="int64")})
+            return _empty_kab()
         return pd.concat(frames, ignore_index=True)
 
-    return _by_cell(celled_flagged).applyInPandas(kernel, schema=schema)
+    return _by_cell(celled_flagged).applyInPandas(kernel, schema=_KAB)

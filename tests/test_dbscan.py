@@ -166,21 +166,112 @@ def test_degenerate_inputs(spark):
     assert (st["total_points"], st["n_clusters"], st["noise_count"]) == (50, 1, 0)
 
 
-def test_fused_override_paths_identical(spark):
-    """dbscan(fused=True/False/None) must produce identical labels on
-    a k=3 grid (where the auto rule picks two-pass) and fused=True
-    must reject a thin-celled spec."""
+def test_axis_count_selects_local_route(spark):
+    """The same 3-D blobs on a 2-axis grid (fused local phase) and on
+    the default 3-axis grid (two-pass) must both equal the oracle, and
+    a supplied spec with cell side <= 2*eps must take the two-pass
+    route (the fused route's 2*eps closure would reject it)."""
     x = make_blobs(2500, 3, grid_centers(8, 3, 1.0), 0.004, seed=9, noise_frac=0.05)
-    a = run_and_compare(spark, x, 0.01, 5, fused=True)
-    b = run_and_compare(spark, x, 0.01, 5, fused=False)
-    c = run_and_compare(spark, x, 0.01, 5)
-    assert np.array_equal(a, b) and np.array_equal(b, c)
+    a = run_and_compare(spark, x, 0.01, 5, max_grid_dims=2)
+    b = run_and_compare(spark, x, 0.01, 5)
+    assert np.array_equal(a, b)
 
     from cs533_big_data_data_mining_spark.operators.cells import GridSpec
 
     thin = GridSpec(eps=0.01, dims=(0,), origin=(0.0,), width=(0.015,), ncells=(100,))
-    df = to_points_df(spark, x)
-    with pytest.raises(ValueError, match="fused=True"):
-        from cs533_big_data_data_mining_spark.operators.dbscan import dbscan as _d
+    c = run_and_compare(spark, x, 0.01, 5, spec=thin)
+    assert np.array_equal(b, c)
 
-        _d(df, 0.01, 5, spec=thin, fused=True)
+
+ROUTE_EPS, ROUTE_MIN_PTS, ROUTE_GATE = 1.2, 5, 800
+_ROUTE_DATA: dict = {}
+
+
+def _route_data(d: int):
+    """Uniform background over [0, 100]^d, one dense blob inside the
+    first cell of the 2^d row-budget grid (cells of side ~50) and a
+    smaller blob in the last: at ``block_fallback_rows=ROUTE_GATE``
+    exactly one cell is oversized. Returns ``(x, oracle labels)``."""
+    if d not in _ROUTE_DATA:
+        rng = np.random.default_rng(29)
+        x = np.concatenate(
+            [
+                rng.uniform(0.0, 100.0, size=(1200, d)),
+                rng.normal(25.0, 0.4, size=(1000, d)),
+                rng.normal(75.0, 0.4, size=(300, d)),
+            ]
+        )
+        _ROUTE_DATA[d] = (x, seq_dbscan(x, ROUTE_EPS, ROUTE_MIN_PTS))
+    return _ROUTE_DATA[d]
+
+
+@pytest.mark.parametrize("labels", ["driver", "distributed"])
+@pytest.mark.parametrize("oversized", [False, True], ids=["no_oversized", "one_oversized"])
+@pytest.mark.parametrize("d", [2, 3], ids=["2d_fused", "3d_two_pass"])
+def test_route_matrix_matches_oracle(spark, d, oversized, labels):
+    """Every local route the input can select: {2-D -> fused, 3-D ->
+    two-pass} x {no oversized cell, one oversized cell -> block pairs}
+    x {driver labels, distributed CC + labels}."""
+    x, want = _route_data(d)
+    kw = {"block_fallback_rows": ROUTE_GATE} if oversized else {}
+    if labels == "distributed":
+        kw.update(driver_label_rows=0, cc_driver_fastpath_edges=0)
+    df = to_points_df(spark, x)
+    got = {r["id"]: r["cluster_id"] for r in dbscan(df, ROUTE_EPS, ROUTE_MIN_PTS, **kw).collect()}
+    got_arr = np.array([got[i] for i in range(len(x))], dtype=np.int64)
+    assert np.array_equal(got_arr, want), f"{int((got_arr != want).sum())}/{len(x)} points differ"
+
+
+@pytest.mark.parametrize("d", [2, 3])
+def test_route_matrix_data_shape(spark, d):
+    """The route matrix's data has d grid axes (<= 2 fuses, 3 does
+    not) and exactly one cell above the block gate."""
+    from cs533_big_data_data_mining_spark.operators.cells import choose_grid, ghost_expand
+
+    x, want = _route_data(d)
+    assert want.max() >= 2 and (want == 0).any()
+    pts = to_points_df(spark, x)
+    spec = choose_grid(pts, d, ROUTE_EPS)
+    assert len(spec.dims) == d
+    sizes = [r["count"] for r in ghost_expand(pts, spec).groupBy("cell").count().collect()]
+    assert sum(n > ROUTE_GATE for n in sizes) == 1 and len(sizes) > 1
+
+
+def _dsu_labels(u, v, n):
+    """Plain Python disjoint-set (union by smaller root): each node's
+    label is the smallest node of its component."""
+    parent = list(range(n))
+
+    def find(i):
+        while parent[i] != i:
+            parent[i] = parent[parent[i]]
+            i = parent[i]
+        return i
+
+    for a, b in zip(u.tolist(), v.tolist()):
+        ra, rb = find(a), find(b)
+        if ra != rb:
+            parent[max(ra, rb)] = min(ra, rb)
+    return np.array([find(i) for i in range(n)], dtype=np.int64)
+
+
+def _union_graphs():
+    rng = np.random.default_rng(3)
+    e = np.empty(0, dtype=np.int64)
+    path = rng.permutation(2000)
+    yield "no_edges", e, e, 7
+    yield "self_loops", np.array([0, 2, 2, 5]), np.array([0, 2, 2, 5]), 6
+    yield "duplicates", np.array([3, 3, 1, 4, 4]), np.array([1, 1, 3, 0, 0]), 5
+    yield "isolated", np.array([8, 2]), np.array([5, 9]), 12
+    yield "long_path", path[:-1], path[1:], 2000
+    for seed, (n, m) in enumerate([(50, 20), (200, 150), (300, 300), (500, 2000)]):
+        g = np.random.default_rng(100 + seed)
+        yield f"random{seed}", g.integers(0, n, m), g.integers(0, n, m), n
+
+
+@pytest.mark.parametrize("name,u,v,n", [pytest.param(*g, id=g[0]) for g in _union_graphs()])
+def test_min_label_union_matches_disjoint_set(name, u, v, n):
+    from cs533_big_data_data_mining_spark.operators.connected_components import min_label_union
+
+    got = min_label_union(u.astype(np.int64), v.astype(np.int64), n)
+    assert np.array_equal(got, _dsu_labels(u, v, n)), name

@@ -157,11 +157,11 @@ def test_ghost_expand_2eps_invariants(spark):
     locally decidable in the fused kernel), and thin cells must raise."""
     import pytest
 
-    from cs533_big_data_data_mining_spark.operators.cells import GridSpec, ghost_expand_2eps
+    from cs533_big_data_data_mining_spark.operators.cells import GridSpec
 
     x, df, _ = _setup(spark)
     spec = _dense_spec(x)  # real multi-cell grid (choose_grid degenerates at n=600)
-    rows2 = ghost_expand_2eps(df, spec).collect()
+    rows2 = ghost_expand(df, spec, reach=2).collect()
 
     # (a) near rows == classic ghost_expand rows, same is_home flags
     near = {(r["cell"], r["id"]): r["is_home"] for r in rows2 if r["is_near"]}
@@ -198,7 +198,7 @@ def test_ghost_expand_2eps_invariants(spark):
     thin = GridSpec(eps=spec.eps, dims=spec.dims, origin=spec.origin,
                     width=tuple(1.5 * spec.eps for _ in spec.dims), ncells=spec.ncells)
     with pytest.raises(ValueError, match="2\\*eps"):
-        ghost_expand_2eps(df, thin)
+        ghost_expand(df, thin, reach=2)
 
 
 def test_fused_local_phase_matches_two_pass(spark):
@@ -208,7 +208,6 @@ def test_fused_local_phase_matches_two_pass(spark):
     min-reduction)."""
     from pyspark.sql import functions as F
 
-    from cs533_big_data_data_mining_spark.operators.cells import ghost_expand_2eps
     from cs533_big_data_data_mining_spark.operators.dbscan import _driver_labels
     from cs533_big_data_data_mining_spark.operators.neighbors import (
         fused_local_phase,
@@ -218,7 +217,7 @@ def test_fused_local_phase_matches_two_pass(spark):
     x, df, _ = _setup(spark, n=800, seed=33)
     spec = _dense_spec(x)
     min_pts = 6
-    celled2 = ghost_expand_2eps(df, spec)
+    celled2 = ghost_expand(df, spec, reach=2)
     fused = fused_local_phase(celled2, EPS, min_pts).toPandas()
 
     counts = {r["id"]: r["n_neighbors"] for r in neighbor_counts(ghost_expand(df, spec), EPS).collect()}
@@ -239,3 +238,62 @@ def test_fused_local_phase_matches_two_pass(spark):
     a = dict(zip(lab_fused["id"], lab_fused["cluster_id"]))
     b = dict(zip(lab_two["id"], lab_two["cluster_id"]))
     assert a == b
+
+
+def _np_ghost_rows(x, spec, reach):
+    """Ghost rows enumerated in NumPy by the clamped cell rule (the
+    same arithmetic ``perfbench.workloads._ghost_cell_sizes`` uses):
+    sorted ``(cell, id, is_home)`` tuples, plus ``is_near`` at
+    ``reach=2``."""
+    from itertools import product
+
+    per_axis = []
+    for i, j in enumerate(spec.dims):
+        c = np.clip(np.floor((x[:, j] - spec.origin[i]) / spec.width[i]), 0, spec.ncells[i] - 1)
+        c = c.astype(np.int64)
+        low = spec.origin[i] + c * spec.width[i]
+        d_lo, d_hi = x[:, j] - low, low + spec.width[i] - x[:, j]
+        has_lo, has_hi = c > 0, c < spec.ncells[i] - 1
+        per_axis.append(
+            (
+                c,
+                {-1: has_lo & (d_lo <= reach * spec.eps), 1: has_hi & (d_hi <= reach * spec.eps)},
+                {-1: has_lo & (d_lo <= spec.eps), 1: has_hi & (d_hi <= spec.eps)},
+            )
+        )
+    rows = []
+    for delta in product((-1, 0, 1), repeat=len(spec.dims)):
+        keep = np.ones(len(x), dtype=bool)
+        near = np.ones(len(x), dtype=bool)
+        cell = np.zeros(len(x), dtype=np.int64)
+        for (c, touch, touch_near), dd, stride in zip(per_axis, delta, spec.strides):
+            if dd:
+                keep &= touch[dd]
+                near &= touch_near[dd]
+            cell += (c + dd) * stride
+        home = not any(delta)
+        for p in np.flatnonzero(keep):
+            row = (int(cell[p]), int(p), home)
+            rows.append(row + (bool(near[p]),) if reach == 2 else row)
+    return sorted(rows)
+
+
+def test_ghost_expand_four_axes_matches_numpy(spark):
+    """A hand-built 4-axis GridSpec (above grid_from_stats's 3-axis
+    cap): at both reaches ghost_expand's rows — with multiplicity —
+    equal the NumPy enumeration, out-of-range points clamped."""
+    from cs533_big_data_data_mining_spark.operators.cells import GridSpec
+
+    rng = np.random.default_rng(41)
+    x = rng.uniform(-0.1, 1.1, size=(300, 5))
+    df = to_points_df(spark, x)
+    spec = GridSpec(
+        eps=0.05, dims=(0, 1, 3, 4), origin=(0.0,) * 4, width=(0.25, 0.25, 0.2, 0.3),
+        ncells=(4, 4, 5, 3),
+    )
+    for reach in (1, 2):
+        cols = ["cell", "id", "is_home"] + (["is_near"] if reach == 2 else [])
+        got = sorted(tuple(r) for r in ghost_expand(df, spec, reach=reach).select(*cols).collect())
+        want = _np_ghost_rows(x, spec, reach)
+        assert len(got) > len(x)
+        assert got == want, f"reach={reach}: {len(got)} rows vs {len(want)} expected"

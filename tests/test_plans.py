@@ -426,3 +426,32 @@ def test_cached_shuffle_output_is_coalesced(spark):
         assert df.rdd.getNumPartitions() < n_shuffle
     finally:
         df.unpersist()
+
+
+def test_dbscan_kernels_shuffle_once_on_cell(spark):
+    """``neighbors._by_cell``'s ``repartition(par, "cell")`` satisfies
+    the kernel's ``groupBy("cell")``: the executed plans of both local
+    kernels hold exactly one Exchange, hash-partitioned on ``cell``."""
+    import numpy as np
+
+    from cs533_big_data_data_mining_spark.operators.cells import GridSpec, ghost_expand
+    from cs533_big_data_data_mining_spark.operators.neighbors import (
+        fused_local_phase,
+        neighbor_counts,
+    )
+
+    rng = np.random.default_rng(5)
+    pts = spark.createDataFrame(
+        [(i, [float(a), float(b)]) for i, (a, b) in enumerate(rng.uniform(0.0, 1.0, (400, 2)))],
+        "id long, xs array<double>",
+    )
+    spec = GridSpec(eps=0.05, dims=(0, 1), origin=(0.0, 0.0), width=(0.25, 0.25), ncells=(4, 4))
+    for df in (
+        neighbor_counts(ghost_expand(pts, spec), 0.05),
+        fused_local_phase(ghost_expand(pts, spec, reach=2), 0.05, 4),
+    ):
+        df.collect()
+        final = df._jdf.queryExecution().executedPlan().executedPlan().toString()
+        exchanges = [l for l in final.splitlines() if "Exchange " in l]
+        assert len(exchanges) == 1, final
+        assert "hashpartitioning(cell#" in exchanges[0], final
