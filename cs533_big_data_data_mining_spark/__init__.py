@@ -14,6 +14,12 @@ invariance are hard requirements (the reference's known bug —
 cluster count degrades with parallelism — is fixed by construction).
 """
 
+from cs533_big_data_data_mining_spark.session import _install_worker_import_guard
+
+# a no-op on the driver; in a PySpark worker, the first task that
+# unpickles an engine kernel installs it for every later task
+_install_worker_import_guard()
+
 from cs533_big_data_data_mining_spark.operators.curate import (
     curate_corpus,
     curate_documents,

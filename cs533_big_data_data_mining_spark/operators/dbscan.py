@@ -391,6 +391,13 @@ def dbscan(
 
         t0 = time.time()
         labels_pdf = _driver_labels(lb_pdf)
+        # a LocalRelation: its scan parallelizes the rows into
+        # defaultParallelism tasks, so the broadcast below runs ~1 MB
+        # tasks at 80k points on 2 cores (Spark warns). An eager
+        # localCheckpoint, as in connected_components._driver_union,
+        # does not remove those tasks: it moves them into a new
+        # checkpoint job (+1 job, +1 stage, +2 tasks, same warning),
+        # so the frame stays uncheckpointed.
         labels_df = spark.createDataFrame(labels_pdf, "id long, cluster_id int")
         t["merge"] = round(time.time() - t0, 3)
 

@@ -22,6 +22,7 @@ from collections.abc import Iterator, Sequence
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -57,7 +58,7 @@ def read_points_parquet(spark: SparkSession, path: str, **kwargs) -> DataFrame:
     return as_points(spark.read.parquet(path), **kwargs)
 
 
-def _bin_header(content: bytes) -> tuple[int, int]:
+def _bin_header(content: bytes | pa.Buffer) -> tuple[int, int]:
     n, d = struct.unpack("<ii", content[:8])
     if n <= 0 or d <= 0 or len(content) < 8 + 4 * n * d:
         raise ValueError(f"not a valid reference .bin file: header N={n} D={d}, size={len(content)}")
@@ -70,14 +71,15 @@ def read_points_bin(spark: SparkSession, path: str, batch_rows: int = 65536) -> 
     Reads via the ``binaryFile`` DataSource (one row per file, files
     processed in parallel across executors) and unpacks the
     ``(int32 N, int32 D)`` header + N*D float32 payload
-    (reference ``clusters.cpp:148-150``) inside ``mapInPandas`` so the
-    bytes never pass through the driver. Point ids are the row index
-    within the file, matching the reference's ``start_pos + idx``
-    global ordering (``dbscan.cpp:950-977``); when the path matches
-    several files, each file's ids are salted with its path-ordinal
-    (``ordinal << 40``) so ids stay globally unique — without this,
-    every downstream id join (labels, flags, borders) silently
-    corrupts on multi-file loads.
+    (reference ``clusters.cpp:148-150``) inside ``mapInArrow`` so the
+    bytes never pass through the driver; each ``batch_rows`` block
+    leaves as one flat float64 buffer with list offsets. Point ids are
+    the row index within the file, matching the reference's
+    ``start_pos + idx`` global ordering (``dbscan.cpp:950-977``); when
+    the path matches several files, each file's ids are salted with its
+    path-ordinal (``ordinal << 40``) so ids stay globally unique —
+    without this, every downstream id join (labels, flags, borders)
+    silently corrupts on multi-file loads.
 
     Scale note: ``binaryFile`` holds one whole file per row (2 GB
     cap); the production path for big data is a one-time
@@ -96,21 +98,26 @@ def read_points_bin(spark: SparkSession, path: str, batch_rows: int = 65536) -> 
         ]
     )
 
-    def unpack(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            for fpath, content in zip(pdf["path"], pdf["content"]):
-                buf = bytes(content)
+    def unpack(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in batches:
+            for fpath, content in zip(batch.column("path").to_pylist(), batch.column("content")):
+                buf = content.as_buffer()
                 n, d = _bin_header(buf)
                 lo0 = base[fpath]
                 mat = np.frombuffer(buf, dtype="<f4", offset=8, count=n * d).reshape(n, d)
                 for lo in range(0, n, batch_rows):
                     hi = min(lo + batch_rows, n)
-                    block = mat[lo:hi].astype(np.float64)
-                    yield pd.DataFrame(
-                        {"id": np.arange(lo0 + lo, lo0 + hi, dtype=np.int64), "xs": list(block)}
+                    offsets = pa.array(np.arange(0, (hi - lo) * d + 1, d, dtype=np.int32))
+                    values = pa.array(mat[lo:hi].astype(np.float64).ravel())
+                    yield pa.RecordBatch.from_arrays(
+                        [
+                            pa.array(np.arange(lo0 + lo, lo0 + hi, dtype=np.int64)),
+                            pa.ListArray.from_arrays(offsets, values),
+                        ],
+                        names=["id", "xs"],
                     )
 
-    pts = files.mapInPandas(unpack, schema=out_schema)
+    pts = files.mapInArrow(unpack, schema=out_schema)
     # one .bin file = one binaryFile row = one partition; downstream
     # per-point work (ghost expansion, cell kernels) needs the rows
     # spread before it runs. At real scale the native path is Parquet

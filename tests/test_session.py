@@ -1,0 +1,98 @@
+"""The worker import guard (session._install_worker_import_guard)."""
+
+import importlib
+import os
+import sys
+import zipfile
+import zipimport
+
+import pandas as pd
+
+from cs533_big_data_data_mining_spark.session import _skip_unchanged_zip_rereads
+
+
+def _write_archive(path, modules):
+    with zipfile.ZipFile(path, "w") as zf:
+        for name, src in modules.items():
+            zf.writestr(f"{name}.py", src)
+
+
+def test_zip_guard_rereads_only_changed_archive(tmp_path, monkeypatch):
+    """An unchanged archive is not re-read; a rewritten one is, and its
+    new module imports after ``importlib.invalidate_caches()``."""
+    arc = str(tmp_path / "guarded.zip")
+    _write_archive(arc, {"zip_guard_mod_a": "VALUE = 1\n"})
+    monkeypatch.setattr(
+        zipimport.zipimporter,
+        "invalidate_caches",
+        _skip_unchanged_zip_rereads(zipimport.zipimporter.invalidate_caches),
+    )
+    reads = []
+    read_directory = zipimport._read_directory
+
+    def counting_read(archive):
+        reads.append(archive)
+        return read_directory(archive)
+
+    monkeypatch.setattr(zipimport, "_read_directory", counting_read)
+    monkeypatch.syspath_prepend(arc)
+    try:
+        assert importlib.import_module("zip_guard_mod_a").VALUE == 1
+        importer = sys.path_importer_cache[arc]
+        assert isinstance(importer, zipimport.zipimporter)
+
+        del reads[:]
+        importlib.invalidate_caches()  # first call under the guard: reads
+        importlib.invalidate_caches()  # unchanged: skipped
+        importer.invalidate_caches()
+        assert reads.count(arc) == 1
+
+        _write_archive(arc, {"zip_guard_mod_a": "VALUE = 1\n", "zip_guard_mod_b": "VALUE = 2\n"})
+        importlib.invalidate_caches()
+        assert reads.count(arc) == 2
+        assert importlib.import_module("zip_guard_mod_b").VALUE == 2
+        importlib.invalidate_caches()
+        assert reads.count(arc) == 2
+
+        # a missing archive goes through the original method every time
+        os.remove(arc)
+        importer.invalidate_caches()
+        importer.invalidate_caches()
+        assert reads.count(arc) == 4
+    finally:
+        for name in ("zip_guard_mod_a", "zip_guard_mod_b"):
+            sys.modules.pop(name, None)
+        sys.path_importer_cache.pop(arc, None)
+
+
+def test_worker_import_guard_in_workers_only(spark):
+    """Once the engine is imported in a worker task, ``invalidate_caches()``
+    re-reads no archive there; the driver keeps the original method."""
+
+    def probe(batches):
+        import importlib
+        import sys
+        import zipimport
+
+        import cs533_big_data_data_mining_spark  # noqa: F401
+
+        for _ in batches:
+            pass
+        importers = sum(isinstance(v, zipimport.zipimporter) for v in sys.path_importer_cache.values())
+        # an importer's first call under the guard reads, as before
+        importlib.invalidate_caches()
+        reads = []
+        read_directory = zipimport._read_directory
+        zipimport._read_directory = lambda archive: reads.append(archive) or read_directory(archive)
+        try:
+            importlib.invalidate_caches()
+        finally:
+            zipimport._read_directory = read_directory
+        yield pd.DataFrame({"importers": [importers], "reads": [len(reads)]})
+
+    row = spark.range(1, numPartitions=1).mapInPandas(probe, "importers long, reads long").head()
+    # the engine itself reaches workers as a zip, so there is always one
+    assert row["importers"] >= 1
+    assert row["reads"] == 0
+    method = zipimport.zipimporter.invalidate_caches
+    assert (method.__module__, method.__qualname__) == ("zipimport", "zipimporter.invalidate_caches")

@@ -4,6 +4,7 @@ import os
 import struct
 
 import numpy as np
+import pytest
 from pyspark.sql import functions as F
 
 from cs533_big_data_data_mining_spark.operators.stats import (
@@ -50,20 +51,34 @@ def test_sample(spark):
     assert 350 < n < 650
 
 
-def test_bin_reader_roundtrip(spark, tmp_path):
+@pytest.mark.parametrize("batch_rows", [300, 1000], ids=["ragged_batches", "one_batch"])
+def test_bin_reader_roundtrip(spark, tmp_path, batch_rows):
     """FIXTURES.md §3: reference .bin format -> DataFrame, byte-identical
-    after float32->float64 widening."""
+    after float32->float64 widening, whether or not ``batch_rows``
+    divides N."""
     rng = np.random.default_rng(42)
     mat = rng.normal(size=(1000, 3)).astype(np.float32)
     p = tmp_path / "ref_format_roundtrip.bin"
     with open(p, "wb") as f:
         f.write(struct.pack("<ii", 1000, 3))
         f.write(mat.tobytes())
-    df = read_points_bin(spark, str(p))
+    df = read_points_bin(spark, str(p), batch_rows=batch_rows)
+    assert df.schema.simpleString() == "struct<id:bigint,xs:array<double>>"
     rows = sorted(df.collect(), key=lambda r: r["id"])
-    assert len(rows) == 1000
+    assert [r["id"] for r in rows] == list(range(1000))
     got = np.array([r["xs"] for r in rows])
     assert np.array_equal(got, mat.astype(np.float64))
+
+
+def test_bin_reader_truncated_payload_raises(spark, tmp_path):
+    """A payload shorter than the header's N*D floats is rejected by the
+    header check, not read as fewer points."""
+    p = tmp_path / "truncated.bin"
+    with open(p, "wb") as f:
+        f.write(struct.pack("<ii", 1000, 3))
+        f.write(np.zeros((999, 3), dtype=np.float32).tobytes())
+    with pytest.raises(Exception, match="not a valid reference .bin file: header N=1000 D=3"):
+        read_points_bin(spark, str(p)).count()
 
 
 def test_bin_reader_multifile_unique_ids(spark, tmp_path):
