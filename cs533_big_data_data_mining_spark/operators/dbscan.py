@@ -39,6 +39,7 @@ import time
 from cs533_big_data_data_mining_spark.operators.cells import (
     GridSpec,
     choose_grid,
+    fuses_local_phase,
     ghost_expand,
     grid_from_stats,
     grid_stats,
@@ -249,7 +250,8 @@ def dbscan(
     option (op 15).
 
     Skew handling: ONE probe aggregation over the ghost-expanded frame
-    finds cells larger than ``block_fallback_rows``. Those cells — and
+    finds cells with more than ``block_fallback_rows`` eps rows (home
+    plus eps ghosts, on either local route). Those cells — and
     only those — are re-spread over same-cell block-pair tasks
     (``cell_block_*``); every other cell runs the sort-sweep grid
     kernel. A dataset the grid cannot partition at all (no usable
@@ -290,23 +292,26 @@ def dbscan(
         )
     t["grid"] = round(time.time() - t0, 3)
 
-    # Local-phase route. Fused (one applyInPandas pass: counts, core
-    # predicate, local union and borders) needs the 2*eps ghost
-    # closure, so every cell side must exceed 2*eps. It pays only on
-    # <= 2 grid axes: the 2*eps frame ships (1+4/wf)^k / (1+2/wf)^k
-    # times the rows of the eps frame (1.5x at k=1, 1.8x at k=2, 2.4x
-    # at k=3 for wf=4), and that kernel work grows with the data while
-    # the pass and is_core join it saves are a fixed cost. Measured:
-    # part64 (k=2) local+merge 0.64-0.76 s fused vs 1.18-1.27 s
-    # two-pass; clus50k (k=3) 3.6 s vs 2.5 s and the 3M uniform k=3
-    # local stage 87 s vs 14 s against fusing.
-    fused = len(spec.dims) <= 2 and all(w > 2.0 * spec.eps for w in spec.width)
+    # Local-phase route (cells.fuses_local_phase). Fused: one
+    # applyInPandas pass (counts, core predicate, local union and
+    # borders) over the 2*eps ghost frame, R times the rows of the eps
+    # frame. Two-pass: the eps frame through two kernels plus an
+    # is_core join. Fuse iff every side > 2*eps and R < 2 — at wf=4
+    # R is 1.33/1.78/2.37 at k=1/2/3, and 3-axis grids with sides
+    # >= ~5.7*eps fuse. Measured: part64 (k=2) local+merge
+    # 0.64-0.76 s fused vs 1.18-1.27 s two-pass. The recorded "3M
+    # uniform k=3 local stage 87 s vs 14 s against fusing" was the
+    # skew probe counting 2*eps shell rows, which pushed cells into
+    # block pairs; the probe below counts near rows only.
+    fused = fuses_local_phase(spec)
 
     t0 = time.time()
     celled = ghost_expand(points, spec, reach=2 if fused else 1)
     # Skew probe: one aggregation yields every oversized cell and its
     # size. Skipped when no cell CAN be oversized (a cell holds each
-    # point at most once, so cell population <= n_rows).
+    # point at most once, so cell population <= n_rows). On the fused
+    # route it counts the near rows only: those are all an oversized
+    # cell's block pairs consume.
     if n_rows > block_fallback_rows:
         # cache BEFORE the probe: the probe aggregation materializes
         # the ghost-expanded frame while it counts, so the kernel
@@ -314,10 +319,11 @@ def dbscan(
         # (the explode runs once per dbscan, not twice). The frame is
         # ~2x the input — the same thing the kernel caches anyway.
         celled = celled.cache()
+        probed = celled.filter(F.col("is_near")) if fused else celled
         big_sizes = {
             int(r["cell"]): int(r["cnt"])
             for r in (
-                celled.groupBy("cell")
+                probed.groupBy("cell")
                 .agg(F.count(F.lit(1)).alias("cnt"))
                 .filter(F.col("cnt") > F.lit(int(block_fallback_rows)))
                 .collect()

@@ -194,8 +194,16 @@ def _eps_counts_sweep(A: np.ndarray, B: np.ndarray, eps2: float, eps: float) -> 
     return counts
 
 
+def _stack_rows(rows) -> np.ndarray:
+    """``(n, d)`` float64 matrix of ``n`` per-row coordinate arrays: one
+    concatenate over the Arrow-decoded rows, not one array per row."""
+    if len(rows) == 0:
+        return np.empty((0, 0), dtype=np.float64)
+    return np.concatenate(rows).astype(np.float64, copy=False).reshape(len(rows), -1)
+
+
 def _cell_matrix(pdf: pd.DataFrame) -> np.ndarray:
-    return np.asarray([np.asarray(v, dtype=np.float64) for v in pdf["xs"]], dtype=np.float64)
+    return _stack_rows(pdf["xs"].to_numpy())
 
 
 def _by_cell(celled: DataFrame):
@@ -559,7 +567,7 @@ def _unpack_block(row, prefix: str, cols: list[str]) -> list[np.ndarray]:
     for c in cols:
         vals = getattr(row, f"{prefix}{c}s_")
         if c == "xs":
-            out.append(np.asarray([np.asarray(v) for v in vals], dtype=np.float64))
+            out.append(_stack_rows(vals))
         else:
             out.append(np.asarray(list(vals), dtype=np.int64 if c == "id" else bool))
     return out

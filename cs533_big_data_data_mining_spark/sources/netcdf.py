@@ -29,6 +29,8 @@ from typing import Iterator
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark import TaskContext
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -213,17 +215,7 @@ def write_clusters_netcdf(
     ``single_file=True`` writes the reference's exact one-file shape,
     refusing above ``driver_row_cap``.  Returns the written file paths.
     """
-    d = len(df.select("xs").head()["xs"])
-    cols = [F.col("xs")[j].cast("float").alias(f"position_col_X{j}") for j in range(d)] + [
-        F.col("cluster_id").cast("int").alias("cluster_id")
-    ]
-    flat = df.select(*cols)
-    names = flat.columns
-
-    def to_cols(pdf: pd.DataFrame) -> list[tuple[str, np.ndarray]]:
-        return [
-            (c, pdf[c].to_numpy(np.float32 if c != "cluster_id" else np.int32)) for c in names
-        ]
+    flat = df.select("xs", F.col("cluster_id").cast("int").alias("cluster_id"))
 
     if single_file:
         total = flat.count()
@@ -232,29 +224,50 @@ def write_clusters_netcdf(
                 f"single_file netCDF write of {total} rows exceeds driver_row_cap="
                 f"{driver_row_cap}; use the partitioned sink (single_file=False)"
             )
-        buf = netcdf3_encode(to_cols(flat.toPandas()))
-        _commit_bytes(buf, path)
+        if total == 0:
+            raise ValueError(
+                "single_file netCDF write of an empty frame: a classic file needs one "
+                "position_col_X{j} variable per coordinate, and no row gives the count"
+            )
+        _commit_bytes(netcdf3_encode(_netcdf_columns(flat.toArrow())), path)
         return [path]
 
     os.makedirs(path, exist_ok=True)
 
-    def write_part(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        parts = [p for p in batches if len(p)]
+    def write_part(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        parts = [b for b in batches if b.num_rows]
         if not parts:
             return
-        pdf = pd.concat(parts, ignore_index=True)
+        table = pa.Table.from_batches(parts)
         pid = TaskContext.get().partitionId()
         fpath = os.path.join(path, f"part-{pid:05d}.nc")
-        _commit_bytes(netcdf3_encode(to_cols(pdf)), fpath)
-        yield pd.DataFrame({"path": [fpath], "rows": [np.int64(len(pdf))]})
+        _commit_bytes(netcdf3_encode(_netcdf_columns(table)), fpath)
+        yield pa.RecordBatch.from_pydict(
+            {"path": [fpath], "rows": [table.num_rows]},
+            schema=pa.schema([("path", pa.string()), ("rows", pa.int64())]),
+        )
 
-    summary = flat.mapInPandas(
-        write_part,
-        schema=T.StructType(
-            [T.StructField("path", T.StringType()), T.StructField("rows", T.LongType())]
-        ),
-    )
+    summary = flat.mapInArrow(write_part, schema="path string, rows long")
     return sorted(r["path"] for r in summary.collect())
+
+
+def _netcdf_columns(table: pa.Table) -> list[tuple[str, np.ndarray]]:
+    """``(xs, cluster_id)`` rows -> the reference's variables: one
+    float32 ``position_col_X{j}`` per coordinate plus int32
+    ``cluster_id``. The coordinate count comes from the Arrow list
+    lengths of these rows; rows of unequal length raise."""
+    xs = table.column("xs").combine_chunks()
+    lengths = pc.list_value_length(xs)
+    lo, hi = pc.min_max(lengths).values()
+    if lengths.null_count or lo != hi:
+        raise ValueError(
+            "netCDF sink: every xs must have the same length; got lengths "
+            f"{lo.as_py()}..{hi.as_py()} with {lengths.null_count} null rows"
+        )
+    d = lo.as_py()
+    mat = xs.flatten().to_numpy(zero_copy_only=False).reshape(len(xs), d).astype(np.float32)
+    cid = table.column("cluster_id").to_numpy().astype(np.int32)
+    return [(f"position_col_X{j}", mat[:, j]) for j in range(d)] + [("cluster_id", cid)]
 
 
 def read_clusters_netcdf(spark: SparkSession, path: str, batch_rows: int = 65536) -> DataFrame:

@@ -7,7 +7,9 @@ reference violates (``Progress-5-Nov-19.txt:15-29``).
 
 import numpy as np
 import pytest
+from pyspark.sql import functions as F
 
+from cs533_big_data_data_mining_spark.operators.cells import grid_from_stats
 from cs533_big_data_data_mining_spark.operators.dbscan import dbscan, dbscan_stats
 from tests.oracle import grid_centers, make_blobs, seq_dbscan
 
@@ -166,54 +168,102 @@ def test_degenerate_inputs(spark):
     assert (st["total_points"], st["n_clusters"], st["noise_count"]) == (50, 1, 0)
 
 
-def test_axis_count_selects_local_route(spark):
-    """The same 3-D blobs on a 2-axis grid (fused local phase) and on
-    the default 3-axis grid (two-pass) must both equal the oracle, and
-    a supplied spec with cell side <= 2*eps must take the two-pass
-    route (the fused route's 2*eps closure would reject it)."""
-    x = make_blobs(2500, 3, grid_centers(8, 3, 1.0), 0.004, seed=9, noise_frac=0.05)
-    a = run_and_compare(spark, x, 0.01, 5, max_grid_dims=2)
-    b = run_and_compare(spark, x, 0.01, 5)
-    assert np.array_equal(a, b)
+def test_local_routes_agree(spark):
+    """The same 3-D blobs on a 2-axis and on the default 3-axis grid
+    (cells ~50*eps: both fused), on a supplied spec with sides in
+    (2*eps, 5.7*eps) (ghost ratio >= 2: two-pass) and on a spec with
+    side <= 2*eps (no 2*eps closure: two-pass) must all equal the
+    oracle."""
+    from cs533_big_data_data_mining_spark.operators.cells import GridSpec, fuses_local_phase
 
+    x = make_blobs(2500, 3, grid_centers(8, 3, 1.0), 0.004, seed=9, noise_frac=0.05)
+    a2 = run_and_compare(spark, x, 0.01, 5, max_grid_dims=2)
+    a = run_and_compare(spark, x, 0.01, 5)
+    assert np.array_equal(a, a2)
+    narrow = GridSpec(eps=0.01, dims=(0, 1, 2), origin=(-0.05,) * 3, width=(0.05,) * 3, ncells=(22,) * 3)
+    thin = GridSpec(eps=0.01, dims=(0,), origin=(0.0,), width=(0.015,), ncells=(100,))
+    assert not fuses_local_phase(narrow) and not fuses_local_phase(thin)
+    b = run_and_compare(spark, x, 0.01, 5, spec=narrow)
+    c = run_and_compare(spark, x, 0.01, 5, spec=thin)
+    assert np.array_equal(a, b) and np.array_equal(a, c)
+
+
+def _spec(eps, widths):
     from cs533_big_data_data_mining_spark.operators.cells import GridSpec
 
-    thin = GridSpec(eps=0.01, dims=(0,), origin=(0.0,), width=(0.015,), ncells=(100,))
-    c = run_and_compare(spark, x, 0.01, 5, spec=thin)
-    assert np.array_equal(b, c)
+    k = len(widths)
+    return GridSpec(eps=eps, dims=tuple(range(k)), origin=(0.0,) * k, width=tuple(widths), ncells=(3,) * k)
+
+
+# (id, spec, fuses); R = prod (w + 4eps)/(w + 2eps) in the comments
+_SELECTOR_CASES = [
+    ("k1_wf4", _spec(1.0, [4.0]), True),  # R = 1.33
+    ("k2_wf4", _spec(1.0, [4.0] * 2), True),  # R = 1.78
+    ("k3_wf4", _spec(1.0, [4.0] * 3), False),  # R = 2.37
+    # points3d_io's grid at seed 7: sides ~85*eps, R = 1.07
+    ("k3_points3d_io", _spec(0.4, [34.186, 34.140, 34.025]), True),
+    # the 3M uniform smoke's own grid (bench.py): 9^3 cells of 11.1*eps, R = 1.53
+    ("k3_smoke3m", grid_from_stats(3_000_000, [0.0] * 3, [99.9999] * 3, 1.0, 4), True),
+    ("k3_side_5.6eps", _spec(1.0, [5.6] * 3), False),  # R = 2.015
+    ("k3_side_5.8eps", _spec(1.0, [5.8] * 3), True),  # R = 1.983
+    ("side_2eps", _spec(1.0, [2.0]), False),  # no 2*eps closure
+    ("one_side_2eps", _spec(1.0, [100.0, 2.0]), False),
+    ("no_axes", _spec(1.0, []), True),  # one cell, R = 1
+]
+
+
+@pytest.mark.parametrize("spec,fuses", [c[1:] for c in _SELECTOR_CASES], ids=[c[0] for c in _SELECTOR_CASES])
+def test_local_route_selector(spec, fuses):
+    """Fuse iff every side > 2*eps and the 2*eps/eps ghost-row ratio
+    is below 2."""
+    from cs533_big_data_data_mining_spark.operators.cells import fuses_local_phase
+
+    assert fuses_local_phase(spec) is fuses
 
 
 ROUTE_EPS, ROUTE_MIN_PTS, ROUTE_GATE = 1.2, 5, 800
+# id -> (d, span, background rows, width_factor). The two 100-span
+# shapes get cells ~50 wide (~42*eps): ghost ratio ~1.1, fused. The
+# 12-span shape at width_factor=2 gets cells ~6 wide (~5*eps): ratio
+# ~2.1, two-pass.
+_ROUTE_SHAPES = {
+    "2d_fused": (2, 100.0, 1200, 4.0),
+    "3d_fused": (3, 100.0, 1200, 4.0),
+    "3d_two_pass": (3, 12.0, 300, 2.0),
+}
 _ROUTE_DATA: dict = {}
 
 
-def _route_data(d: int):
-    """Uniform background over [0, 100]^d, one dense blob inside the
-    first cell of the 2^d row-budget grid (cells of side ~50) and a
-    smaller blob in the last: at ``block_fallback_rows=ROUTE_GATE``
-    exactly one cell is oversized. Returns ``(x, oracle labels)``."""
-    if d not in _ROUTE_DATA:
+def _route_data(shape: str):
+    """Uniform background over [0, span]^d, one dense blob inside the
+    first cell of the 2^d row-budget grid and a smaller blob in the
+    last: at ``block_fallback_rows=ROUTE_GATE`` exactly one cell is
+    oversized. Returns ``(x, oracle labels)``."""
+    if shape not in _ROUTE_DATA:
+        d, span, n_bg, _wf = _ROUTE_SHAPES[shape]
         rng = np.random.default_rng(29)
         x = np.concatenate(
             [
-                rng.uniform(0.0, 100.0, size=(1200, d)),
-                rng.normal(25.0, 0.4, size=(1000, d)),
-                rng.normal(75.0, 0.4, size=(300, d)),
+                rng.uniform(0.0, span, size=(n_bg, d)),
+                rng.normal(span / 4, 0.4, size=(1000, d)),
+                rng.normal(3 * span / 4, 0.4, size=(300, d)),
             ]
         )
-        _ROUTE_DATA[d] = (x, seq_dbscan(x, ROUTE_EPS, ROUTE_MIN_PTS))
-    return _ROUTE_DATA[d]
+        _ROUTE_DATA[shape] = (x, seq_dbscan(x, ROUTE_EPS, ROUTE_MIN_PTS))
+    return _ROUTE_DATA[shape]
 
 
 @pytest.mark.parametrize("labels", ["driver", "distributed"])
 @pytest.mark.parametrize("oversized", [False, True], ids=["no_oversized", "one_oversized"])
-@pytest.mark.parametrize("d", [2, 3], ids=["2d_fused", "3d_two_pass"])
-def test_route_matrix_matches_oracle(spark, d, oversized, labels):
-    """Every local route the input can select: {2-D -> fused, 3-D ->
-    two-pass} x {no oversized cell, one oversized cell -> block pairs}
-    x {driver labels, distributed CC + labels}."""
-    x, want = _route_data(d)
-    kw = {"block_fallback_rows": ROUTE_GATE} if oversized else {}
+@pytest.mark.parametrize("shape", list(_ROUTE_SHAPES))
+def test_route_matrix_matches_oracle(spark, shape, oversized, labels):
+    """Every local route the input can select: {fused, two-pass} x {no
+    oversized cell, one oversized cell -> block pairs} x {driver
+    labels, distributed CC + labels}."""
+    x, want = _route_data(shape)
+    kw = {"width_factor": _ROUTE_SHAPES[shape][3]}
+    if oversized:
+        kw["block_fallback_rows"] = ROUTE_GATE
     if labels == "distributed":
         kw.update(driver_label_rows=0, cc_driver_fastpath_edges=0)
     df = to_points_df(spark, x)
@@ -222,19 +272,51 @@ def test_route_matrix_matches_oracle(spark, d, oversized, labels):
     assert np.array_equal(got_arr, want), f"{int((got_arr != want).sum())}/{len(x)} points differ"
 
 
-@pytest.mark.parametrize("d", [2, 3])
-def test_route_matrix_data_shape(spark, d):
-    """The route matrix's data has d grid axes (<= 2 fuses, 3 does
-    not) and exactly one cell above the block gate."""
-    from cs533_big_data_data_mining_spark.operators.cells import choose_grid, ghost_expand
+@pytest.mark.parametrize("shape", list(_ROUTE_SHAPES))
+def test_route_matrix_data_shape(spark, shape):
+    """Each route-matrix shape selects the route its id names, and has
+    exactly one cell above the block gate (counted over the eps rows,
+    which is what the skew probe counts on either route)."""
+    from cs533_big_data_data_mining_spark.operators.cells import choose_grid, fuses_local_phase, ghost_expand
 
-    x, want = _route_data(d)
+    d, _span, _n_bg, wf = _ROUTE_SHAPES[shape]
+    x, want = _route_data(shape)
     assert want.max() >= 2 and (want == 0).any()
     pts = to_points_df(spark, x)
-    spec = choose_grid(pts, d, ROUTE_EPS)
+    spec = choose_grid(pts, d, ROUTE_EPS, width_factor=wf)
     assert len(spec.dims) == d
+    assert fuses_local_phase(spec) is shape.endswith("_fused")
     sizes = [r["count"] for r in ghost_expand(pts, spec).groupBy("cell").count().collect()]
     assert sum(n > ROUTE_GATE for n in sizes) == 1 and len(sizes) > 1
+
+
+def test_fused_probe_counts_near_rows_only(spark, monkeypatch):
+    """On the fused route the skew probe sizes a cell by its near rows
+    (what the block-pair route would consume), not by the 2*eps frame:
+    with the gate between a cell's near-row count and its 2*eps-row
+    count, no cell may take the block-pair route."""
+    from cs533_big_data_data_mining_spark.operators import dbscan as dbscan_mod
+    from cs533_big_data_data_mining_spark.operators.cells import choose_grid, fuses_local_phase, ghost_expand
+
+    x, want = _route_data("2d_fused")
+    pts = to_points_df(spark, x)
+    spec = choose_grid(pts, 2, ROUTE_EPS)
+    assert fuses_local_phase(spec)
+    per_cell = (
+        ghost_expand(pts, spec, reach=2)
+        .groupBy("cell")
+        .agg(F.count(F.lit(1)).alias("rows"), F.sum(F.col("is_near").cast("int")).alias("near"))
+        .collect()
+    )
+    gate = max(r["near"] for r in per_cell)
+    assert max(r["rows"] for r in per_cell) > gate and len(x) > gate
+
+    def no_block_pairs(*args, **kwargs):
+        raise AssertionError("a cell under the near-row gate took the block-pair route")
+
+    monkeypatch.setattr(dbscan_mod, "cell_block_neighbor_counts", no_block_pairs)
+    got = {r["id"]: r["cluster_id"] for r in dbscan(pts, ROUTE_EPS, ROUTE_MIN_PTS, block_fallback_rows=gate).collect()}
+    assert np.array_equal(np.array([got[i] for i in range(len(x))]), want)
 
 
 def _dsu_labels(u, v, n):

@@ -297,3 +297,16 @@ def test_ghost_expand_four_axes_matches_numpy(spark):
         want = _np_ghost_rows(x, spec, reach)
         assert len(got) > len(x)
         assert got == want, f"reach={reach}: {len(got)} rows vs {len(want)} expected"
+
+
+def test_cell_matrix_stacks_rows():
+    """The kernels' input matrix: one float64 row per ``xs`` entry, equal
+    to a per-row build, and a 0-row matrix for an empty batch."""
+    import pandas as pd
+
+    from cs533_big_data_data_mining_spark.operators.neighbors import _cell_matrix
+
+    x = np.random.default_rng(2).normal(size=(7, 3))
+    got = _cell_matrix(pd.DataFrame({"xs": [row.copy() for row in x]}))
+    assert got.dtype == np.float64 and np.array_equal(got, x)
+    assert _cell_matrix(pd.DataFrame({"xs": []})).shape[0] == 0

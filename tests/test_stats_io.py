@@ -272,6 +272,33 @@ def test_netcdf_single_file_row_cap(spark):
         assert "driver_row_cap" in str(e)
 
 
+def test_netcdf_sink_empty_frame(spark, tmp_path):
+    """An empty frame writes no part from the partitioned sink and is a
+    named error from the single-file sink (no row gives the number of
+    coordinates)."""
+    from cs533_big_data_data_mining_spark.sources.netcdf import write_clusters_netcdf
+
+    empty = spark.createDataFrame([], "id long, xs array<double>, cluster_id long")
+    assert write_clusters_netcdf(empty, str(tmp_path / "parts")) == []
+    with pytest.raises(ValueError, match="empty frame"):
+        write_clusters_netcdf(empty, str(tmp_path / "one.nc"), single_file=True)
+    assert not os.path.exists(tmp_path / "one.nc")
+
+
+def test_netcdf_sink_ragged_xs_raises(spark, tmp_path):
+    """Rows whose ``xs`` differ in length cannot share one set of
+    ``position_col_X{j}`` variables: both sinks raise, naming ``xs``."""
+    from cs533_big_data_data_mining_spark.sources.netcdf import write_clusters_netcdf
+
+    ragged = spark.createDataFrame(
+        [(0, [1.0, 2.0], 1), (1, [3.0], 1)], "id long, xs array<double>, cluster_id long"
+    ).coalesce(1)
+    with pytest.raises(ValueError, match="xs must have the same length"):
+        write_clusters_netcdf(ragged, str(tmp_path / "one.nc"), single_file=True)
+    with pytest.raises(Exception, match="xs must have the same length"):
+        write_clusters_netcdf(ragged, str(tmp_path / "parts"))
+
+
 def test_cli_netcdf_output(spark, tmp_path):
     from cs533_big_data_data_mining_spark.__main__ import main
     from cs533_big_data_data_mining_spark.sources.netcdf import netcdf3_decode
