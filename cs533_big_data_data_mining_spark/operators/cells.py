@@ -62,22 +62,6 @@ class GridSpec:
         return math.prod(self.ncells) if self.ncells else 1
 
 
-def fuses_local_phase(spec: GridSpec) -> bool:
-    """The DBSCAN local-phase route, from the grid alone. A point ghosts
-    into a neighbor cell along axis i when it lies within ``reach*eps``
-    of that side, so the ``reach=2`` frame holds
-    ``R = prod_i (w_i + 4eps)/(w_i + 2eps)`` times the rows of the
-    ``reach=1`` frame. The fused route ships that 2*eps frame through
-    the kernel once (R*E rows); the two-pass route ships the eps frame
-    twice (2*E rows) plus an ``is_core`` join. Fuse iff the 2*eps
-    closure exists (every side > 2*eps, see ``ghost_expand``) and
-    R < 2: a cost model over rows shipped, not a tuned constant."""
-    e = spec.eps
-    if any(w <= 2.0 * e for w in spec.width):
-        return False
-    return math.prod((w + 4.0 * e) / (w + 2.0 * e) for w in spec.width) < 2.0
-
-
 def grid_stats(points: DataFrame, dims: int | None = None) -> tuple[int, list[float], list[float]]:
     """ONE data pass -> ``(n_rows, mins, maxs)`` (per-coordinate).
 
@@ -147,10 +131,11 @@ def grid_from_stats(
     into per-group-overhead-dominated confetti).
 
     Cell sides stay >= ``width_factor * eps`` (>= eps is required for
-    ghost closure), so an axis narrower than ``3 * width_factor * eps``
-    is dropped. With zero usable axes the grid is a single cell
-    (correct, just less parallel) — skew routing then block-splits it
-    (SURVEY §7 Phase D).
+    ghost closure; the default 4 also keeps every side above the 2*eps
+    that ``ghost_expand(reach=2)`` needs, which ``dbscan`` relies on),
+    so an axis narrower than ``3 * width_factor * eps`` is dropped.
+    With zero usable axes the grid is a single cell (correct, just less
+    parallel) — skew routing then block-splits it (SURVEY §7 Phase D).
     """
     if width_factor < 1.0:
         raise ValueError("width_factor must be >= 1 (cell side must be >= eps)")

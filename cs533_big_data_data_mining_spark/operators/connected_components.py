@@ -26,8 +26,12 @@ from pyspark.sql import functions as F
 # Below this many edges the fixpoint finishes on the driver: the
 # star-edge graph is already cell-contracted (a few rows per core
 # point), so for moderate inputs the distributed rounds are pure
-# scheduling latency. Same size-gated hybrid GraphFrames applies.
+# scheduling latency. Same size-gated hybrid GraphFrames applies. Read
+# at call time, so tests can patch it to force the distributed path.
 DRIVER_FASTPATH_EDGES = 5_000_000
+
+# star rounds before the distributed path gives up (O(log^2 n) needed)
+MAX_ITERATIONS = 50
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -106,13 +110,7 @@ def _driver_union(e: DataFrame) -> DataFrame:
     return df
 
 
-def connected_components(
-    edges: DataFrame,
-    max_iterations: int = 50,
-    checkpoint_every: int = 1,
-    driver_fastpath_edges: int = DRIVER_FASTPATH_EDGES,
-    edge_count_hint: int | None = None,
-) -> DataFrame:
+def connected_components(edges: DataFrame, edge_count_hint: int | None = None) -> DataFrame:
     """Edge list ``(src, dst)`` -> ``(node, component)`` with
     ``component`` = min node id in the component. Nodes appearing only
     as isolated (no edges) must be handled by the caller (self-label).
@@ -124,23 +122,20 @@ def connected_components(
     count).
     """
     e_raw = edges.filter(F.col("src") != F.col("dst"))
-    cnt = edge_count_hint if edge_count_hint is not None else None
-    if driver_fastpath_edges:
-        if cnt is None:
-            cnt = e_raw.count()
-        if cnt <= driver_fastpath_edges:
-            # no distinct and no checkpoint: duplicate edges are
-            # harmless to the local union (np.unique dedups node ids;
-            # repeated (u, v) rows are idempotent min-updates), so the
-            # fastpath skips the whole dedup shuffle and toPandas pulls
-            # the raw filtered edges
-            return _driver_union(e_raw)
+    cnt = edge_count_hint if edge_count_hint is not None else e_raw.count()
+    if cnt <= DRIVER_FASTPATH_EDGES:
+        # no distinct and no checkpoint: duplicate edges are harmless
+        # to the local union (np.unique dedups node ids; repeated
+        # (u, v) rows are idempotent min-updates), so the fastpath
+        # skips the whole dedup shuffle and toPandas pulls the raw
+        # filtered edges
+        return _driver_union(e_raw)
     e = e_raw.distinct().localCheckpoint(eager=True)
     prev_sig = None
-    for it in range(max_iterations):
-        e = _small_star(_large_star(e))
-        if checkpoint_every and (it + 1) % checkpoint_every == 0:
-            e = e.localCheckpoint(eager=True)
+    for _ in range(MAX_ITERATIONS):
+        # checkpoint every round: the star lineage would otherwise grow
+        # by two shuffles per round
+        e = _small_star(_large_star(e)).localCheckpoint(eager=True)
         sig = e.agg(
             F.count(F.lit(1)).alias("n"),
             F.coalesce(F.bit_xor(F.xxhash64("src", "dst")), F.lit(0)).alias("h"),
@@ -150,7 +145,7 @@ def connected_components(
             break
         prev_sig = cur_sig
     else:
-        raise RuntimeError(f"connected_components did not converge in {max_iterations} rounds")
+        raise RuntimeError(f"connected_components did not converge in {MAX_ITERATIONS} rounds")
 
     # After convergence every edge is (node -> component root).
     comp = e.select(F.col("src").alias("node"), F.col("dst").alias("component"))

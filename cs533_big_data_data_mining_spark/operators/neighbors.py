@@ -250,10 +250,7 @@ def fused_local_phase(celled2: DataFrame, eps: float, min_pts: int) -> DataFrame
     every row that eps-touches the cell ("near": home + classic
     ghosts) has its full eps-neighborhood present, so its coreness is
     locally decidable and no ``is_core`` join or second kernel pass is
-    needed. Does the work of ``neighbor_counts`` + flags-join +
-    ``local_components_and_borders`` (which shipped the ghost frame
-    through Arrow twice; SCALE.md round-10 profile: ~90% of the part64
-    local phase was that structural overhead).
+    needed: the ghost frame crosses Arrow once.
 
     Input ``(cell, id, xs, is_home, is_near)``; output ``(kind, a, b)``:
 
@@ -270,9 +267,8 @@ def fused_local_phase(celled2: DataFrame, eps: float, min_pts: int) -> DataFrame
     * kind=2 — ``(home id, n_neighbors)``: the exact neighbor count
       (self inclusive), same values as ``neighbor_counts``.
 
-    Semantics are bit-identical to the two-pass path: same strip-sweep
-    pairs kernel, same exact-f64 boundary predicate, and every
-    reduction downstream is a min.
+    The same strip-sweep pairs kernel and exact-f64 boundary predicate
+    as ``neighbor_counts``; every reduction downstream is a min.
     """
     eps2 = float(eps) * float(eps)
     mp = int(min_pts)
@@ -308,7 +304,7 @@ def fused_local_phase(celled2: DataFrame, eps: float, min_pts: int) -> DataFrame
         # (pairs with both ends near appear in both orientations; keep
         # u < v once — also drops self pairs). Non-core nodes stay
         # singletons, so root_ids over cores = min core id per local
-        # core component, exactly local_components_and_borders's roots.
+        # core component.
         u, v = ai[core_hit], bq[core_hit]
         keep = u < v
         labels = min_label_union(u[keep], v[keep], nq)
@@ -624,8 +620,8 @@ def cell_block_neighbor_counts(
 def cell_block_components_and_borders(
     big_flagged: DataFrame, sizes: dict[int, int], eps: float, block_rows: int = 2048
 ) -> DataFrame:
-    """Block-pair twin of ``local_components_and_borders`` for
-    oversized cells. Input ``(cell, id, xs, is_home, is_core)``;
+    """Block-pair twin of ``fused_local_phase``'s edge and border rows
+    for oversized cells. Input ``(cell, id, xs, is_home, is_core)``;
     output rows ``(kind, a, b)``:
 
     * kind=0: task-contracted core connectivity (a < b): each block
@@ -696,64 +692,3 @@ def cell_block_components_and_borders(
 
     pairs = _same_cell_block_pairs(big_flagged, sizes, block_rows, cols)
     return _map_pairs(pairs, pair_edges, _KAB)
-
-
-def local_components_and_borders(celled_flagged: DataFrame, eps: float) -> DataFrame:
-    """Per-cell DBSCAN phase 2 (op 9's union half + edge emission for
-    op 10). Input: ghost-expanded frame with ``is_core`` —
-    ``(cell, id, xs, is_home, is_core)``. Output rows, two kinds:
-
-    * ``kind=0`` (star edge): ``(a=core id, b=its local component
-      min-core-id)`` for every core in the cell — the contracted
-      union-find result. Cross-cell connectivity survives because a
-      core appearing in several cells emits one star edge per cell;
-      the global connected-components pass stitches them.
-    * ``kind=1`` (border candidate): ``(a=non-core home id, b=local
-      root of an adjacent core)``, distinct per (a, b).
-
-    This replaces the reference's REMS union-find with splicing
-    (``dbscan.cpp:753-791``) and its cross-rank merge buffers
-    (``:745-751``): the in-cell union is a vectorized min-label
-    pointer-doubling loop (O(E) per round, O(log n) rounds), and the
-    merge buffers become ordinary shuffle rows.
-    """
-    eps2 = float(eps) * float(eps)
-
-    def kernel(pdf: pd.DataFrame) -> pd.DataFrame:
-        ids = pdf["id"].to_numpy()
-        core = pdf["is_core"].to_numpy(dtype=bool)
-        home = pdf["is_home"].to_numpy(dtype=bool)
-        x = _cell_matrix(pdf)
-
-        cx, cid = x[core], ids[core]
-        nc = cx.shape[0]
-        frames = []
-
-        if nc:
-            # core-core adjacency -> local min-label union
-            u, v = _eps_pairs_sweep(cx, cx, eps2, float(eps))
-            keep = u < v
-            labels = min_label_union(u[keep], v[keep], nc)
-            # component label -> min member id (rows arrive in arbitrary
-            # order, so index-min is not id-min; reduce explicitly)
-            minid = np.full(nc, np.iinfo(np.int64).max)
-            np.minimum.at(minid, labels, cid)
-            root_ids = minid[labels]
-            frames.append(pd.DataFrame({"kind": 0, "a": cid, "b": root_ids}))
-
-            # border candidates: non-core HOME points adjacent to a core
-            bmask = home & ~core
-            bx, bid = x[bmask], ids[bmask]
-            if bx.shape[0]:
-                ai, ci = _eps_pairs_sweep(bx, cx, eps2, float(eps))
-                if ai.size:
-                    uniq = pd.DataFrame(
-                        {"kind": 1, "a": bid[ai], "b": root_ids[ci]}
-                    ).drop_duplicates()
-                    frames.append(uniq)
-
-        if not frames:
-            return _empty_kab()
-        return pd.concat(frames, ignore_index=True)
-
-    return _by_cell(celled_flagged).applyInPandas(kernel, schema=_KAB)

@@ -8,6 +8,7 @@ master URL, which callers override in production.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import weakref
@@ -71,16 +72,38 @@ def _package_zip() -> str:
     Local mode spawns Python workers from the JVM, and on a real
     cluster executors live on other hosts — either way the package
     must travel with the session, not rely on the driver's cwd.
+
+    The zip is named by a hash of the packaged sources and written
+    once: a temp file renamed into place, skipped when the file
+    exists. Sessions on one host therefore never rewrite an archive
+    that another session's workers import from, and an unchanged
+    archive keeps its mtime, so workers need not re-read it.
     """
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     root = os.path.dirname(pkg_dir)
-    out = os.path.join(tempfile.gettempdir(), "cs533_big_data_data_mining_spark.zip")
-    with zipfile.ZipFile(out, "w", zipfile.ZIP_STORED) as zf:
-        for dirpath, _dirnames, filenames in os.walk(pkg_dir):
-            for fn in filenames:
-                if fn.endswith(".py"):
-                    full = os.path.join(dirpath, fn)
-                    zf.write(full, os.path.relpath(full, root))
+    sources = sorted(
+        os.path.join(dirpath, fn)
+        for dirpath, _dirnames, filenames in os.walk(pkg_dir)
+        for fn in filenames
+        if fn.endswith(".py")
+    )
+    digest = hashlib.sha256()
+    for full in sources:
+        with open(full, "rb") as f:
+            digest.update(os.path.relpath(full, root).encode() + b"\0" + f.read() + b"\0")
+    out = os.path.join(tempfile.gettempdir(), f"cs533_big_data_data_mining_spark-{digest.hexdigest()[:16]}.zip")
+    if os.path.exists(out):
+        return out
+    fd, tmp = tempfile.mkstemp(suffix=".zip.tmp", dir=os.path.dirname(out))
+    try:
+        with os.fdopen(fd, "wb") as f, zipfile.ZipFile(f, "w", zipfile.ZIP_STORED) as zf:
+            for full in sources:
+                zf.write(full, os.path.relpath(full, root))
+        os.chmod(tmp, 0o644)  # mkstemp's 0600 would hide it from other users' sessions
+        os.replace(tmp, out)
+    except BaseException:
+        os.unlink(tmp)
+        raise
     return out
 
 

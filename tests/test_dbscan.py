@@ -5,10 +5,16 @@ stats row, and partition-count invariance — the exact property the
 reference violates (``Progress-5-Nov-19.txt:15-29``).
 """
 
+import itertools
+
 import numpy as np
 import pytest
+from hypothesis import given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from cs533_big_data_data_mining_spark.operators import connected_components as cc_mod
+from cs533_big_data_data_mining_spark.operators import dbscan as dbscan_mod
 from cs533_big_data_data_mining_spark.operators.cells import grid_from_stats
 from cs533_big_data_data_mining_spark.operators.dbscan import dbscan, dbscan_stats
 from tests.oracle import grid_centers, make_blobs, seq_dbscan
@@ -19,11 +25,11 @@ def to_points_df(spark, x: np.ndarray):
     return spark.createDataFrame(rows, "id long, xs array<double>")
 
 
-def run_and_compare(spark, x, eps, min_pts, partitions=None, **kw):
+def run_and_compare(spark, x, eps, min_pts, partitions=None):
     df = to_points_df(spark, x)
     if partitions:
         df = df.repartition(partitions)
-    got = {r["id"]: r["cluster_id"] for r in dbscan(df, eps, min_pts, **kw).collect()}
+    got = {r["id"]: r["cluster_id"] for r in dbscan(df, eps, min_pts).collect()}
     want = seq_dbscan(x, eps, min_pts)
     got_arr = np.array([got[i] for i in range(len(x))], dtype=np.int64)
     assert np.array_equal(got_arr, want), (
@@ -48,26 +54,34 @@ def test_dbscan_matches_oracle(spark, name, n, d, k, spacing, std, eps, min_pts,
     run_and_compare(spark, x, eps, min_pts)
 
 
-def test_distributed_cc_path(spark):
-    """Force the star-algorithm CC path: BOTH driver fast paths
-    disabled (driver_label_rows=0 keeps the label fastpath from
-    returning before CC runs — without it the cc_driver_fastpath_edges
-    knob is never reached) — must produce identical labels."""
+def force_distributed_labels(monkeypatch):
+    """Disable BOTH driver fast paths: the label fastpath would return
+    before connected_components runs, so the CC gate alone is never
+    reached."""
+    monkeypatch.setattr(dbscan_mod, "DRIVER_LABEL_FASTPATH_ROWS", 0)
+    monkeypatch.setattr(cc_mod, "DRIVER_FASTPATH_EDGES", 0)
+
+
+def test_distributed_cc_path(spark, monkeypatch):
+    """Force the star-algorithm CC path — must produce identical
+    labels."""
     x = make_blobs(1200, 2, grid_centers(5, 2, 40.0), 0.6, seed=17, noise_frac=0.08)
-    a = run_and_compare(spark, x, 0.4, 8, cc_driver_fastpath_edges=0, driver_label_rows=0)
     b = run_and_compare(spark, x, 0.4, 8)
+    force_distributed_labels(monkeypatch)
+    a = run_and_compare(spark, x, 0.4, 8)
     assert np.array_equal(a, b)
 
 
-def test_distributed_label_path_no_serial_stage(spark):
+def test_distributed_label_path_no_serial_stage(spark, monkeypatch):
     """The distributed labeling path must contain no single-partition
     exchange and no global window (round-3 verdict #4: dense ids were
-    a row_number over one partition; now a range-partitioned
-    zipWithIndex)."""
+    a row_number over one partition; dense_index now numbers rows with
+    a row_number window keyed on a value-derived bucket)."""
     from cs533_big_data_data_mining_spark.plans.audit import _plan_text
 
     x = make_blobs(1000, 2, grid_centers(4, 2, 40.0), 0.6, seed=23, noise_frac=0.05)
-    labeled = dbscan(to_points_df(spark, x), 0.4, 8, driver_label_rows=0)
+    monkeypatch.setattr(dbscan_mod, "DRIVER_LABEL_FASTPATH_ROWS", 0)
+    labeled = dbscan(to_points_df(spark, x), 0.4, 8)
     txt = _plan_text(labeled, "formatted")
     # dense numbering may use a WINDOW, but only keyed on the
     # value-derived bucket — never a single-partition exchange
@@ -85,15 +99,6 @@ def test_partition_invariance(spark):
         if ref is None:
             ref = got
         assert np.array_equal(got, ref), f"labels differ at {p} partitions"
-
-
-def test_grid_width_invariance(spark):
-    """Result must not depend on the physical grid choice."""
-    x = make_blobs(800, 2, grid_centers(4, 2, 25.0), 0.5, seed=3, noise_frac=0.1)
-    for wf in (1.0, 2.0, 4.0, 16.0):
-        run_and_compare(spark, x, 0.35, 6, width_factor=wf)
-    # degenerate single-cell grid (eps wider than the data)
-    run_and_compare(spark, x, 0.35, 6, max_grid_dims=0)
 
 
 def test_stats_row(spark):
@@ -118,7 +123,7 @@ def test_sampling_wired(spark):
     assert labeled2.count() == n  # seeded => reproducible
 
 
-def test_skewed_dense_cell_keeps_grid(spark):
+def test_skewed_dense_cell_keeps_grid(spark, monkeypatch):
     """One dense blob over a uniform background (round-1 verdict
     finding #1): the blob's cells exceed the gate and get block-pair
     treatment, the background keeps the grid kernel — never a
@@ -129,10 +134,12 @@ def test_skewed_dense_cell_keeps_grid(spark):
     # of side ~50), so exactly one cell is oversized
     blob = rng.normal(25.0, 0.4, size=(1500, 2))
     x = np.concatenate([bg, blob])
-    got = run_and_compare(spark, x, 1.2, 5, block_fallback_rows=800)
+    monkeypatch.setattr(dbscan_mod, "BLOCK_FALLBACK_ROWS", 800)
+    got = run_and_compare(spark, x, 1.2, 5)
     # same labels as the pure-grid path (gate high enough that no cell
     # is oversized)
-    ref = run_and_compare(spark, x, 1.2, 5, block_fallback_rows=10**9)
+    monkeypatch.setattr(dbscan_mod, "BLOCK_FALLBACK_ROWS", 10**9)
+    ref = run_and_compare(spark, x, 1.2, 5)
     assert np.array_equal(got, ref)
 
     # structural: the probe must see a MIXED cell population — the
@@ -168,87 +175,66 @@ def test_degenerate_inputs(spark):
     assert (st["total_points"], st["n_clusters"], st["noise_count"]) == (50, 1, 0)
 
 
-def test_local_routes_agree(spark):
-    """The same 3-D blobs on a 2-axis and on the default 3-axis grid
-    (cells ~50*eps: both fused), on a supplied spec with sides in
-    (2*eps, 5.7*eps) (ghost ratio >= 2: two-pass) and on a spec with
-    side <= 2*eps (no 2*eps closure: two-pass) must all equal the
-    oracle."""
-    from cs533_big_data_data_mining_spark.operators.cells import GridSpec, fuses_local_phase
-
-    x = make_blobs(2500, 3, grid_centers(8, 3, 1.0), 0.004, seed=9, noise_frac=0.05)
-    a2 = run_and_compare(spark, x, 0.01, 5, max_grid_dims=2)
-    a = run_and_compare(spark, x, 0.01, 5)
-    assert np.array_equal(a, a2)
-    narrow = GridSpec(eps=0.01, dims=(0, 1, 2), origin=(-0.05,) * 3, width=(0.05,) * 3, ncells=(22,) * 3)
-    thin = GridSpec(eps=0.01, dims=(0,), origin=(0.0,), width=(0.015,), ncells=(100,))
-    assert not fuses_local_phase(narrow) and not fuses_local_phase(thin)
-    b = run_and_compare(spark, x, 0.01, 5, spec=narrow)
-    c = run_and_compare(spark, x, 0.01, 5, spec=thin)
-    assert np.array_equal(a, b) and np.array_equal(a, c)
+@pytest.fixture(scope="module")
+def one_point_6d(spark):
+    return to_points_df(spark, np.zeros((1, 6)))
 
 
-def _spec(eps, widths):
-    from cs533_big_data_data_mining_spark.operators.cells import GridSpec
+@settings(max_examples=200, deadline=None)
+@given(
+    n=st.integers(1, 10**9),
+    spans=st.lists(st.one_of(st.just(0.0), st.floats(1e-6, 1e6)), min_size=1, max_size=6),
+    lo=st.floats(-1e6, 1e6),
+    eps=st.floats(1e-4, 1e3),
+    parallelism=st.integers(1, 256),
+)
+def test_default_grid_has_2eps_closure(one_point_6d, n, spans, lo, eps, parallelism):
+    """dbscan() runs its whole local phase over the 2*eps ghost frame,
+    which needs every cell side > 2*eps. grid_from_stats's defaults
+    keep every side >= 4*eps (up to float rounding of the division),
+    so ghost_expand(reach=2) accepts every grid dbscan() builds."""
+    from cs533_big_data_data_mining_spark.operators.cells import ghost_expand
 
-    k = len(widths)
-    return GridSpec(eps=eps, dims=tuple(range(k)), origin=(0.0,) * k, width=tuple(widths), ncells=(3,) * k)
-
-
-# (id, spec, fuses); R = prod (w + 4eps)/(w + 2eps) in the comments
-_SELECTOR_CASES = [
-    ("k1_wf4", _spec(1.0, [4.0]), True),  # R = 1.33
-    ("k2_wf4", _spec(1.0, [4.0] * 2), True),  # R = 1.78
-    ("k3_wf4", _spec(1.0, [4.0] * 3), False),  # R = 2.37
-    # points3d_io's grid at seed 7: sides ~85*eps, R = 1.07
-    ("k3_points3d_io", _spec(0.4, [34.186, 34.140, 34.025]), True),
-    # the 3M uniform smoke's own grid (bench.py): 9^3 cells of 11.1*eps, R = 1.53
-    ("k3_smoke3m", grid_from_stats(3_000_000, [0.0] * 3, [99.9999] * 3, 1.0, 4), True),
-    ("k3_side_5.6eps", _spec(1.0, [5.6] * 3), False),  # R = 2.015
-    ("k3_side_5.8eps", _spec(1.0, [5.8] * 3), True),  # R = 1.983
-    ("side_2eps", _spec(1.0, [2.0]), False),  # no 2*eps closure
-    ("one_side_2eps", _spec(1.0, [100.0, 2.0]), False),
-    ("no_axes", _spec(1.0, []), True),  # one cell, R = 1
-]
-
-
-@pytest.mark.parametrize("spec,fuses", [c[1:] for c in _SELECTOR_CASES], ids=[c[0] for c in _SELECTOR_CASES])
-def test_local_route_selector(spec, fuses):
-    """Fuse iff every side > 2*eps and the 2*eps/eps ghost-row ratio
-    is below 2."""
-    from cs533_big_data_data_mining_spark.operators.cells import fuses_local_phase
-
-    assert fuses_local_phase(spec) is fuses
+    mins = [lo] * len(spans)
+    maxs = [lo + w for w in spans]
+    spec = grid_from_stats(n, mins, maxs, eps, parallelism)
+    assert all(w >= 4.0 * eps * (1 - 1e-12) for w in spec.width), spec
+    ghost_expand(one_point_6d, spec, reach=2)
 
 
 ROUTE_EPS, ROUTE_MIN_PTS, ROUTE_GATE = 1.2, 5, 800
-# id -> (d, span, background rows, width_factor). The two 100-span
-# shapes get cells ~50 wide (~42*eps): ghost ratio ~1.1, fused. The
-# 12-span shape at width_factor=2 gets cells ~6 wide (~5*eps): ratio
-# ~2.1, two-pass.
+# id -> (d, span, background rows, rows of each lattice blob). The two
+# 100-span shapes get cells ~50 wide (~42*eps): 2*eps/eps ghost-row
+# ratio R ~1.1. 3d_narrow has enough rows for a 3^3 grid, whose cells
+# ~5.3 wide (~4.4*eps) give R ~2.3, near the 2.37 bound of a 4*eps
+# side.
 _ROUTE_SHAPES = {
-    "2d_fused": (2, 100.0, 1200, 4.0),
-    "3d_fused": (3, 100.0, 1200, 4.0),
-    "3d_two_pass": (3, 12.0, 300, 2.0),
+    "2d_fused": (2, 100.0, 1200, 0),
+    "3d_fused": (3, 100.0, 1200, 0),
+    "3d_narrow": (3, 16.0, 300, 250),
 }
 _ROUTE_DATA: dict = {}
 
 
 def _route_data(shape: str):
-    """Uniform background over [0, span]^d, one dense blob inside the
-    first cell of the 2^d row-budget grid and a smaller blob in the
-    last: at ``block_fallback_rows=ROUTE_GATE`` exactly one cell is
-    oversized. Returns ``(x, oracle labels)``."""
+    """Uniform background over [0, span]^d, one dense blob at span/4
+    and a smaller one at 3*span/4, plus (3d_narrow) one blob at each
+    cell centre of the 3^d grid: at ``BLOCK_FALLBACK_ROWS=ROUTE_GATE``
+    exactly one cell, the span/4 blob's, is oversized. Returns
+    ``(x, oracle labels)``."""
     if shape not in _ROUTE_DATA:
-        d, span, n_bg, _wf = _ROUTE_SHAPES[shape]
+        d, span, n_bg, lattice_rows = _ROUTE_SHAPES[shape]
         rng = np.random.default_rng(29)
-        x = np.concatenate(
-            [
-                rng.uniform(0.0, span, size=(n_bg, d)),
-                rng.normal(span / 4, 0.4, size=(1000, d)),
-                rng.normal(3 * span / 4, 0.4, size=(300, d)),
-            ]
-        )
+        parts = [
+            rng.uniform(0.0, span, size=(n_bg, d)),
+            rng.normal(span / 4, 0.4, size=(1000, d)),
+            rng.normal(3 * span / 4, 0.4, size=(300, d)),
+        ]
+        if lattice_rows:
+            centres = np.array(list(itertools.product([span / 6, span / 2, 5 * span / 6], repeat=d)))
+            blobs = centres[:, None, :] + rng.normal(0.0, 0.4, size=(len(centres), lattice_rows, d))
+            parts.append(blobs.reshape(-1, d))
+        x = np.concatenate(parts)
         _ROUTE_DATA[shape] = (x, seq_dbscan(x, ROUTE_EPS, ROUTE_MIN_PTS))
     return _ROUTE_DATA[shape]
 
@@ -256,52 +242,52 @@ def _route_data(shape: str):
 @pytest.mark.parametrize("labels", ["driver", "distributed"])
 @pytest.mark.parametrize("oversized", [False, True], ids=["no_oversized", "one_oversized"])
 @pytest.mark.parametrize("shape", list(_ROUTE_SHAPES))
-def test_route_matrix_matches_oracle(spark, shape, oversized, labels):
-    """Every local route the input can select: {fused, two-pass} x {no
-    oversized cell, one oversized cell -> block pairs} x {driver
-    labels, distributed CC + labels}."""
+def test_route_matrix_matches_oracle(spark, monkeypatch, shape, oversized, labels):
+    """Every route the input can select: {no oversized cell, one
+    oversized cell -> block pairs} x {driver labels, distributed CC +
+    labels}, on grids across the range of R."""
     x, want = _route_data(shape)
-    kw = {"width_factor": _ROUTE_SHAPES[shape][3]}
     if oversized:
-        kw["block_fallback_rows"] = ROUTE_GATE
+        monkeypatch.setattr(dbscan_mod, "BLOCK_FALLBACK_ROWS", ROUTE_GATE)
     if labels == "distributed":
-        kw.update(driver_label_rows=0, cc_driver_fastpath_edges=0)
+        force_distributed_labels(monkeypatch)
     df = to_points_df(spark, x)
-    got = {r["id"]: r["cluster_id"] for r in dbscan(df, ROUTE_EPS, ROUTE_MIN_PTS, **kw).collect()}
+    got = {r["id"]: r["cluster_id"] for r in dbscan(df, ROUTE_EPS, ROUTE_MIN_PTS).collect()}
     got_arr = np.array([got[i] for i in range(len(x))], dtype=np.int64)
     assert np.array_equal(got_arr, want), f"{int((got_arr != want).sum())}/{len(x)} points differ"
 
 
 @pytest.mark.parametrize("shape", list(_ROUTE_SHAPES))
 def test_route_matrix_data_shape(spark, shape):
-    """Each route-matrix shape selects the route its id names, and has
-    exactly one cell above the block gate (counted over the eps rows,
-    which is what the skew probe counts on either route)."""
-    from cs533_big_data_data_mining_spark.operators.cells import choose_grid, fuses_local_phase, ghost_expand
+    """Each route-matrix shape gets a d-axis default grid, R >= 2 on
+    3d_narrow (R < 2 on the others), and exactly one cell above the
+    block gate (counted over the near rows, as the skew probe does)."""
+    import math
 
-    d, _span, _n_bg, wf = _ROUTE_SHAPES[shape]
+    from cs533_big_data_data_mining_spark.operators.cells import choose_grid, ghost_expand
+
+    d = _ROUTE_SHAPES[shape][0]
     x, want = _route_data(shape)
     assert want.max() >= 2 and (want == 0).any()
     pts = to_points_df(spark, x)
-    spec = choose_grid(pts, d, ROUTE_EPS, width_factor=wf)
+    spec = choose_grid(pts, d, ROUTE_EPS)
     assert len(spec.dims) == d
-    assert fuses_local_phase(spec) is shape.endswith("_fused")
+    ratio = math.prod((w + 4 * ROUTE_EPS) / (w + 2 * ROUTE_EPS) for w in spec.width)
+    assert (ratio >= 2) is (shape == "3d_narrow"), ratio
     sizes = [r["count"] for r in ghost_expand(pts, spec).groupBy("cell").count().collect()]
     assert sum(n > ROUTE_GATE for n in sizes) == 1 and len(sizes) > 1
 
 
 def test_fused_probe_counts_near_rows_only(spark, monkeypatch):
-    """On the fused route the skew probe sizes a cell by its near rows
-    (what the block-pair route would consume), not by the 2*eps frame:
-    with the gate between a cell's near-row count and its 2*eps-row
-    count, no cell may take the block-pair route."""
-    from cs533_big_data_data_mining_spark.operators import dbscan as dbscan_mod
-    from cs533_big_data_data_mining_spark.operators.cells import choose_grid, fuses_local_phase, ghost_expand
+    """The skew probe sizes a cell by its near rows (what the
+    block-pair route would consume), not by the 2*eps frame: with the
+    gate between a cell's near-row count and its 2*eps-row count, no
+    cell may take the block-pair route."""
+    from cs533_big_data_data_mining_spark.operators.cells import choose_grid, ghost_expand
 
     x, want = _route_data("2d_fused")
     pts = to_points_df(spark, x)
     spec = choose_grid(pts, 2, ROUTE_EPS)
-    assert fuses_local_phase(spec)
     per_cell = (
         ghost_expand(pts, spec, reach=2)
         .groupBy("cell")
@@ -315,7 +301,8 @@ def test_fused_probe_counts_near_rows_only(spark, monkeypatch):
         raise AssertionError("a cell under the near-row gate took the block-pair route")
 
     monkeypatch.setattr(dbscan_mod, "cell_block_neighbor_counts", no_block_pairs)
-    got = {r["id"]: r["cluster_id"] for r in dbscan(pts, ROUTE_EPS, ROUTE_MIN_PTS, block_fallback_rows=gate).collect()}
+    monkeypatch.setattr(dbscan_mod, "BLOCK_FALLBACK_ROWS", gate)
+    got = {r["id"]: r["cluster_id"] for r in dbscan(pts, ROUTE_EPS, ROUTE_MIN_PTS).collect()}
     assert np.array_equal(np.array([got[i] for i in range(len(x))]), want)
 
 

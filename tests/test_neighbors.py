@@ -201,24 +201,18 @@ def test_ghost_expand_2eps_invariants(spark):
         ghost_expand(df, thin, reach=2)
 
 
-def test_fused_local_phase_matches_two_pass(spark):
-    """The fused kernel's kind=2 counts must equal neighbor_counts,
-    and its kind=0/1 edge/border rows must yield the same label
-    structure as the two-pass local phase (same roots after a global
-    min-reduction)."""
-    from pyspark.sql import functions as F
-
+def test_fused_local_phase_matches_reference(spark):
+    """The fused kernel's kind=2 counts must equal neighbor_counts, and
+    its kind=0/1 edge/border rows, merged by ``_driver_labels``, must
+    give ``seq_dbscan``'s labels."""
     from cs533_big_data_data_mining_spark.operators.dbscan import _driver_labels
-    from cs533_big_data_data_mining_spark.operators.neighbors import (
-        fused_local_phase,
-        local_components_and_borders,
-    )
+    from cs533_big_data_data_mining_spark.operators.neighbors import fused_local_phase
+    from tests.oracle import seq_dbscan
 
     x, df, _ = _setup(spark, n=800, seed=33)
     spec = _dense_spec(x)
     min_pts = 6
-    celled2 = ghost_expand(df, spec, reach=2)
-    fused = fused_local_phase(celled2, EPS, min_pts).toPandas()
+    fused = fused_local_phase(ghost_expand(df, spec, reach=2), EPS, min_pts).toPandas()
 
     counts = {r["id"]: r["n_neighbors"] for r in neighbor_counts(ghost_expand(df, spec), EPS).collect()}
     k2 = fused[fused["kind"] == 2]
@@ -226,18 +220,12 @@ def test_fused_local_phase_matches_two_pass(spark):
     for pid, n_nb in zip(k2["a"], k2["b"]):
         assert counts[pid] == n_nb
 
-    # two-pass edges/borders -> labels; fused edges/borders -> labels
-    flags = spark.createDataFrame(
-        [(int(i), bool(counts[i] >= min_pts)) for i in range(len(x))], "id long, is_core boolean"
-    )
-    two_pass = local_components_and_borders(
-        ghost_expand(df, spec).join(flags, "id"), EPS
-    ).toPandas()
-    lab_fused = _driver_labels(fused[fused["kind"] != 2])
-    lab_two = _driver_labels(two_pass)
-    a = dict(zip(lab_fused["id"], lab_fused["cluster_id"]))
-    b = dict(zip(lab_two["id"], lab_two["cluster_id"]))
-    assert a == b
+    lab = _driver_labels(fused[fused["kind"] != 2])
+    got = np.zeros(len(x), dtype=np.int64)
+    got[lab["id"].to_numpy()] = lab["cluster_id"].to_numpy()
+    want = seq_dbscan(x, EPS, min_pts)
+    assert want.max() >= 2 and (want == 0).any()
+    assert np.array_equal(got, want), f"{int((got != want).sum())}/{len(x)} points differ"
 
 
 def _np_ghost_rows(x, spec, reach):

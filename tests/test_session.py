@@ -2,7 +2,9 @@
 
 import importlib
 import os
+import shutil
 import sys
+import tempfile
 import zipfile
 import zipimport
 
@@ -96,3 +98,30 @@ def test_worker_import_guard_in_workers_only(spark):
     assert row["reads"] == 0
     method = zipimport.zipimporter.invalidate_caches
     assert (method.__module__, method.__qualname__) == ("zipimport", "zipimporter.invalidate_caches")
+
+
+def test_package_zip_named_by_content(tmp_path, monkeypatch):
+    """Two calls give one path and leave the archive untouched; a
+    changed source gives a new path and leaves the old archive in
+    place, with no temp file behind."""
+    from cs533_big_data_data_mining_spark import session
+
+    pkg = tmp_path / "src" / "cs533_big_data_data_mining_spark"
+    shutil.copytree(os.path.dirname(session.__file__), pkg, ignore=shutil.ignore_patterns("__pycache__"))
+    zips = tmp_path / "zips"
+    zips.mkdir()
+    monkeypatch.setattr(session, "__file__", str(pkg / "session.py"))
+    monkeypatch.setattr(tempfile, "tempdir", str(zips))
+
+    first = session._package_zip()
+    with zipfile.ZipFile(first) as zf:
+        assert "cs533_big_data_data_mining_spark/operators/dbscan.py" in zf.namelist()
+    os.utime(first, ns=(1_000_000_000, 1_000_000_000))
+    assert session._package_zip() == first
+    assert os.stat(first).st_mtime_ns == 1_000_000_000
+
+    with open(pkg / "operators" / "dbscan.py", "a") as f:
+        f.write("\n# changed\n")
+    second = session._package_zip()
+    assert second != first
+    assert sorted(os.listdir(zips)) == sorted([os.path.basename(first), os.path.basename(second)])
