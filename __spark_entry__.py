@@ -2925,6 +2925,24 @@ CRAWL_BENCH_MOD = 13
 CRAWL_DUP_MOD = 10
 
 
+def _wet_record(uri: str, payload: bytes) -> bytes:
+    """One WET ``conversion`` record holding ``payload``."""
+    head = (
+        b"WARC/1.0\r\nWARC-Type: conversion\r\n"
+        + f"WARC-Target-URI: {uri}\r\n".encode()
+        + b"WARC-Date: 2024-01-01T00:00:00Z\r\n"
+        + f"Content-Length: {len(payload)}\r\n\r\n".encode()
+    )
+    return head + payload + b"\r\n\r\n"
+
+
+def _write_wet_shards(root: str, shards: list[list[bytes]]) -> None:
+    """Write each shard's records as ``root/part{j}.wet``."""
+    for j, blobs in enumerate(shards):
+        with open(f"{root}/part{j}.wet", "wb") as fh:
+            fh.write(b"".join(blobs))
+
+
 def _q_crawl_shards(spark, sf_dir):
     # End-to-end crawl -> training-shards composition (what a user of
     # this engine actually runs): the documents table is written out
@@ -2939,7 +2957,7 @@ def _q_crawl_shards(spark, sf_dir):
     # emitted as a boolean the oracle pins TRUE (the boilerplate
     # strip must restore every source text byte-for-byte through the
     # WET round-trip; scores must exist and be finite). The scale
-    # twin of this row is bench.py's env-gated crawl smoke.
+    # twin of this row is tools/scale_smoke.py's crawl_pipeline_210k.
     _ensure_shipped(spark)
     import shutil
     import tempfile
@@ -2957,31 +2975,20 @@ def _q_crawl_shards(spark, sf_dir):
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
     # driver-built archive: the table is small at oracle SFs; the
-    # env-gated smoke builds its archives at volume
+    # scale smoke builds its archives at volume
     rows = sorted(docs.collect(), key=lambda r: r["doc_id"])
     root = tempfile.mkdtemp(prefix="crawl_shards_")
     try:
-        def rec(uri: str, payload: bytes) -> bytes:
-            head = (
-                b"WARC/1.0\r\nWARC-Type: conversion\r\n"
-                + f"WARC-Target-URI: {uri}\r\n".encode()
-                + b"WARC-Date: 2024-01-01T00:00:00Z\r\n"
-                + f"Content-Length: {len(payload)}\r\n\r\n".encode()
-            )
-            return head + payload + b"\r\n\r\n"
-
         shards: list[list[bytes]] = [[] for _ in range(4)]
         for i, r in enumerate(rows):
             # null-text docs flow as empty payloads (the corpus schema
             # allows them; a + would TypeError)
             payload = ((r["text"] or "") + "\n" + CRAWL_BOILER).encode()
             host = f"https://h{r['doc_id'] % 7}.example"
-            shards[i % 4].append(rec(f"{host}/d/{r['doc_id']}", payload))
+            shards[i % 4].append(_wet_record(f"{host}/d/{r['doc_id']}", payload))
             if r["doc_id"] % CRAWL_DUP_MOD == 0:
-                shards[(i + 1) % 4].append(rec(f"{host}/dup/{r['doc_id']}", payload))
-        for j, blobs in enumerate(shards):
-            with open(f"{root}/part{j}.wet", "wb") as fh:
-                fh.write(b"".join(blobs))
+                shards[(i + 1) % 4].append(_wet_record(f"{host}/dup/{r['doc_id']}", payload))
+        _write_wet_shards(root, shards)
 
         wt = warc_text(spark, root)
         base_id = F.regexp_extract("target_uri", r"/(?:d|dup)/(\d+)$", 1).cast("long")
@@ -4263,9 +4270,9 @@ def _leakproof(fn):
     do (measured: dedup_ngram_jaccard warm re-run 0.98 s with the
     leak vs 2.96 s honest; dedup_minhash 2.35 vs 3.67 s).
 
-    The wrapper snapshots the persisted-RDD set, runs the query, and
+    The wrapper opens a ``session.SessionScope``, runs the query, and
     if the call left new entries behind: collects the (small) result,
-    unpersists every new entry, and returns the rows as a driver-local
+    releases the scope, and returns the rows as a driver-local
     Arrow-backed frame with the ORIGINAL schema — values, columns and
     row multiset are identical (the driver sorts before hashing), and
     the leak-free warm number is the honest one. Queries that already
@@ -4276,48 +4283,21 @@ def _leakproof(fn):
     None into NaN)."""
     import functools
 
+    from cs533_big_data_data_mining_spark.session import SessionScope
+
     @functools.wraps(fn)
     def wrapped(spark, sf_dir):
-        try:
-            before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
-            cm = spark._jsparkSession.sharedState().cacheManager()
-            cm_empty_before = bool(cm.isEmpty())
-        except Exception:  # noqa: BLE001 — py4j surface; fall back to the raw frame
-            return fn(spark, sf_dir)
+        scope = SessionScope(spark)
         df = fn(spark, sf_dir)
-        try:
-            jmap = spark.sparkContext._jsc.getPersistentRDDs()
-            fresh = set(jmap.keySet().toArray()) - before
-            # the RDD map alone misses caches whose physical RDD has
-            # not materialized yet (persist() registers in the
-            # CacheManager immediately, the RDD object appears only at
-            # first execution) — ask the CacheManager too
-            cm_grew = cm_empty_before and not bool(cm.isEmpty())
-        except Exception:  # noqa: BLE001
-            return df
-        if not fresh and not cm_grew:
+        if not scope.grew():
             return df
         import pandas as pd
 
         schema = df.schema
         rows = df.collect()
-        try:
-            # re-snapshot: the collect itself can register entries
-            # (lazy internal persists materializing late)
-            jmap = spark.sparkContext._jsc.getPersistentRDDs()
-            for rid in set(jmap.keySet().toArray()) - before:
-                ref = jmap.get(rid)
-                if ref is not None:
-                    ref.unpersist()
-            if cm_empty_before:
-                # RDD-level unpersist drops the blocks but leaves the
-                # CacheManager plan registration (a sameResult scan on
-                # every later planning pass, and plan-tree memory).
-                # With no pre-existing caches to protect, drop the
-                # registrations too.
-                spark.catalog.clearCache()
-        except Exception:  # noqa: BLE001 — cleanup is best-effort
-            pass
+        # after the collect: it can register entries itself (lazy
+        # internal persists materializing late)
+        scope.release()
         names = [f.name for f in schema.fields]
         pdf = pd.DataFrame(
             {n: pd.Series([r[i] for r in rows], dtype=object) for i, n in enumerate(names)}

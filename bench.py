@@ -14,7 +14,6 @@ from __future__ import annotations
 
 import importlib.util
 import json
-import math
 import os
 import sys
 import time
@@ -193,14 +192,6 @@ def main() -> None:
     # entire perf record (round 3 lost all 36 timings to a single
     # AnalysisException). Errors are recorded per-key; the JSON line
     # is always emitted.
-    # SPARK_GRAFT_SMOKE_ONLY=1: skip the per-query suite and run just
-    # the env-gated scale smokes — a clean-machine smoke record
-    # shouldn't pay (or inherit JVM state from) the ~5 min full bench
-    smoke_only = bool(os.environ.get("SPARK_GRAFT_SMOKE_ONLY"))
-    if smoke_only:
-        os.environ.setdefault("SPARK_GRAFT_SCALE_SMOKE", "1")
-        qs = {}
-
     COMPOSITES = {
         "refinedweb_pipeline", "fineweb_pipeline", "stream_eq_all",
         # round-10 multi-job composites: a trained fit + two scoring
@@ -270,7 +261,7 @@ def main() -> None:
         except Exception as exc:  # noqa: BLE001
             print(f"# {name}: warm rerun ERROR {exc}", file=sys.stderr)
 
-    if os.path.exists(REFERENCE_BIN) and not smoke_only:
+    if os.path.exists(REFERENCE_BIN):
         # untimed warm-up: the first dbscan of a session pays one-time
         # JVM JIT + codegen costs (~5-7 s) that would otherwise be
         # charged to whichever workload happens to run first
@@ -314,1574 +305,6 @@ def main() -> None:
                 errors[key] = f"{type(exc).__name__}: {exc}"[:500]
                 print(f"# {key}: ERROR {errors[key]}", file=sys.stderr)
 
-    if os.environ.get("SPARK_GRAFT_SCALE_SMOKE"):
-        # optional 3M-point distributed-path workload (exceeds the 2M
-        # driver-label gate and drives the 4M-edge CC fastpath) —
-        # off by default so the per-round bench stays quick; the
-        # expected stats pin determinism at scale (SCALE.md)
-        from pyspark.sql import functions as F  # noqa: PLC0415
-
-        from cs533_big_data_data_mining_spark import dbscan, dbscan_stats
-
-        # distributed prefix-sum at 3M docs: the range-partitioned
-        # packing path (per-partition windows + driver offset sums)
-        # above any single-partition-window temptation; invariants
-        # pin the exact global cumsum
-        from cs533_big_data_data_mining_spark.operators.packing import pack_sequences
-
-        nd = 3_000_000
-        docs3m = spark.range(nd).select(
-            F.col("id").alias("doc_id"),
-            (F.pmod(F.xxhash64("id"), F.lit(100)) + 1).alias("n"),
-        )
-        t0 = time.time()
-        try:
-            packed = pack_sequences(docs3m, "doc_id", 2048, count_expr=F.col("n"))
-            agg = packed.agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.max(F.col("start_offset") + F.col("n_tokens")).alias("total"),
-                F.max("bin_end").alias("last_bin"),
-            ).head()
-            expect_total = docs3m.agg(F.sum("n")).head()[0]
-            assert agg["rows"] == nd and agg["total"] == expect_total, f"pack smoke wrong: {agg}"
-            assert agg["last_bin"] == (expect_total - 1) // 2048
-            timings["pack_scale3m"] = round(time.time() - t0, 3)
-            print(f"# pack_scale3m: {timings['pack_scale3m']}s (total {agg['total']})", file=sys.stderr)
-        except Exception as exc:  # noqa: BLE001
-            errors["pack_scale3m"] = f"{type(exc).__name__}: {exc}"[:500]
-            print(f"# pack_scale3m: ERROR {errors['pack_scale3m']}", file=sys.stderr)
-
-        # full curation pipeline at 310k docs: 300k unique + 10k
-        # planted NEAR duplicates (one word mutated, J ~ 0.85 > 0.8).
-        # The PPJoin prefix join + CC + min-id anti-join must remove
-        # EXACTLY the 10k mutated docs — exercises the quadratic-risk
-        # near-dup stage at volume, not just exact dedup.
-        from cs533_big_data_data_mining_spark.operators.curate import curate_documents
-
-        ncd, ncdup = 300_000, 10_000
-
-        def _w(j):
-            return F.conv(F.pmod(F.xxhash64(F.col("base_id"), j), F.lit(5000)).cast("string"), 10, 36)
-
-        _text = F.concat_ws(" ", F.transform(F.sequence(F.lit(1), F.lit(40)), _w))
-        _text_mut = F.concat_ws(
-            " ",
-            F.transform(
-                F.sequence(F.lit(1), F.lit(40)),
-                lambda j: F.when(j == 20, F.lit("zzmutzz")).otherwise(_w(j)),
-            ),
-        )
-        basec = spark.range(ncd).select("id", F.col("id").alias("base_id")).select(
-            F.col("id").alias("doc_id"), _text.alias("text")
-        )
-        dupsc = spark.range(ncdup).select(
-            (F.col("id") + ncd).alias("id"), F.col("id").alias("base_id")
-        ).select(F.col("id").alias("doc_id"), _text_mut.alias("text"))
-        t0 = time.time()
-        try:
-            surv = curate_documents(basec.unionByName(dupsc), jaccard_threshold=0.8)
-            n_surv = surv.count()
-            surv.unpersist()
-            assert n_surv == ncd, f"curate smoke: survivors {n_surv} != {ncd}"
-            timings["curate_scale310k"] = round(time.time() - t0, 3)
-            print(f"# curate_scale310k: {timings['curate_scale310k']}s", file=sys.stderr)
-        except Exception as exc:  # noqa: BLE001
-            errors["curate_scale310k"] = f"{type(exc).__name__}: {exc}"[:500]
-            print(f"# curate_scale310k: ERROR {errors['curate_scale310k']}", file=sys.stderr)
-
-        # Dolma Bloom dedup route at 1M new vs 1M history docs with
-        # 100k planted exact history duplicates (id % 10 == 0 copies
-        # history doc id/10). exact=True must keep EXACTLY the 900k
-        # non-duplicates (false positives verified away); exact=False
-        # (the no-join Dolma trade at fpp=0.01) must still drop every
-        # planted duplicate (no false negatives) and lose at most a
-        # few fpp of the genuinely-new docs.
-        from cs533_big_data_data_mining_spark.operators.dedup import (
-            exact_dedup_bipartite_bloom,
-        )
-
-        nbl, dup_mod = 1_000_000, 10
-
-        def _bloom_ht(c):
-            return F.concat(
-                F.lit("hist doc "), c.cast("string"), F.lit(" "),
-                F.conv(F.pmod(F.xxhash64(c), F.lit(10**9)).cast("string"), 10, 36),
-            )
-
-        histb = spark.range(nbl).select(
-            (F.col("id") + 10_000_000).alias("doc_id"), _bloom_ht(F.col("id")).alias("text")
-        )
-        newb = spark.range(nbl).select(
-            F.col("id").alias("doc_id"),
-            F.when(F.col("id") % dup_mod == 0, _bloom_ht((F.col("id") / dup_mod).cast("long")))
-            .otherwise(
-                F.concat(
-                    F.lit("new doc "), F.col("id").cast("string"), F.lit(" "),
-                    F.conv(F.pmod(F.xxhash64("id", F.lit(7)), F.lit(10**9)).cast("string"), 10, 36),
-                )
-            )
-            .alias("text"),
-        )
-        expect_surv = nbl - nbl // dup_mod
-        t0 = time.time()
-        try:
-            n_exact = exact_dedup_bipartite_bloom(newb, histb, "doc_id", "text").count()
-            assert n_exact == expect_surv, f"bloom exact route: {n_exact} != {expect_surv}"
-            loose = exact_dedup_bipartite_bloom(
-                newb, histb, "doc_id", "text", fpp=0.01, exact=False
-            )
-            agg = loose.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum((F.col("doc_id") % dup_mod == 0).cast("long")).alias("dup_survivors"),
-            ).head()
-            assert agg["dup_survivors"] == 0, f"bloom false negative?! {agg}"
-            lost = expect_surv - agg["n"]
-            assert 0 <= lost <= int(expect_surv * 0.05), f"bloom fp loss out of band: {lost}"
-            timings["bloom_dedup_scale1m"] = round(time.time() - t0, 3)
-            print(
-                f"# bloom_dedup_scale1m: {timings['bloom_dedup_scale1m']}s "
-                f"(exact 900k kept; loose lost {lost} to fp)",
-                file=sys.stderr,
-            )
-        except Exception as exc:  # noqa: BLE001
-            errors["bloom_dedup_scale1m"] = f"{type(exc).__name__}: {exc}"[:500]
-            print(f"# bloom_dedup_scale1m: ERROR {errors['bloom_dedup_scale1m']}", file=sys.stderr)
-
-        # LSH auto-route above its documented ~0.58M-vector gate:
-        # 600k random 16-dim vectors + 1000 planted exact duplicates.
-        # Identical vectors share every band key, so ALL planted pairs
-        # must surface (candidates exact-verified => precision 1);
-        # occupancy-adaptive r keeps candidate counts ~O(N*bands)
-        # where a fixed r=8 would mean ~10^10 pairs per band.
-        from cs533_big_data_data_mining_spark.operators.similarity import (
-            embedding_neardup_pairs,
-        )
-
-        ne, dims = 600_000, 16
-        vec = F.array(
-            *[
-                ((F.pmod(F.xxhash64(F.col("base_id"), F.lit(j)), F.lit(2001)) - 1000).cast("double") / 1000.0)
-                for j in range(dims)
-            ]
-        )
-        base6 = spark.range(ne).select("id", F.col("id").alias("base_id")).select(
-            "id", vec.alias("embedding")
-        )
-        dups6 = spark.range(1000).select(
-            (F.col("id") + ne).alias("id"), F.col("id").alias("base_id")
-        ).select("id", vec.alias("embedding"))
-        t0 = time.time()
-        try:
-            import warnings
-
-            with warnings.catch_warnings():
-                warnings.simplefilter("ignore")  # the expected auto-route warning
-                pairs6 = embedding_neardup_pairs(
-                    base6.unionByName(dups6), 0.999, id_col="id", vec_col="embedding"
-                )
-                planted = pairs6.filter(F.col("b") - F.col("a") == ne).count()
-            assert planted == 1000, f"lsh smoke: planted pairs found {planted} != 1000"
-            timings["lsh_scale600k"] = round(time.time() - t0, 3)
-            print(f"# lsh_scale600k: {timings['lsh_scale600k']}s", file=sys.stderr)
-        except Exception as exc:  # noqa: BLE001
-            errors["lsh_scale600k"] = f"{type(exc).__name__}: {exc}"[:500]
-            print(f"# lsh_scale600k: ERROR {errors['lsh_scale600k']}", file=sys.stderr)
-
-        # SemDeDup at the same 600k+1000 construction, C=64 clusters:
-        # identical vectors co-cluster (same argmax), so exactly the
-        # 1000 planted duplicates must disappear and every original
-        # survive. The cluster partition replaces the global 147-block
-        # gram (~10.8k block pairs) with ~64 cluster-local grams
-        # (cluster ~9.4k rows -> ~3 blocks -> ~6 pairs each), the
-        # ~N^2/C work cut that makes the method viable at corpus scale.
-        from cs533_big_data_data_mining_spark.operators.similarity import semdedup
-
-        t0 = time.time()
-        try:
-            surv6 = semdedup(
-                base6.unionByName(dups6), 0.9999, 64, id_col="id", vec_col="embedding"
-            )
-            n_surv6 = surv6.count()
-            n_planted_left = surv6.filter(F.col("id") >= ne).count()
-            surv6.unpersist()
-            assert n_surv6 == ne and n_planted_left == 0, (n_surv6, n_planted_left)
-            timings["semdedup_scale600k"] = round(time.time() - t0, 3)
-            print(
-                f"# semdedup_scale600k: {timings['semdedup_scale600k']}s "
-                f"(all 1000 planted dups removed, {ne} originals kept)",
-                file=sys.stderr,
-            )
-        except Exception as exc:  # noqa: BLE001
-            errors["semdedup_scale600k"] = f"{type(exc).__name__}: {exc}"[:500]
-            print(f"# semdedup_scale600k: ERROR {errors['semdedup_scale600k']}", file=sys.stderr)
-
-        # multi-probe cost curve (round 11): p in {2, 4} on the SAME
-        # construction. Recall on the plants stays exact by definition
-        # (identical vectors share every probe), so these runs measure
-        # the pair-generation fan-out growth — SCALE.md's multi-probe
-        # note records the p=1/2/4 wall ratio as the cost table.
-        for p in (2, 4):
-            t0 = time.time()
-            try:
-                sp = semdedup(
-                    base6.unionByName(dups6), 0.9999, 64,
-                    id_col="id", vec_col="embedding", probes=p,
-                )
-                n_sp = sp.count()
-                n_left = sp.filter(F.col("id") >= ne).count()
-                sp.unpersist()
-                assert n_sp == ne and n_left == 0, (p, n_sp, n_left)
-                timings[f"semdedup_scale600k_p{p}"] = round(time.time() - t0, 3)
-                print(
-                    f"# semdedup_scale600k_p{p}: {timings[f'semdedup_scale600k_p{p}']}s",
-                    file=sys.stderr,
-                )
-            except Exception as exc:  # noqa: BLE001
-                errors[f"semdedup_scale600k_p{p}"] = f"{type(exc).__name__}: {exc}"[:500]
-                print(
-                    f"# semdedup_scale600k_p{p}: ERROR {errors[f'semdedup_scale600k_p{p}']}",
-                    file=sys.stderr,
-                )
-
-        # incremental SemDeDup against the same 600k history: a
-        # 2000-doc "daily shard" with every outcome planted — 1000
-        # exact copies of history vectors (components touch history:
-        # dropped), 1000 fresh vectors (survive), 500 twin pairs of
-        # non-history vectors (min id survives). History is clustered
-        # once and NEVER re-paired — per-shard gram work is
-        # new-blocks x history-blocks-in-cluster, not history^2.
-        from cs533_big_data_data_mining_spark.operators.similarity import (
-            ivf_index,
-            semdedup_bipartite,
-        )
-
-        t0 = time.time()
-        try:
-            dup_bi = spark.range(1000).select(
-                (F.col("id") + ne).alias("id"), F.col("id").alias("base_id")
-            ).select("id", vec.alias("embedding"))
-            fresh_bi = spark.range(1000).select(
-                (F.col("id") + ne + 10_000).alias("id"),
-                (F.col("id") + ne).alias("base_id"),
-            ).select("id", vec.alias("embedding"))
-            twin_a = spark.range(500).select(
-                (F.col("id") + ne + 20_000).alias("id"),
-                (F.col("id") + ne + 1000).alias("base_id"),
-            ).select("id", vec.alias("embedding"))
-            twin_b = spark.range(500).select(
-                (F.col("id") + ne + 30_000).alias("id"),
-                (F.col("id") + ne + 1000).alias("base_id"),
-            ).select("id", vec.alias("embedding"))
-            new_bi = dup_bi.unionByName(fresh_bi).unionByName(twin_a).unionByName(twin_b)
-            idx_bi = ivf_index(base6, 64, id_col="id", vec_col="embedding")
-            surv_bi = semdedup_bipartite(
-                base6, new_bi, 0.9999, 64, id_col="id", vec_col="embedding", index=idx_bi
-            )
-            n_bi = surv_bi.count()
-            n_dup_left = surv_bi.filter(
-                (F.col("id") >= ne) & (F.col("id") < ne + 1000)
-            ).count()
-            n_twin_b_left = surv_bi.filter(F.col("id") >= ne + 30_000).count()
-            surv_bi.unpersist()
-            assert (n_bi, n_dup_left, n_twin_b_left) == (1500, 0, 0), (
-                n_bi, n_dup_left, n_twin_b_left,
-            )
-            timings["semdedup_bi_scale600k"] = round(time.time() - t0, 3)
-            print(
-                f"# semdedup_bi_scale600k: {timings['semdedup_bi_scale600k']}s "
-                "(1000 history-dups + 500 twin losers dropped, 1500 kept)",
-                file=sys.stderr,
-            )
-        except Exception as exc:  # noqa: BLE001
-            errors["semdedup_bi_scale600k"] = f"{type(exc).__name__}: {exc}"[:500]
-            print(
-                f"# semdedup_bi_scale600k: ERROR {errors['semdedup_bi_scale600k']}",
-                file=sys.stderr,
-            )
-
-        # source balancing with one domain holding 90% of 1M rows —
-        # the shape where the plain per-source window is a single-task
-        # mega-sort. Asserted: (a) the histogram prefilter's survivor
-        # set is IDENTICAL to the exact window's; (b) the rows
-        # actually entering the window are <3% of the input
-        # (~cap + n/1024 per big source), i.e. the 900k-row
-        # single-task sort is structurally gone. (Locally the exact
-        # window is still fast — 1M rows fit one task's memory; the
-        # prefilter's win is task-level parallelism and bounded task
-        # memory at 100 TB, which the admitted-row count measures.)
-        from cs533_big_data_data_mining_spark.operators.quality import (
-            _admission_prefilter,
-            balance_sources,
-        )
-
-        nbal, balcap = 1_000_000, 1000
-        docs_bal = spark.range(nbal).select(
-            F.col("id").alias("doc_id"),
-            F.when(F.col("id") % 10 < 9, F.lit("megacrawl"))
-            .otherwise(F.concat(F.lit("s"), (F.floor(F.col("id") / 10) % 5).cast("string")))
-            .alias("source"),
-        )
-        t0 = time.time()
-        try:
-            fast = balance_sources(docs_bal, "doc_id", "source", balcap, prefilter=True)
-            fast_rows = fast.count()
-            t_fast = time.time() - t0
-            admitted = _admission_prefilter(
-                docs_bal.select(
-                    F.col("doc_id").alias("id"), "source", F.xxhash64("doc_id").alias("_pri")
-                ),
-                balcap,
-                1024,
-            ).count()
-            slow = balance_sources(docs_bal, "doc_id", "source", balcap, prefilter=False)
-            diff = fast.exceptAll(slow).count() + slow.exceptAll(fast).count()
-            assert fast_rows == balcap * 6 and diff == 0, (fast_rows, diff)
-            assert admitted < 0.03 * nbal, f"prefilter admitted {admitted} rows"
-            timings["balance_scale1m"] = round(t_fast, 3)
-            print(
-                f"# balance_scale1m: {t_fast:.3f}s, window input {admitted} rows "
-                f"({100 * admitted / nbal:.2f}% of {nbal}), identical to exact window",
-                file=sys.stderr,
-            )
-        except Exception as exc:  # noqa: BLE001
-            errors["balance_scale1m"] = f"{type(exc).__name__}: {exc}"[:500]
-            print(f"# balance_scale1m: ERROR {errors['balance_scale1m']}", file=sys.stderr)
-
-        # Bloom decontamination at 500k docs vs a 13.5k-doc benchmark:
-        # every 37th doc IS the benchmark (planted contamination), so
-        # exactly those docs must flag — the bloom prefilter plus
-        # exact verify must lose nothing and add nothing.
-        from cs533_big_data_data_mining_spark.operators.decontaminate import (
-            decontaminate_bloom,
-        )
-
-        ndc = 500_000
-
-        def _dw(j):
-            return F.conv(
-                F.pmod(F.xxhash64(F.col("doc_id"), j), F.lit(99991)).cast("string"), 10, 36
-            )
-
-        docs_dc = spark.range(ndc).select(
-            F.col("id").alias("doc_id"),
-            F.concat_ws(" ", F.transform(F.sequence(F.lit(1), F.lit(12)), _dw)).alias("text"),
-        )
-        bench_dc = docs_dc.filter(F.col("doc_id") % 37 == 0)
-        t0 = time.time()
-        try:
-            flags = decontaminate_bloom(docs_dc, bench_dc, "doc_id", "text", n=5)
-            n_flagged = flags.filter("NOT keep").count()
-            n_expected = docs_dc.filter(F.col("doc_id") % 37 == 0).count()
-            flags.unpersist()
-            assert n_flagged == n_expected, (n_flagged, n_expected)
-            timings["decontam_bloom_500k"] = round(time.time() - t0, 3)
-            print(
-                f"# decontam_bloom_500k: {timings['decontam_bloom_500k']}s "
-                f"({n_flagged} planted contaminations, all and only)",
-                file=sys.stderr,
-            )
-        except Exception as exc:  # noqa: BLE001
-            errors["decontam_bloom_500k"] = f"{type(exc).__name__}: {exc}"[:500]
-            print(f"# decontam_bloom_500k: ERROR {errors['decontam_bloom_500k']}", file=sys.stderr)
-
-        # Bloom ENVELOPE smoke: build a filter with m/64 >= 10^7 words
-        # end-to-end through decontaminate_bloom — the round-6 verdict's
-        # named weak spot was the driver ingesting the word aggregate as
-        # 10^7-10^8 py4j Row objects; the Arrow path must make this
-        # routine. 40M distinct benchmark 5-grams at fpp=3e-4 sizes the
-        # filter to ~1.06e7 words (driver-ingestion cost scales with m
-        # alone, so the tighter fpp buys the >=10^7-word envelope at
-        # smoke-friendly build cost; 10^8 items at 1% fpp is the same
-        # word count +43%). 200k corpus docs, every 37th embedding the
-        # 5 words of benchmark doc_id — exactly those must flag.
-        from cs533_big_data_data_mining_spark.operators.sketches import _bloom_params
-
-        nbe, nce, fppe = 40_000_000, 200_000, 3e-4
-        m_e, _k_e = _bloom_params(nbe, fppe)
-        assert m_e // 64 >= 10_000_000, f"envelope mis-sized: {m_e // 64} words"
-        _bw = [F.concat(F.lit(f"g{j}x"), F.col("id").cast("string")) for j in range(5)]
-        bench_env = spark.range(nbe).select(
-            F.col("id").alias("doc_id"), F.concat_ws(" ", *_bw).alias("text")
-        )
-        docs_env = spark.range(nce).select(
-            F.col("id").alias("doc_id"),
-            F.when(
-                F.col("id") % 37 == 0,
-                F.concat_ws(
-                    " ",
-                    F.concat_ws(" ", F.transform(F.sequence(F.lit(1), F.lit(12)), _dw)),
-                    F.concat_ws(" ", *[F.concat(F.lit(f"g{j}x"), F.col("id").cast("string")) for j in range(5)]),
-                ),
-            )
-            .otherwise(F.concat_ws(" ", F.transform(F.sequence(F.lit(1), F.lit(12)), _dw)))
-            .alias("text"),
-        )
-        t0 = time.time()
-        try:
-            flags_e = decontaminate_bloom(docs_env, bench_env, "doc_id", "text", n=5, fpp=fppe)
-            bad_e = flags_e.filter(
-                F.col("keep") == (F.col("id") % 37 == 0)  # flagged iff planted
-            ).count()
-            n_flag_e = flags_e.filter("NOT keep").count()
-            assert bad_e == 0 and n_flag_e == (nce + 36) // 37, (bad_e, n_flag_e)
-            timings["bloom_envelope_40m"] = round(time.time() - t0, 3)
-            print(
-                f"# bloom_envelope_40m: {timings['bloom_envelope_40m']}s "
-                f"({m_e // 64} filter words >= 1e7, {n_flag_e} planted "
-                "contaminations flagged, all and only)",
-                file=sys.stderr,
-            )
-        except Exception as exc:  # noqa: BLE001
-            errors["bloom_envelope_40m"] = f"{type(exc).__name__}: {exc}"[:500]
-            print(f"# bloom_envelope_40m: ERROR {errors['bloom_envelope_40m']}", file=sys.stderr)
-
-        # End-to-end crawl -> training-shards composition at 210k WET
-        # records (the scale twin of the crawl_shards driver row):
-        # 200k 12-word docs (vocab 99991) + a boilerplate line on
-        # EVERY record + 10k planted exact duplicates (every 20th
-        # doc, distinct uri) + a shared 10-word phrase in every 41st
-        # doc + benchmark = every 40th doc's clean text. Each stage
-        # must recover exactly its planted set: boiler line stripped
-        # (else the span stage would flag every doc), dedup back to
-        # 200k, spans on exactly the 4879 phrase docs ending at token
-        # 22, decontamination flagging the 9757-doc union of bench
-        # members and phrase docs (phrase grams leak into the bench
-        # via the 122 ids divisible by both 40 and 41), split sizes
-        # summing to the survivor count, pack offsets validating.
-        import shutil
-        import tempfile
-
-        from cs533_big_data_data_mining_spark.functions.text import subword_count
-        from cs533_big_data_data_mining_spark.operators.dedup import (
-            duplicated_spans,
-            exact_dedup,
-        )
-        from cs533_big_data_data_mining_spark.operators.packing import pack_sequences
-        from cs533_big_data_data_mining_spark.operators.quality import (
-            assign_split,
-            remove_boilerplate_lines,
-        )
-        from cs533_big_data_data_mining_spark.sources.warc import warc_text
-
-        ncr, crdup_off = 200_000, 1_000_000_000
-        cr_phrase = " ".join(f"crawlshared{j}" for j in range(10))
-        cr_boiler = "zzcrawl zzboiler zzline zzplanted"
-        _ctext = F.concat_ws(
-            " ",
-            F.transform(
-                F.sequence(F.lit(301), F.lit(312)),
-                lambda j: F.conv(
-                    F.pmod(F.xxhash64(F.col("doc_id"), j), F.lit(99991)).cast("string"), 10, 36
-                ),
-            ),
-        )
-        docs_cr = spark.range(ncr).select(
-            F.col("id").alias("doc_id"),
-            F.when(F.col("id") % 41 == 0, F.concat_ws(" ", _ctext, F.lit(cr_phrase)))
-            .otherwise(_ctext)
-            .alias("text"),
-        )
-        t0 = time.time()
-        root_cr = tempfile.mkdtemp(prefix="crawl_smoke_")
-        try:
-            def _rec(uri, payload):
-                return (
-                    b"WARC/1.0\r\nWARC-Type: conversion\r\n"
-                    + f"WARC-Target-URI: {uri}\r\n".encode()
-                    + b"WARC-Date: 2024-01-01T00:00:00Z\r\n"
-                    + f"Content-Length: {len(payload)}\r\n\r\n".encode()
-                    + payload
-                    + b"\r\n\r\n"
-                )
-
-            shard_buf = [[] for _ in range(8)]
-            for i, r in enumerate(docs_cr.collect()):
-                payload = (r["text"] + "\n" + cr_boiler).encode()
-                shard_buf[i % 8].append(_rec(f"https://c.example/d/{r['doc_id']}", payload))
-                if r["doc_id"] % 20 == 0:
-                    shard_buf[(i + 3) % 8].append(
-                        _rec(f"https://c.example/dup/{r['doc_id']}", payload)
-                    )
-            for j, blobs in enumerate(shard_buf):
-                with open(f"{root_cr}/part{j}.wet", "wb") as fh:
-                    fh.write(b"".join(blobs))
-
-            base_id = F.regexp_extract("target_uri", r"/(?:d|dup)/(\d+)$", 1).cast("long")
-            corpus_cr = warc_text(spark, root_cr).select(
-                F.when(F.col("target_uri").contains("/dup/"), base_id + F.lit(crdup_off))
-                .otherwise(base_id)
-                .alias("doc_id"),
-                "text",
-            )
-            n_wet = corpus_cr.count()
-            assert n_wet == ncr + ncr // 20, n_wet
-            cleaned_cr = remove_boilerplate_lines(corpus_cr, "doc_id", "text", 1000).select(
-                F.col("id").alias("doc_id"), F.col("clean").alias("text")
-            )
-            surv_cr = exact_dedup(cleaned_cr, "doc_id", "text").cache()
-            n_dedup = surv_cr.count()
-            assert n_dedup == ncr, n_dedup
-            sp = duplicated_spans(surv_cr, k=5, hash_grams=True)
-            spa = sp.agg(
-                F.count_distinct("id").alias("docs"),
-                F.min("span_end").alias("end_lo"),
-                F.max("span_end").alias("end_hi"),
-            ).head()
-            n_phrase = (ncr - 1) // 41 + 1
-            assert (
-                spa["docs"] == n_phrase and spa["end_lo"] == spa["end_hi"] == 22
-            ), dict(spa.asDict())
-            bench_cr = docs_cr.filter(F.col("doc_id") % 40 == 0)
-            flags_cr = decontaminate_bloom(surv_cr, bench_cr, "doc_id", "text", n=5)
-            n_flag = flags_cr.filter("NOT keep").count()
-            n_expect_flag = ncr // 40 + n_phrase - ((ncr - 1) // 1640 + 1)
-            assert n_flag == n_expect_flag, (n_flag, n_expect_flag)
-            final_cr = surv_cr.join(
-                flags_cr.filter("keep").select(F.col("id").alias("doc_id")),
-                "doc_id",
-                "left_semi",
-            ).cache()
-            n_final = final_cr.count()
-            assert n_final == ncr - n_expect_flag, n_final
-            spl = assign_split(final_cr, "doc_id")
-            spl_counts = {
-                r["split"]: r["n"]
-                for r in spl.groupBy("split").agg(F.count(F.lit(1)).alias("n")).collect()
-            }
-            assert sum(spl_counts.values()) == n_final, spl_counts
-            assert 0.85 < spl_counts["train"] / n_final < 0.95, spl_counts
-            plan_cr = pack_sequences(final_cr, "doc_id", 2048, validate=True)
-            total_cr = plan_cr.agg(
-                F.count(F.lit(1)).alias("rows"),
-                F.max(F.col("start_offset") + F.col("n_tokens")).alias("total"),
-            ).head()
-            want_total = final_cr.agg(
-                F.sum(F.coalesce(subword_count("text").cast("long"), F.lit(0)))
-            ).head()[0]
-            assert total_cr["rows"] == n_final and total_cr["total"] == want_total, dict(
-                total_cr.asDict()
-            )
-            surv_cr.unpersist()
-            final_cr.unpersist()
-            timings["crawl_pipeline_210k"] = round(time.time() - t0, 3)
-            print(
-                f"# crawl_pipeline_210k: {timings['crawl_pipeline_210k']}s "
-                f"(WET {n_wet} -> dedup {n_dedup} -> decontam -{n_flag} -> "
-                f"{n_final} docs, {total_cr['total']} tokens packed; spans/boiler exact)",
-                file=sys.stderr,
-            )
-        except Exception as exc:  # noqa: BLE001
-            errors["crawl_pipeline_210k"] = f"{type(exc).__name__}: {exc}"[:500]
-            print(f"# crawl_pipeline_210k: ERROR {errors['crawl_pipeline_210k']}", file=sys.stderr)
-        finally:
-            shutil.rmtree(root_cr, ignore_errors=True)
-
-        # RefinedWeb-ordered flagship at 200k docs — the scale twin of
-        # the refinedweb_pipeline driver row. Every failure class is
-        # PLANTED on a disjoint id residue, so each stage's removal
-        # count is an exact construction fact (near-dup and dedup
-        # counts use the joint-survivor predicate, since the quantile
-        # gate can drop either member of a pair):
-        #   %20==3  -> crawl VARIANT of doc (id-1)'s URL   (url dedup)
-        #   %40==1  -> 10-word doc                         (Gopher)
-        #   %20==5  -> exact text copy of doc (id-1)       (exact dedup)
-        #   %20==7  -> one-word mutation of doc (id-1)     (MinHash, J~0.9)
-        #   %41==0  -> shared 6-word phrase appended       (span removal)
-        #   %53==0  -> benchmark membership                (decontamination)
-        from cs533_big_data_data_mining_spark.operators.connected_components import (
-            connected_components,
-        )
-        from cs533_big_data_data_mining_spark.operators.dedup import (
-            minhash_dedup_pairs,
-            remove_duplicated_spans,
-            url_dedup,
-        )
-        from cs533_big_data_data_mining_spark.operators.packing import shard_rows
-        from cs533_big_data_data_mining_spark.operators.quality import (
-            dsir_logratio,
-            dsir_resample,
-            gopher_rules,
-            lm_perplexity,
-            quantile_filter,
-        )
-
-        nrw = 200_000
-        rw_phrase = "zp1 zp2 zp3 zp4 zp5 zp6"
-        tbase = F.col("doc_id") - F.when(F.pmod("doc_id", F.lit(20)).isin(5, 7), 1).otherwise(0)
-
-        def _rw_word(j):
-            # 3-char base36 word (values 1296..46655 are exactly the
-            # 3-char range; ~98% contain a letter), 'the' every 7th
-            # position for the stopword rule, mean word length 3.0
-            return F.when(
-                j % 7 == 0, F.lit("the")
-            ).otherwise(
-                F.conv((F.pmod(F.xxhash64(tbase, j), F.lit(45360)) + 1296).cast("string"), 10, 36)
-            )
-
-        def _rw_text(n_words, mutate):
-            w = F.transform(
-                F.sequence(F.lit(1), F.lit(n_words)),
-                (lambda j: F.when(j == n_words, F.lit("zzmutzz")).otherwise(_rw_word(j)))
-                if mutate
-                else _rw_word,
-            )
-            return F.concat_ws(" ", w)
-
-        body = (
-            F.when(F.pmod("doc_id", F.lit(40)) == 1, _rw_text(10, False))
-            .when(F.pmod("doc_id", F.lit(20)) == 7, _rw_text(60, True))
-            .otherwise(_rw_text(60, False))
-        )
-        url_key = (
-            F.col("doc_id") - F.when(F.pmod("doc_id", F.lit(20)) == 3, 1).otherwise(0)
-        ).cast("string")
-        docs_rw = spark.range(nrw).select(
-            F.col("id").alias("doc_id"),
-            # phrase membership follows tbase so a %20∈{5,7} copy is
-            # byte-identical to its base (a doc_id-based phrase broke
-            # exactly 2/41 of the planted exact pairs)
-            F.when(
-                F.pmod(tbase, F.lit(41)) == 0, F.concat_ws(" ", body, F.lit(rw_phrase))
-            ).otherwise(body).alias("text"),
-            F.when(
-                F.pmod("id", F.lit(20)) == 3,
-                F.concat(F.lit("HTTPS://WWW.RW.example/p/"), url_key, F.lit("?utm_source=x")),
-            ).otherwise(F.concat(F.lit("https://rw.example/p/"), url_key)).alias("url"),
-        )
-        t0 = time.time()
-        try:
-            # sweep this block's localCheckpoint blocks afterwards —
-            # they are invisible to the cache manager and the smoke
-            # session continues into 1M-doc workloads
-            _rw_rdds_before = set(
-                spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
-            )
-            s1 = docs_rw.join(
-                url_dedup(docs_rw, "doc_id", "url").select(F.col("id").alias("doc_id")),
-                "doc_id",
-                "left_semi",
-            ).select("doc_id", "text").localCheckpoint()
-            n1 = s1.count()
-            assert n1 == nrw - nrw // 20, n1  # every %20==3 row lost to id-1
-            # min_stopword_hits=1: the generator plants ONE stopword
-            # ('the', every 7th slot) — the default 2 would fail all
-            gk = gopher_rules(s1, "doc_id", "text", min_stopword_hits=1).filter("keep")
-            s2 = s1.join(gk.select(F.col("id").alias("doc_id")), "doc_id", "left_semi")
-            n2 = s2.count()
-            assert n2 == n1 - nrw // 40, n2  # exactly the 10-word docs fail
-            ppl = lm_perplexity(s2, id_col="doc_id", text_col="text")
-            s4 = quantile_filter(
-                s2.join(ppl.select(F.col("id").alias("doc_id"), "ppl"), "doc_id")
-                .withColumn("__negppl", -F.col("ppl")),
-                "__negppl",
-                0.9,
-            ).select("doc_id", "text").localCheckpoint()
-            n4 = s4.count()
-            assert 0.88 * n2 <= n4 <= 0.93 * n2, (n4, n2)  # ties can exceed 0.9
-            s4ids = s4.select("doc_id")
-            # joint-survivor predicates: a planted pair is removable
-            # only when BOTH members passed the ppl gate (identical
-            # texts always co-pass; mutated pairs can straddle)
-            pairs5 = s4ids.filter("doc_id % 20 = 5").join(
-                s4ids.select((F.col("doc_id") + 1).alias("doc_id")), "doc_id", "left_semi"
-            ).count()
-            s5 = exact_dedup(s4, "doc_id", "text").localCheckpoint()
-            n5 = s5.count()
-            assert n5 == n4 - pairs5, (n5, n4, pairs5)
-            s5ids = s5.select("doc_id")
-            pairs7 = s5ids.filter("doc_id % 20 = 7").join(
-                s5ids.select((F.col("doc_id") + 1).alias("doc_id")), "doc_id", "left_semi"
-            ).count()
-            mh = minhash_dedup_pairs(s5, "doc_id", "text", n=3, threshold=0.8)
-            comp = connected_components(
-                mh.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-            )
-            s6 = s5.join(
-                comp.filter("node != component").select(F.col("node").alias("doc_id")),
-                "doc_id",
-                "left_anti",
-            ).localCheckpoint()
-            n6 = s6.count()
-            assert n6 == n5 - pairs7, (n6, n5, pairs7)
-            # tbase-based predicates from here on: a rare ppl-straddle
-            # leaves a mutated copy in s6 without its base ("straggler"),
-            # and its phrase/benchmark identity follows tbase, not doc_id
-            tb6 = F.col("doc_id") - F.when(F.pmod("doc_id", F.lit(20)).isin(5, 7), 1).otherwise(0)
-            n_phrase6 = s6.filter(F.pmod(tb6, F.lit(41)) == 0).count()
-            s7 = remove_duplicated_spans(s6, id_col="doc_id", text_col="text", k=5).select(
-                F.col("id").alias("doc_id"), F.col("clean").alias("text")
-            ).localCheckpoint()
-            assert s7.filter(F.col("text").contains("zp1")).count() == 0
-            assert s6.filter(F.col("text").contains("zp1")).count() == n_phrase6
-            bench_rw = docs_rw.filter("doc_id % 53 = 0").select("doc_id", "text")
-            flags_rw = decontaminate_bloom(s7, bench_rw, "doc_id", "text", n=5)
-            n_flag_rw = flags_rw.filter("NOT keep").count()
-            # expected flags: docs whose TEXT-SOURCE id is a benchmark
-            # member (covers self-hits and ppl-straddle stragglers) +
-            # bases whose removed twin was a benchmark member.
-            # Phrase-grams can't hit: span removal stripped them from
-            # every survivor BEFORE decon — the Lee-2022 ordering this
-            # smoke exists to pin.
-            # three flagged classes: text-source id in bench (self-hits
-            # AND stragglers whose base was bench), the doc's OWN id in
-            # bench (a straggler is itself a bench row sharing its own
-            # body grams), and bases whose removed twin was bench
-            exp_flag = s7.filter(
-                (F.pmod(tb6, F.lit(53)) == 0)
-                | (F.col("doc_id") % 53 == 0)
-                | (
-                    ((F.col("doc_id") + 1) % 53 == 0)
-                    & F.pmod(F.col("doc_id") + 1, F.lit(20)).isin(5, 7)
-                )
-            ).count()
-            assert n_flag_rw == exp_flag, (n_flag_rw, exp_flag)
-            s8 = s7.join(
-                flags_rw.filter("keep").select(F.col("id").alias("doc_id")),
-                "doc_id",
-                "left_semi",
-            )
-            target_rw = docs_rw.filter("doc_id % 31 = 0").select("doc_id", "text")
-            k_rw = 50_000
-            sel_rw = dsir_resample(
-                dsir_logratio(s8, "doc_id", "text", target_rw, hash_buckets="xxhash64"),
-                k_rw,
-                seed=8,
-            )
-            picked = sel_rw.select(F.col("id").alias("doc_id"))
-            n_sel = picked.count()
-            assert n_sel == k_rw and picked.distinct().count() == k_rw
-            assert picked.join(s8, "doc_id", "left_anti").count() == 0
-            sh_rw = shard_rows(picked, "doc_id", 64, seed=9)
-            bal = sh_rw.groupBy("shard").count().agg(
-                F.min("count").alias("lo"), F.max("count").alias("hi"),
-                F.count(F.lit(1)).alias("n"),
-            ).head()
-            assert bal["n"] == 64 and bal["hi"] < 2.0 * k_rw / 64, dict(bal.asDict())
-            timings["refinedweb_200k"] = round(time.time() - t0, 3)
-            print(
-                f"# refinedweb_200k: {timings['refinedweb_200k']}s "
-                f"({nrw} -> url {n1} -> gopher {n2} -> ppl {n4} -> exact {n5} "
-                f"-> minhash {n6} -> decon -{n_flag_rw} -> select {n_sel}; "
-                f"spans/order exact)",
-                file=sys.stderr,
-            )
-        except Exception as exc:  # noqa: BLE001
-            errors["refinedweb_200k"] = f"{type(exc).__name__}: {exc}"[:500]
-            print(f"# refinedweb_200k: ERROR {errors['refinedweb_200k']}", file=sys.stderr)
-        finally:
-            try:
-                _jm = spark.sparkContext._jsc.getPersistentRDDs()
-                for _rid in set(_jm.keySet().toArray()) - _rw_rdds_before:
-                    _jm.get(_rid).unpersist()
-            except Exception:  # noqa: BLE001 — best-effort cleanup
-                pass
-
-        # FineWeb-ordered flagship at 200k docs — the scale twin of
-        # the fineweb_pipeline driver row, over a synthetic base36
-        # corpus keyed by tbase (the dup plant copies doc id-1's page,
-        # so every inner-class predicate is a pure function of tbase —
-        # the refinedweb_200k pattern). Unlike the sf0.01 driver row,
-        # the page template here is SALTED per doc (every 3-token
-        # window of the normal page contains a tbase-keyed word), so
-        # unrelated docs share ~5 shingles instead of ~30: with the
-        # driver row's shared template, every doc's MinHash signature
-        # hits the universal template minima with p~0.3 per hash, and
-        # the 16 band buckets each collect N*p^4 ~ 1.6k docs -> tens
-        # of millions of exact-Jaccard verifications (the published
-        # pipelines dodge this by stripping boilerplate BEFORE dedup;
-        # a 200k-doc corpus of template clones is the adversarial
-        # case). Salting keys off tbase, so dup pairs stay
-        # byte-identical and the stage expectations stay construction
-        # facts; the near-dup and c4/fineweb drops use joint-/
-        # stage-survivor predicates.
-        from cs533_big_data_data_mining_spark.functions.text import (
-            lang_id,
-        )
-        from cs533_big_data_data_mining_spark.functions.text import (
-            redact_pii as _fw_redact,
-        )
-        from cs533_big_data_data_mining_spark.operators.quality import (
-            c4_filters,
-            fineweb_filters,
-            gopher_repetition,
-            url_filter,
-        )
-
-        nfw = 200_000
-        fw_i = F.col("doc_id")
-        fw_tb = fw_i - F.when((fw_i % mod.FWP_DUP_MOD == mod.FWP_DUP_RES) & (fw_i > 0), 1).otherwise(0)
-
-        def _fw_word(j):
-            return F.conv(
-                (F.pmod(F.xxhash64(fw_tb, j), F.lit(45360)) + 1296).cast("string"), 10, 36
-            )
-
-        fw_body = F.concat_ws(" ", F.transform(F.sequence(F.lit(1), F.lit(60)), _fw_word))
-
-        # salt words: same base36 generator, literal keys 1001+ (the
-        # body lambda uses j in [1, 60] — disjoint key space)
-        def _fw_salt(k):
-            return F.conv(
-                (F.pmod(F.xxhash64(fw_tb, F.lit(1001 + k)), F.lit(45360)) + 1296).cast(
-                    "string"
-                ),
-                10,
-                36,
-            )
-
-        fw_sid = fw_tb.cast("string")
-        _w = [_fw_salt(k) for k in range(12)]
-        # the normal page mirrors _fwp_inner's shape (3 punctuated
-        # lines, en markers, a plantable email) but alternates salt
-        # words with the fixed tokens; en markers the/a/of/and/is/in
-        # keep lang_id == 'en' and gopher stopword hits intact
-        fw_l1 = F.concat_ws(
-            " ",
-            F.lit("Document"), fw_sid, F.lit("opens"), _w[0], F.lit("the"),
-            _w[1], F.lit("a"), _w[2], F.lit("of"), _w[3], F.lit("and"),
-            _w[4], F.lit("is"), _w[5], F.lit("in"), _w[6], F.lit("now. It"),
-            _w[7], F.lit("ends here."),
-        )
-        fw_l2 = F.concat_ws(
-            " ",
-            F.lit("It is"), _w[8], F.lit("by the"), _w[9], F.lit("words"),
-            F.substring(fw_body, 1, 120), F.lit("to a"), _w[10],
-            F.lit("final stop."),
-        )
-        fw_l3 = F.concat_ws(
-            " ",
-            F.lit("The"), _w[11], F.lit("closing"), _w[0], F.lit("line"),
-            _w[1], F.lit("mentions doc"), fw_sid, F.lit("again today. Contact"),
-            F.concat(F.lit("user"), fw_sid, F.lit("@mail.example.com")),
-            F.lit("now. All done."),
-        )
-        fw_normal = F.concat_ws("\n", fw_l1, fw_l2, fw_l3)
-        # 9 short lines (NOT the driver row's FWP_SHORT_K=8): a dup
-        # whose tbase is a shorts page gains one long trailing line,
-        # and if its partner was URL-dropped (url plants key on doc
-        # id, not tbase) the orphan reaches the fineweb stage — 8/12
-        # short lines is 0.6667, a hair UNDER the 0.67 gate, while
-        # 9/13 = 0.692 keeps every variant on the drop side
-        fw_shorts = F.concat_ws(
-            "\n",
-            *[
-                F.concat(F.lit(f"Alpha{k} beta{k} d"), fw_sid, F.lit(f" go{k}."))
-                for k in range(9)
-            ],
-        )
-        fw_spam = F.concat_ws("\n", *[F.lit(mod.FWP_SPAM_LINE)] * 5)
-        # same CASE precedence as _fwp_inner (mirrored by the p_*
-        # predicates below); plant classes that reach the minhash
-        # stage (lorem / short-lines) ride on the salted normal page
-        fw_inner_t = (
-            F.when(fw_tb % mod.FWP_LANG_MOD == mod.FWP_LANG_RES, F.lit(mod.FWP_FRENCH))
-            .when(
-                fw_tb % mod.FWP_GOPHER_MOD == mod.FWP_GOPHER_RES,
-                F.concat(F.lit("The a of and to is in it for doc "), fw_sid, F.lit(".")),
-            )
-            .when(
-                fw_tb % mod.FWP_REP_MOD == mod.FWP_REP_RES,
-                F.concat(fw_normal, F.lit("\n"), fw_spam),
-            )
-            .when(
-                fw_tb % mod.FWP_C4_MOD == mod.FWP_C4_RES,
-                F.concat(fw_normal, F.lit("\nSee also lorem ipsum text.")),
-            )
-            .when(
-                fw_tb % mod.FWP_FW_MOD == mod.FWP_FW_RES,
-                F.concat(fw_normal, F.lit("\n"), fw_shorts),
-            )
-            .otherwise(fw_normal)
-        )
-        # two-step select: doc_id must be a REAL column before the
-        # construction expressions reference it (a one-step select
-        # would make every reference a lateral alias — unresolvable
-        # inside the transform() lambdas)
-        def _fw_corpus():
-            return spark.range(nfw).select(F.col("id").alias("doc_id")).select(
-                "doc_id",
-                F.when(
-                    (fw_i % mod.FWP_DUP_MOD == mod.FWP_DUP_RES) & (fw_i > 0),
-                    F.concat(fw_inner_t, F.lit("\n" + mod.FWP_EXTRA_LINE)),
-                ).otherwise(fw_inner_t).alias("text"),
-                F.when(
-                    fw_i % mod.FWP_URL_MOD == mod.FWP_URL_RES,
-                    F.concat(F.lit("https://malware.bad.example/p/"), fw_i.cast("string")),
-                ).otherwise(
-                    F.concat(F.lit("https://site"), fw_i.cast("string"), F.lit(".example.org/a"))
-                ).alias("url"),
-            )
-        # effective inner-class predicates (CASE precedence order) as
-        # pure tbase arithmetic — construction facts
-        p_fr = F.pmod(fw_tb, F.lit(mod.FWP_LANG_MOD)) == mod.FWP_LANG_RES
-        p_short = ~p_fr & (F.pmod(fw_tb, F.lit(mod.FWP_GOPHER_MOD)) == mod.FWP_GOPHER_RES)
-        p_spam = ~p_fr & ~p_short & (F.pmod(fw_tb, F.lit(mod.FWP_REP_MOD)) == mod.FWP_REP_RES)
-        p_lorem = (
-            ~p_fr & ~p_short & ~p_spam
-            & (F.pmod(fw_tb, F.lit(mod.FWP_C4_MOD)) == mod.FWP_C4_RES)
-        )
-        p_shorts = (
-            ~p_fr & ~p_short & ~p_spam & ~p_lorem
-            & (F.pmod(fw_tb, F.lit(mod.FWP_FW_MOD)) == mod.FWP_FW_RES)
-        )
-        t0 = time.time()
-        try:
-            _fw_rdds_before = set(
-                spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
-            )
-            docs_fw = _fw_corpus()  # analysis inside the try: a plan
-            # error must record as this smoke's error, not kill bench
-            uf = url_filter(docs_fw, "doc_id", "url", blocked_domains=["bad.example"])
-            # repartition BEFORE the checkpoint: AQE coalesces the
-            # semi-join output to ~64MB targets (1-2 partitions at
-            # this corpus size), and the zero-shuffle per-row stages
-            # downstream (gopher_repetition especially) inherit that
-            # partitioning — measured 8x slower when serialized onto
-            # one core; one 120MB round-robin shuffle buys back full
-            # parallelism for every later stage
-            s1 = docs_fw.join(
-                uf.filter("keep").select(F.col("id").alias("doc_id")), "doc_id", "left_semi"
-            ).select("doc_id", "text").repartition(32).localCheckpoint()
-            n1 = s1.count()
-            assert n1 == docs_fw.filter(fw_i % mod.FWP_URL_MOD != mod.FWP_URL_RES).count(), n1
-            s2 = s1.filter(lang_id("text") == "en")
-            n2 = s2.count()
-            assert n2 == n1 - s1.filter(p_fr).count(), (n1, n2)
-            rep = gopher_repetition(s2, "doc_id", "text")
-            s3 = s2.join(
-                rep.filter("keep").select(F.col("id").alias("doc_id")), "doc_id", "left_semi"
-            ).localCheckpoint()
-            n3 = s3.count()
-            assert n3 == n2 - s2.filter(p_spam).count(), (n2, n3)
-            gk = gopher_rules(s3, "doc_id", "text", min_stopword_hits=1).filter("keep")
-            s4 = s3.join(gk.select(F.col("id").alias("doc_id")), "doc_id", "left_semi")
-            n4 = s4.count()
-            assert n4 == n3 - s3.filter(p_short).count(), (n3, n4)
-            # planted near-dup pairs removable iff BOTH members reached s4
-            s4ids = s4.select("doc_id")
-            fw_pairs = s4ids.filter(
-                (F.col("doc_id") % mod.FWP_DUP_MOD == mod.FWP_DUP_RES) & (F.col("doc_id") > 0)
-            ).join(
-                s4ids.select((F.col("doc_id") + 1).alias("doc_id")), "doc_id", "left_semi"
-            ).count()
-            mh = minhash_dedup_pairs(s4, "doc_id", "text", n=3, threshold=0.8)
-            comp = connected_components(
-                mh.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-            )
-            s5 = s4.join(
-                comp.filter("node != component").select(F.col("node").alias("doc_id")),
-                "doc_id",
-                "left_anti",
-            ).localCheckpoint()
-            n5 = s5.count()
-            assert n5 == n4 - fw_pairs, (n4, n5, fw_pairs)
-            c4v = c4_filters(s5, "doc_id", "text", line_terminal_punct=False)
-            s6 = s5.join(
-                c4v.filter("keep").select(F.col("id").alias("doc_id")), "doc_id", "left_semi"
-            )
-            n6 = s6.count()
-            assert n6 == n5 - s5.filter(p_lorem).count(), (n5, n6)
-            fwv = fineweb_filters(s6, "doc_id", "text")
-            s7 = s6.join(
-                fwv.filter("keep").select(F.col("id").alias("doc_id")), "doc_id", "left_semi"
-            )
-            n7 = s7.count()
-            assert n7 == n6 - s6.filter(p_shorts).count(), (n6, n7)
-            red = s7.select(_fw_redact(F.col("text")).alias("text"))
-            n_bad = red.filter(
-                F.col("text").contains("@mail.example.com") | ~F.col("text").contains("<EMAIL>")
-            ).count()
-            assert n_bad == 0, n_bad
-            timings["fineweb_200k"] = round(time.time() - t0, 3)
-            print(
-                f"# fineweb_200k: {timings['fineweb_200k']}s "
-                f"({nfw} -> url {n1} -> lang {n2} -> rep {n3} -> gopher {n4} "
-                f"-> minhash {n5} -> c4 {n6} -> custom {n7}; redaction exact)",
-                file=sys.stderr,
-            )
-        except Exception as exc:  # noqa: BLE001
-            errors["fineweb_200k"] = f"{type(exc).__name__}: {exc}"[:500]
-            print(f"# fineweb_200k: ERROR {errors['fineweb_200k']}", file=sys.stderr)
-        finally:
-            try:
-                _jm = spark.sparkContext._jsc.getPersistentRDDs()
-                for _rid in set(_jm.keySet().toArray()) - _fw_rdds_before:
-                    _jm.get(_rid).unpersist()
-            except Exception:  # noqa: BLE001 — best-effort cleanup
-                pass
-
-        # Dolma-ordered pipeline at 200k ids (150k pool vs 50k
-        # immutable history, the refinedweb/fineweb_200k pattern):
-        # every stage's survivor count asserted against construction
-        # facts, the Bloom dedup ladder running EXACT at fpp=0.01,
-        # paragraph excision + within-pool keep_first + redaction
-        # checked on the final text.
-        from cs533_big_data_data_mining_spark.operators.dedup import (
-            paragraph_dedup_bipartite_bloom,
-            url_dedup,
-        )
-
-        ndm = 200_000
-        dm_i = F.col("doc_id")
-        dm_txt = F.concat_ws(" ", F.transform(F.sequence(F.lit(1), F.lit(18)), _dw))
-        dm_p_fr = F.pmod(dm_i, F.lit(mod.DMP_LANG_MOD)) == mod.DMP_LANG_RES
-        dm_p_short = ~dm_p_fr & (F.pmod(dm_i, F.lit(mod.DMP_GOPHER_MOD)) == mod.DMP_GOPHER_RES)
-        dm_p_copy = (
-            ~dm_p_fr & ~dm_p_short
-            & (F.pmod(dm_i, F.lit(mod.DMP_DOC_MOD)) == mod.DMP_DOC_RES)
-        )
-        dm_p_lorem = (
-            ~dm_p_fr & ~dm_p_short & ~dm_p_copy
-            & (F.pmod(dm_i, F.lit(mod.DMP_C4P_MOD)) == mod.DMP_C4P_RES)
-        )
-        dm_p_url = F.pmod(dm_i, F.lit(mod.DMP_URL_MOD)) == mod.DMP_URL_RES
-        t0 = time.time()
-        try:
-            _dm_rdds_before = set(
-                spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
-            )
-            ids_dm = spark.range(ndm).select(F.col("id").alias("doc_id"))
-            hist_dm = ids_dm.filter(dm_i % mod.DMP_HIST_MOD == 0).select(
-                "doc_id", mod._dmp_hist_text(dm_i).alias("text")
-            )
-            pool_dm = ids_dm.filter(dm_i % mod.DMP_HIST_MOD != 0).select(
-                "doc_id",
-                mod._dmp_inner(dm_i, dm_txt).alias("text"),
-                mod._dmp_url(dm_i).alias("url"),
-            ).repartition(32).localCheckpoint()
-            n0 = pool_dm.count()
-            s1 = pool_dm.filter(lang_id("text") == "en")
-            n1 = s1.count()
-            assert n1 == n0 - pool_dm.filter(dm_p_fr).count(), (n0, n1)
-            gk = gopher_rules(s1, "doc_id", "text", min_stopword_hits=1).filter("keep")
-            s2 = s1.join(gk.select(F.col("id").alias("doc_id")), "doc_id", "left_semi")
-            n2 = s2.count()
-            assert n2 == n1 - s1.filter(dm_p_short).count(), (n1, n2)
-            # no self-join: c4 already returns (id, clean), and the
-            # url column is a pure function of doc_id — a join here
-            # would recompute the whole gopher lineage for each side
-            c4v = c4_filters(s2, "doc_id", "text", line_terminal_punct=False)
-            s3 = c4v.filter("keep").select(
-                F.col("id").alias("doc_id"), F.col("clean").alias("text")
-            ).localCheckpoint()
-            n3 = s3.count()
-            assert n3 == n2 - s2.filter(dm_p_lorem).count(), (n2, n3)
-            s4 = s3.withColumn("text", _fw_redact(F.col("text"))).withColumn(
-                "url", mod._dmp_url(dm_i)
-            )
-            ud = url_dedup(s4, "doc_id", "url", normalize=False)
-            s5 = s4.join(
-                ud.select(F.col("id").alias("doc_id")), "doc_id", "left_semi"
-            ).select("doc_id", "text").localCheckpoint()
-            n5 = s5.count()
-            exp5 = (
-                n3
-                - s4.filter(dm_p_url).count()
-                + s4.filter(dm_p_url)
-                .select(F.pmod(dm_i, F.lit(mod.DMP_URL_GROUPS)).alias("g"))
-                .distinct()
-                .count()
-            )
-            assert n5 == exp5, (n5, exp5)
-            s6 = exact_dedup_bipartite_bloom(s5, hist_dm, "doc_id", "text", fpp=0.01)
-            n6 = s6.count()
-            assert n6 == n5 - s5.filter(dm_p_copy).count(), (n5, n6)
-            pd_out = paragraph_dedup_bipartite_bloom(
-                hist_dm, s6, "doc_id", "text", fpp=0.01
-            ).localCheckpoint()
-            bad = pd_out.filter(
-                F.col("clean").contains(mod.DMP_HISTP_A)
-                | F.col("clean").contains("@mail.example.com")
-                | ~F.col("clean").contains("<EMAIL>")
-            ).count()
-            assert bad == 0, bad
-            n_l4 = pd_out.filter(F.col("clean").contains(mod.DMP_L4A)).count()
-            assert n_l4 == mod.DMP_NEWPARA_CLASSES, n_l4  # keep_first per class
-            assert pd_out.count() == n6
-            timings["dolma_200k"] = round(time.time() - t0, 3)
-            print(
-                f"# dolma_200k: {timings['dolma_200k']}s "
-                f"({n0} pool -> lang {n1} -> gopher {n2} -> c4 {n3} "
-                f"-> url {n5} -> doc {n6}; paragraphs + redaction exact)",
-                file=sys.stderr,
-            )
-        except Exception as exc:  # noqa: BLE001
-            errors["dolma_200k"] = f"{type(exc).__name__}: {exc}"[:500]
-            print(f"# dolma_200k: ERROR {errors['dolma_200k']}", file=sys.stderr)
-        finally:
-            try:
-                _jm = spark.sparkContext._jsc.getPersistentRDDs()
-                for _rid in set(_jm.keySet().toArray()) - _dm_rdds_before:
-                    _jm.get(_rid).unpersist()
-            except Exception:  # noqa: BLE001 — best-effort cleanup
-                pass
-
-        # Duplicated-span detection at 1M docs: per-doc hash words are
-        # ~unique 5-grams (vocab 99991, 12 words), every 41st doc gets
-        # a shared 10-word phrase appended — exactly those docs must
-        # report exactly one span of exactly 10 tokens. Exercises the
-        # positional-gram inverted index (~12M grams), the LeftSemi
-        # flag join and the islands window at volume.
-        from cs533_big_data_data_mining_spark.operators.dedup import duplicated_spans
-
-        nsp = 1_000_000
-        phrase = " ".join(f"sharedword{j}" for j in range(10))
-        docs_sp = spark.range(nsp).select(
-            F.col("id").alias("doc_id"),
-            F.when(
-                F.col("id") % 41 == 0,
-                F.concat_ws(
-                    " ",
-                    F.concat_ws(" ", F.transform(F.sequence(F.lit(1), F.lit(12)), _dw)),
-                    F.lit(phrase),
-                ),
-            )
-            .otherwise(F.concat_ws(" ", F.transform(F.sequence(F.lit(1), F.lit(12)), _dw)))
-            .alias("text"),
-        )
-        t0 = time.time()
-        try:
-            spans = duplicated_spans(docs_sp, k=5, hash_grams=True)
-            agg = spans.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.count_distinct("id").alias("docs"),
-                F.min("span_end").alias("end_lo"),
-                F.max("span_end").alias("end_hi"),
-                F.min("span_start").alias("start_lo"),
-                F.max("span_start").alias("start_hi"),
-            ).head()
-            expected_docs = docs_sp.filter(F.col("doc_id") % 41 == 0).count()
-            # every planted span ends exactly at token 22 (phrase tail);
-            # the start is 12, or 1-2 earlier for the ~12% of planted
-            # docs whose last hash words collide mod 99991 with another
-            # planted doc's (the boundary gram then duplicates too) —
-            # a real property of the data, not detector slack
-            assert (
-                agg["n"] == agg["docs"] == expected_docs
-                and agg["end_lo"] == agg["end_hi"] == 22
-                and 10 <= agg["start_lo"] <= agg["start_hi"] == 12
-            ), f"span smoke wrong: {dict(agg.asDict())} expected {expected_docs} docs"
-            timings["spans_scale1m"] = round(time.time() - t0, 3)
-            print(
-                f"# spans_scale1m: {timings['spans_scale1m']}s "
-                f"({expected_docs} planted docs, one 10-token span each, nothing else)",
-                file=sys.stderr,
-            )
-        except Exception as exc:  # noqa: BLE001
-            errors["spans_scale1m"] = f"{type(exc).__name__}: {exc}"[:500]
-            print(f"# spans_scale1m: ERROR {errors['spans_scale1m']}", file=sys.stderr)
-
-        # Round-7 curation ops at volume. (a) URL dedup over 1M URLs
-        # in 200k planted variant groups of 5 (www/case, trailing
-        # slash, utm, fragment, ref): exactly the 200k variant-0 rows
-        # (the min ids) must survive, every canonical URL distinct.
-        # (b) DSIR at 200k docs with DISJOINT target/background
-        # vocabularies: the 1000 planted target-vocab docs must
-        # separate from the rest with zero overlap (min planted score
-        # > max background score). (c) mix_to_budget at 1M rows /
-        # 4 sources: per-source realized repeats within 1% of r_s,
-        # epochs dense in [0, ceil(r_s)), no duplicate (id, epoch),
-        # and the whole output bit-identical across two runs.
-        from cs533_big_data_data_mining_spark.operators.dedup import url_dedup
-        from cs533_big_data_data_mining_spark.operators.quality import (
-            dsir_logratio,
-            mix_to_budget,
-        )
-
-        nu, ngrp = 1_000_000, 200_000
-        g_str = (F.col("id") % ngrp).cast("string")
-        v_u = F.floor(F.col("id") / ngrp)
-        urls_sm = spark.range(nu).select(
-            F.col("id").alias("doc_id"),
-            F.when(v_u == 1, F.concat(F.lit("https://www.Site.com/p/"), g_str, F.lit("?q=1")))
-            .when(v_u == 2, F.concat(F.lit("https://site.com/p/"), g_str, F.lit("/?q=1")))
-            .when(v_u == 3, F.concat(F.lit("https://site.com/p/"), g_str, F.lit("?utm_source=x&q=1")))
-            .when(v_u == 4, F.concat(F.lit("https://site.com/p/"), g_str, F.lit("?q=1#frag")))
-            .otherwise(F.concat(F.lit("https://site.com/p/"), g_str, F.lit("?q=1")))
-            .alias("url"),
-        )
-        t0 = time.time()
-        try:
-            uds = url_dedup(urls_sm, "doc_id", "url")
-            ua = uds.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.max("id").alias("max_id"),
-                F.count_distinct("url_norm").alias("n_urls"),
-            ).head()
-            assert (ua["n"], ua["max_id"], ua["n_urls"]) == (ngrp, ngrp - 1, ngrp), dict(
-                ua.asDict()
-            )
-            timings["url_dedup_1m"] = round(time.time() - t0, 3)
-            print(
-                f"# url_dedup_1m: {timings['url_dedup_1m']}s "
-                f"(1M crawl variants -> {ngrp} canonical URLs, min-id survivors)",
-                file=sys.stderr,
-            )
-        except Exception as exc:  # noqa: BLE001
-            errors["url_dedup_1m"] = f"{type(exc).__name__}: {exc}"[:500]
-            print(f"# url_dedup_1m: ERROR {errors['url_dedup_1m']}", file=sys.stderr)
-
-        nds = 200_000
-
-        def _wa(j):  # 97-word target vocabulary
-            return F.concat(
-                F.lit("aa"), F.pmod(F.xxhash64(F.col("doc_id"), j), F.lit(97)).cast("string")
-            )
-
-        def _wb(j):  # 5000-word background vocabulary, disjoint prefix
-            return F.concat(
-                F.lit("bb"), F.pmod(F.xxhash64(F.col("doc_id"), j), F.lit(5000)).cast("string")
-            )
-
-        docs_ds = spark.range(nds).select(
-            F.col("id").alias("doc_id"),
-            F.when(
-                F.col("id") % 200 == 0,
-                F.concat_ws(" ", F.transform(F.sequence(F.lit(1), F.lit(12)), _wa)),
-            )
-            .otherwise(F.concat_ws(" ", F.transform(F.sequence(F.lit(1), F.lit(12)), _wb)))
-            .alias("text"),
-        )
-        target_ds = spark.range(2000).select(
-            (F.col("id") + nds).alias("doc_id"),
-            F.concat_ws(" ", F.transform(F.sequence(F.lit(1), F.lit(12)), _wa)).alias("text"),
-        )
-        t0 = time.time()
-        try:
-            sc_ds = dsir_logratio(docs_ds, "doc_id", "text", target_ds, n_buckets=4096)
-            sep = sc_ds.agg(
-                F.min(F.when(F.col("id") % 200 == 0, F.col("logratio"))).alias("lo_planted"),
-                F.max(F.when(F.col("id") % 200 != 0, F.col("logratio"))).alias("hi_background"),
-            ).head()
-            sc_ds.unpersist()
-            assert sep["lo_planted"] > sep["hi_background"], dict(sep.asDict())
-            timings["dsir_scale200k"] = round(time.time() - t0, 3)
-            print(
-                f"# dsir_scale200k: {timings['dsir_scale200k']}s "
-                f"(planted target-vocab docs >= {sep['lo_planted']:.1f}, "
-                f"background <= {sep['hi_background']:.1f} — zero overlap)",
-                file=sys.stderr,
-            )
-        except Exception as exc:  # noqa: BLE001
-            errors["dsir_scale200k"] = f"{type(exc).__name__}: {exc}"[:500]
-            print(f"# dsir_scale200k: ERROR {errors['dsir_scale200k']}", file=sys.stderr)
-
-        # NB model filter at 1M docs / 4 classes on the xxhash64 scale
-        # route: each class writes from its own DISJOINT 500-word
-        # vocabulary (w0..w499 / w500..w999 / ...), train on the 20%
-        # id%5==0 slice (5 is COPRIME to the 4-class id%4 label, so
-        # every class appears in training — id%10==0 would see only
-        # the even classes), classify the held-out 80% — every
-        # prediction must recover the planted class (bucket collisions
-        # between class vocabs dilute margins, never flip a 30-word doc)
-        from cs533_big_data_data_mining_spark.operators.classify import (
-            nb_classify,
-            nb_train,
-        )
-
-        nnb = 1_000_000
-        lab_nb = F.pmod(F.col("id"), F.lit(4))
-
-        def _wc(j):  # word drawn from the row's class vocabulary
-            return F.concat(
-                F.lit("w"),
-                (F.pmod(F.xxhash64(F.col("id"), j), F.lit(500)) + lab_nb * 500).cast("string"),
-            )
-
-        # cache: the planted text (30 xxhash64 calls/row) would otherwise
-        # regenerate through three lineage branches (train, classify,
-        # label join-back)
-        docs_nb = spark.range(nnb).select(
-            F.col("id").alias("doc_id"),
-            F.concat(F.lit("c"), lab_nb.cast("string")).alias("label"),
-            F.concat_ws(" ", F.transform(F.sequence(F.lit(1), F.lit(30)), _wc)).alias("text"),
-        ).cache()
-        t0 = time.time()
-        try:
-            m_nb = nb_train(
-                docs_nb.filter(F.col("doc_id") % 5 == 0),
-                "text",
-                "label",
-                n_buckets=16384,
-                hash_buckets="xxhash64",
-            )
-            held = docs_nb.filter(F.col("doc_id") % 5 != 0)
-            out_nb = nb_classify(
-                held, "doc_id", "text", m_nb, n_buckets=16384, hash_buckets="xxhash64"
-            )
-            agg_nb = out_nb.join(
-                held.select(F.col("doc_id").alias("id"), "label"), "id"
-            ).agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum((F.col("pred") != F.col("label")).cast("long")).alias("wrong"),
-                F.min("margin").alias("min_margin"),
-            ).head()
-            assert (agg_nb["n"], agg_nb["wrong"]) == (nnb * 4 // 5, 0), dict(agg_nb.asDict())
-            assert agg_nb["min_margin"] > 0, dict(agg_nb.asDict())
-            timings["nb_scale1m"] = round(time.time() - t0, 3)
-            print(
-                f"# nb_scale1m: {timings['nb_scale1m']}s "
-                f"(800k held-out docs, 0 misclassified, min margin "
-                f"{agg_nb['min_margin']:.1f})",
-                file=sys.stderr,
-            )
-        except Exception as exc:  # noqa: BLE001
-            errors["nb_scale1m"] = f"{type(exc).__name__}: {exc}"[:500]
-            print(f"# nb_scale1m: ERROR {errors['nb_scale1m']}", file=sys.stderr)
-        finally:
-            docs_nb.unpersist()
-
-        # trained langid at 500k docs (round 10): planted 5-language
-        # corpus from the marker vocabularies (10 cyclic words + one
-        # fused pseudo-word per doc), self-labeled seed = the ~2%
-        # slice (stride 53 — coprime with the 5-class residue), char-3-gram NB fit, ALL docs scored through the
-        # Arrow int64 fixed-point route — 0 misclassifications
-        # expected (per-language char statistics are disjoint), and
-        # the no-marker plants (id % 1009 == 0 -> 'qqq zzz xxx') must
-        # classify uniformly (deterministically) rather than crash
-        from cs533_big_data_data_mining_spark.functions.text import LANG_MARKERS
-        from cs533_big_data_data_mining_spark.operators.classify import (
-            lang_id_nb,
-            langid_train,
-        )
-
-        nlg = 500_000
-        lg_names = sorted(LANG_MARKERS)
-        i_col = F.col("id")
-
-        def _lg_base(lg):
-            arr = F.array(*[F.lit(w) for w in LANG_MARKERS[lg]])
-            wj = lambda j: F.element_at(arr, ((i_col + F.lit(j)) % 7 + 1).cast("int"))  # noqa: E731
-            return F.concat_ws(" ", *[wj(j) for j in range(10)], F.concat(wj(0), wj(3)))
-
-        sel = F.lit(None).cast("string")
-        for nsel, lg in reversed(list(enumerate(lg_names))):
-            sel = F.when((i_col % 5) == nsel, _lg_base(lg)).otherwise(sel)
-        docs_lg = spark.range(nlg).select(
-            F.col("id").alias("doc_id"),
-            F.concat(F.lit("l"), (i_col % 5).cast("string")).alias("want"),
-            F.when(i_col % 1009 == 0, F.lit("qqq zzz xxx")).otherwise(sel).alias("text"),
-        ).cache()
-        t0 = time.time()
-        try:
-            m_lg = langid_train(docs_lg.filter(F.col("doc_id") % 53 == 0), "text")
-            pred = docs_lg.select(
-                "doc_id", "want", lang_id_nb(m_lg, "text").alias("lang")
-            )
-            agg_lg = pred.filter(F.col("doc_id") % 1009 != 0).agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum(
-                    (
-                        F.col("lang")
-                        != F.element_at(
-                            F.array(*[F.lit(x) for x in lg_names]),
-                            (F.substring("want", 2, 1).cast("int") + 1),
-                        )
-                    ).cast("long")
-                ).alias("wrong"),
-            ).head()
-            n_plant = docs_lg.filter(F.col("doc_id") % 1009 == 0).count()
-            plant_langs = (
-                pred.filter(F.col("doc_id") % 1009 == 0).select("lang").distinct().count()
-            )
-            assert agg_lg["wrong"] == 0, dict(agg_lg.asDict())
-            assert agg_lg["n"] == nlg - n_plant
-            assert plant_langs == 1  # deterministic answer on no-marker docs
-            timings["langid_scale500k"] = round(time.time() - t0, 3)
-            print(
-                f"# langid_scale500k: {timings['langid_scale500k']}s "
-                f"({agg_lg['n']} docs, 0 misclassified, {n_plant} "
-                f"no-marker plants uniform)",
-                file=sys.stderr,
-            )
-        except Exception as exc:  # noqa: BLE001
-            errors["langid_scale500k"] = f"{type(exc).__name__}: {exc}"[:500]
-            print(f"# langid_scale500k: ERROR {errors['langid_scale500k']}", file=sys.stderr)
-        finally:
-            docs_lg.unpersist()
-
-        # trained byte-BPE at 500k docs (round 11): the forced-merge
-        # construction holds at volume (merge sequence pinned) and the
-        # Arrow encoder's count total matches the closed form exactly
-        # — train = one histogram groupBy + driver loop, encode = one
-        # stateless pandas-UDF pass
-        from cs533_big_data_data_mining_spark.operators.bpe import (
-            bpe_token_count,
-            bpe_train,
-        )
-
-        nbp = 500_000
-        docs_bp = spark.range(nbp).select(
-            F.col("id").alias("doc_id"),
-            F.repeat(F.lit("ab"), (F.lit(1) + F.col("id") % 8).cast("int")).alias("text"),
-        )
-        t0 = time.time()
-        try:
-            merges_bp = bpe_train(docs_bp, "text", 3)
-            assert merges_bp == [("a", "b"), ("ab", "ab"), ("abab", "abab")], merges_bp
-            total_bp = docs_bp.agg(
-                F.sum(bpe_token_count(merges_bp, "text")).alias("t")
-            ).head()["t"]
-            # closed form: sum over m=1..8 of (m//2)//2 + (m//2)%2 + m%2
-            per_cycle = sum((m // 2) // 2 + (m // 2) % 2 + m % 2 for m in range(1, 9))
-            assert total_bp == (nbp // 8) * per_cycle, (total_bp, per_cycle)
-            timings["bpe_scale500k"] = round(time.time() - t0, 3)
-            print(
-                f"# bpe_scale500k: {timings['bpe_scale500k']}s "
-                f"(forced merges held, {total_bp} tokens exact)",
-                file=sys.stderr,
-            )
-        except Exception as exc:  # noqa: BLE001
-            errors["bpe_scale500k"] = f"{type(exc).__name__}: {exc}"[:500]
-            print(f"# bpe_scale500k: ERROR {errors['bpe_scale500k']}", file=sys.stderr)
-
-        # perceptual-hash dedup at 100k images (round 12): payloads
-        # GENERATED distributively (mapInPandas over range — no
-        # driver-side image loop), 95k unique ladder-grid patterns
-        # (dHash == the planted splitmix64 bits by construction) as
-        # PPM + 5k re-encoded PNG mutants of the first 5k bases with
-        # exactly 2 planted bit flips. phash_neardup_pairs must find
-        # EXACTLY the 5000 cross-format pairs at hamming 2 (random
-        # 64-bit patterns make a spurious <=3-distance pair ~1e-5
-        # likely across all 4.5e9 candidate pairs).
-        t0 = time.time()
-        try:
-            import pandas as _pd  # noqa: PLC0415
-            import numpy as _np  # noqa: PLC0415
-
-            from cs533_big_data_data_mining_spark.operators.multimodal import (  # noqa: PLC0415
-                pack_png,
-                pack_ppm,
-                phash_neardup_pairs,
-            )
-
-            NP, ND = 95_000, 5_000
-            M64 = (1 << 64) - 1
-
-            def _mix(x):
-                x = (x + 0x9E3779B97F4A7C15) & M64
-                x = ((x ^ (x >> 30)) * 0xBF58476D1CE4E5B9) & M64
-                x = ((x ^ (x >> 27)) * 0x94D049BB133111EB) & M64
-                return x ^ (x >> 31)
-
-            def _gen(batches):
-                for pdf in batches:
-                    ids, pays = [], []
-                    for i in pdf["id"]:
-                        i = int(i)
-                        base = i if i < NP else i - NP
-                        bits = _mix(base)
-                        if i >= NP:
-                            bits ^= (1 << (i % 64)) | (1 << ((i * 7 + 13) % 64))
-                        g = _np.zeros((8, 9), dtype=_np.uint8)
-                        for r in range(8):
-                            v = 128
-                            g[r, 0] = v
-                            for c in range(8):
-                                v = v - 15 if (bits >> (r * 8 + c)) & 1 else v + 15
-                                g[r, c + 1] = v
-                        if i < NP:
-                            rgb = _np.repeat(g[..., None], 3, axis=2)
-                            pays.append(pack_ppm(_np.repeat(_np.repeat(rgb, 2, 0), 2, 1)))
-                        else:
-                            pays.append(pack_png(_np.repeat(_np.repeat(g[..., None], 2, 0), 2, 1)))
-                        ids.append(i)
-                    yield _pd.DataFrame({"media_id": _np.asarray(ids, dtype=_np.int64),
-                                         "payload": pays})
-
-            media100k = spark.range(0, NP + ND, 1, 32).mapInPandas(
-                _gen, schema="media_id long, payload binary"
-            )
-            caches: list = []
-            pairs = phash_neardup_pairs(media100k, max_hamming=3, caches=caches)
-            agg = pairs.groupBy().agg(
-                F.count(F.lit(1)).alias("n"),
-                F.sum((F.col("hamming") == 2).cast("long")).alias("n_h2"),
-                F.sum((F.col("b") - F.col("a") == F.lit(NP)).cast("long")).alias("n_planted"),
-            ).head()
-            for c in caches:
-                c.unpersist()
-            assert agg["n"] == ND and agg["n_h2"] == ND and agg["n_planted"] == ND, (
-                f"phash smoke wrong: {agg}"
-            )
-            timings["phash_scale100k"] = round(time.time() - t0, 3)
-            print(
-                f"# phash_scale100k: {timings['phash_scale100k']}s "
-                f"(exactly {ND} cross-format pairs at hamming 2)",
-                file=sys.stderr,
-            )
-        except Exception as exc:  # noqa: BLE001
-            errors["phash_scale100k"] = f"{type(exc).__name__}: {exc}"[:500]
-            print(f"# phash_scale100k: ERROR {errors['phash_scale100k']}", file=sys.stderr)
-
-        nmx = 1_000_000
-        docs_mx = spark.range(nmx).select(
-            F.col("id").alias("doc_id"),
-            F.concat(F.lit("s"), (F.col("id") % 4).cast("string")).alias("source"),
-            F.lit(100).alias("n_tok"),
-        )
-        mx_w = {"s0": 0.4, "s1": 0.3, "s2": 0.2, "s3": 0.1}
-        mx_budget = 120_000_000  # per-source r_s = 1.92 / 1.44 / 0.96 / 0.48
-        t0 = time.time()
-        try:
-            mix1 = mix_to_budget(docs_mx, "doc_id", "source", "n_tok", mx_budget, mx_w)
-            stats_mx = {
-                r["source"]: (r["n"], r["max_ep"], r["n_distinct"])
-                for r in mix1.groupBy("source")
-                .agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.max("epoch").alias("max_ep"),
-                    F.count_distinct("id", "epoch").alias("n_distinct"),
-                )
-                .collect()
-            }
-            per_src = nmx // 4
-            for s, r_s in [("s0", 1.92), ("s1", 1.44), ("s2", 0.96), ("s3", 0.48)]:
-                n_s, max_ep, n_d = stats_mx[s]
-                assert abs(n_s - per_src * r_s) < 0.01 * per_src * r_s, (s, n_s)
-                assert max_ep == math.ceil(r_s) - 1 and n_d == n_s, (s, max_ep, n_d)
-            # bit_xor, not sum: ANSI mode faults a BIGINT sum of 1.4M
-            # 64-bit hashes
-            h1 = mix1.agg(F.bit_xor(F.xxhash64("id", "source", "epoch"))).head()[0]
-            h2 = (
-                mix_to_budget(docs_mx, "doc_id", "source", "n_tok", mx_budget, mx_w)
-                .agg(F.bit_xor(F.xxhash64("id", "source", "epoch")))
-                .head()[0]
-            )
-            assert h1 == h2, "mix not deterministic across runs"
-            timings["mix_scale1m"] = round(time.time() - t0, 3)
-            print(
-                f"# mix_scale1m: {timings['mix_scale1m']}s "
-                f"(realized repeats within 1% of targets, bit-identical re-run)",
-                file=sys.stderr,
-            )
-        except Exception as exc:  # noqa: BLE001
-            errors["mix_scale1m"] = f"{type(exc).__name__}: {exc}"[:500]
-            print(f"# mix_scale1m: ERROR {errors['mix_scale1m']}", file=sys.stderr)
-
-        n = 3_000_000
-        pts = spark.range(n).select(
-            F.col("id"),
-            F.array(
-                *[
-                    (F.pmod(F.xxhash64(F.col("id"), F.lit(j)), F.lit(1_000_000)).cast("double") / 1e4)
-                    for j in range(3)
-                ]
-            ).alias("xs"),
-        )
-        t0 = time.time()
-        try:
-            labeled = dbscan(pts, eps=1.0, min_pts=10)
-            stats = dbscan_stats(labeled).head()
-            assert (stats["n_clusters"], stats["noise_count"]) == (52, 6771), f"scale smoke wrong: {stats}"
-            labeled.unpersist()
-            timings["dbscan_scale3m"] = round(time.time() - t0, 3)
-            print(f"# dbscan_scale3m: {timings['dbscan_scale3m']}s", file=sys.stderr)
-        except Exception as exc:  # noqa: BLE001
-            errors["dbscan_scale3m"] = f"{type(exc).__name__}: {exc}"[:500]
-            print(f"# dbscan_scale3m: ERROR {errors['dbscan_scale3m']}", file=sys.stderr)
-
     sf = SF_DIR.rstrip("/").split("sf")[-1]
     try:
         sf = float(sf)
@@ -1924,14 +347,9 @@ def main() -> None:
     # JSON — BENCH_local.json survives regardless of capture size
     here = os.path.dirname(os.path.abspath(__file__))
     # ad-hoc runs at other scale factors must not clobber the
-    # canonical sf0.1 record the judge diffs against; smoke runs get
-    # their own record too (their totals aren't comparable — they
-    # include multi-minute scale workloads and, under SMOKE_ONLY,
-    # no query suite at all)
-    if os.environ.get("SPARK_GRAFT_SCALE_SMOKE"):
-        suffix = "_smoke"
-    else:
-        suffix = "" if sf == 0.1 else f"_sf{sf}"
+    # canonical sf0.1 record that cross-round comparisons read (the
+    # scale smokes write their own record: tools/scale_smoke.py)
+    suffix = "" if sf == 0.1 else f"_sf{sf}"
     with open(os.path.join(here, f"BENCH_local{suffix}.json"), "w") as fh:
         fh.write(payload + "\n")
     print(payload, flush=True)

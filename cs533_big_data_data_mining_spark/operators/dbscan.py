@@ -46,6 +46,7 @@ from cs533_big_data_data_mining_spark.operators.connected_components import (
     min_label_union,
 )
 from cs533_big_data_data_mining_spark.session import local_df
+from cs533_big_data_data_mining_spark.operators import neighbors
 from cs533_big_data_data_mining_spark.operators.neighbors import (
     cell_block_components_and_borders,
     cell_block_neighbor_counts,
@@ -62,11 +63,6 @@ from cs533_big_data_data_mining_spark.operators.stats import cluster_stats, samp
 # is the 100 TB path and stays fully exercised (dbscan() reads the gate
 # at call time; tests patch it to pin both paths to identical labels).
 DRIVER_LABEL_FASTPATH_ROWS = 2_000_000
-
-# A cell with more near (eps-frame) rows than this takes the block-pair
-# route instead of one sort-sweep task; read at call time, like the gate
-# above.
-BLOCK_FALLBACK_ROWS = 8192
 
 
 def _driver_labels(lb_pdf: pd.DataFrame) -> pd.DataFrame:
@@ -249,8 +245,8 @@ def dbscan(
     counts, core flags, the local union and border candidates.
 
     Skew handling: ONE probe aggregation over the ghost-expanded frame
-    finds cells with more than ``BLOCK_FALLBACK_ROWS`` near rows (home
-    plus eps ghosts). Those cells — and only those — are re-spread over
+    finds cells with more than ``neighbors.BLOCK_FALLBACK_ROWS`` near
+    rows (home plus eps ghosts). Those cells — and only those — are re-spread over
     same-cell block-pair tasks (``cell_block_*``) on their near rows;
     every other cell runs the sort-sweep grid kernel. A dataset the
     grid cannot partition at all (no usable axes, or everything in one
@@ -290,7 +286,7 @@ def dbscan(
     # point at most once, so cell population <= n_rows). It counts the
     # near rows only: those are all an oversized cell's block pairs
     # consume.
-    if n_rows > BLOCK_FALLBACK_ROWS:
+    if n_rows > neighbors.BLOCK_FALLBACK_ROWS:
         # cache BEFORE the probe: the probe aggregation materializes
         # the ghost-expanded frame while it counts, so the kernel
         # passes read the cache instead of re-evaluating the explode
@@ -302,7 +298,7 @@ def dbscan(
                 celled.filter(F.col("is_near"))
                 .groupBy("cell")
                 .agg(F.count(F.lit(1)).alias("cnt"))
-                .filter(F.col("cnt") > F.lit(int(BLOCK_FALLBACK_ROWS)))
+                .filter(F.col("cnt") > F.lit(int(neighbors.BLOCK_FALLBACK_ROWS)))
                 .collect()
             )
         }

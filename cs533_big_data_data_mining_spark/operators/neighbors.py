@@ -29,7 +29,7 @@ the whole job to all-pairs either (round-1 verdict finding #1).
 re-spread each oversized cell over ``m*(m+1)/2`` block-pair tasks —
 the reference's RCB rebalancing spirit (``geometric_partitioning.cpp:
 243-497``) applied only where the data is actually dense. Memory per
-task is bounded by ``2 * block_rows`` rows regardless of cell size.
+task is bounded by ``2 * BLOCK_ROWS`` rows regardless of cell size.
 """
 
 from __future__ import annotations
@@ -44,6 +44,14 @@ from pyspark.sql import functions as F
 
 from cs533_big_data_data_mining_spark.operators.connected_components import min_label_union
 from cs533_big_data_data_mining_spark.session import local_df
+
+# A cell with more rows than this takes the block-pair route instead of
+# one sort-sweep task, in ``dbscan()`` (near rows) and ``epsilon_join``
+# (left + right rows). Both read it at call time; tests patch it.
+BLOCK_FALLBACK_ROWS = 8192
+
+# Rows per block of the block-pair route.
+BLOCK_ROWS = 2048
 
 _EMPTY = np.empty(0, dtype=np.int64)
 # (kind, a, b) rows of the DBSCAN local phase (see fused_local_phase)
@@ -395,23 +403,22 @@ def cell_block_epsilon_join_two(
     l_sizes: dict[int, int],
     r_sizes: dict[int, int],
     eps: float,
-    block_rows: int = 2048,
 ) -> DataFrame:
     """Bipartite ε-join for OVERSIZED cells, re-spread over
     (left-block x right-block) tasks — the two-table twin of
     ``cell_block_neighbor_counts``'s skew routing. Each side's rows
-    hash-assign to ``ceil(n_side / block_rows)`` single-row blocks per
+    hash-assign to ``ceil(n_side / BLOCK_ROWS)`` single-row blocks per
     cell; the per-cell block cross joins on cell, and every task holds
-    exactly one block per side — memory bounded by ``2 * block_rows``
+    exactly one block per side — memory bounded by ``2 * BLOCK_ROWS``
     regardless of cell size. Each (left, right) pair lives in exactly
     one block pair (id -> block is a function per side), so no dedup
     is needed."""
     eps2 = float(eps) * float(eps)
     cols = ["id", "xs"]
-    lp = _pack_blocks(l_big, l_sizes, block_rows, cols)
-    rp = _pack_blocks(r_big, r_sizes, block_rows, cols, prefix="y")
+    lp = _pack_blocks(l_big, l_sizes, cols)
+    rp = _pack_blocks(r_big, r_sizes, cols, prefix="y")
     npairs = sum(
-        _n_blocks(l_sizes.get(c, 0), block_rows) * _n_blocks(r_sizes.get(c, 0), block_rows)
+        _n_blocks(l_sizes.get(c, 0)) * _n_blocks(r_sizes.get(c, 0))
         for c in set(l_sizes) | set(r_sizes)
     )
     pairs = lp.join(rp, "cell").repartition(min(max(npairs, 1), 2048))
@@ -429,7 +436,6 @@ def epsilon_join(
     right: DataFrame,
     eps: float,
     dims: int | None = None,
-    block_fallback_rows: int = 8192,
 ) -> DataFrame:
     """Convenience bipartite ε-join over canonical ``(id, xs)`` frames:
     chooses one grid over the UNION extent (so both sides share cell
@@ -438,7 +444,7 @@ def epsilon_join(
 
     Skew routing (the dbscan pipeline's probe pattern): one count-only
     aggregation finds cells whose combined (left + right) population
-    exceeds ``block_fallback_rows``; those cells — and only those —
+    exceeds ``BLOCK_FALLBACK_ROWS``; those cells — and only those —
     re-spread over (left-block x right-block) tasks via
     ``cell_block_epsilon_join_two``, so one dense region cannot
     serialize a giant task while everything else keeps the one-task-
@@ -464,7 +470,7 @@ def epsilon_join(
     r_celled = assign_cells(right, spec).select("cell", "id", "xs")
 
     big_cells: dict[int, tuple[int, int]] = {}
-    if n_rows > block_fallback_rows:
+    if n_rows > BLOCK_FALLBACK_ROWS:
         u = l_celled.select("cell", F.lit(0).alias("side")).unionByName(
             r_celled.select("cell", F.lit(1).alias("side"))
         )
@@ -474,7 +480,7 @@ def epsilon_join(
                 F.sum(F.when(F.col("side") == 0, 1).otherwise(0)).alias("ln"),
                 F.sum(F.when(F.col("side") == 1, 1).otherwise(0)).alias("rn"),
             )
-            .filter((F.col("ln") + F.col("rn")) > F.lit(int(block_fallback_rows)))
+            .filter((F.col("ln") + F.col("rn")) > F.lit(int(BLOCK_FALLBACK_ROWS)))
             .collect()
         )
         big_cells = {int(r["cell"]): (int(r["ln"]), int(r["rn"])) for r in per_cell}
@@ -513,15 +519,15 @@ def brute_force_neighbor_counts(points: DataFrame, eps: float, dims: int) -> Dat
     )
 
 
-def _n_blocks(n: int, block_rows: int) -> int:
-    return max(1, math.ceil(n / block_rows))
+def _n_blocks(n: int) -> int:
+    return max(1, math.ceil(n / BLOCK_ROWS))
 
 
 def _pack_blocks(
-    celled: DataFrame, sizes: dict[int, int], block_rows: int, cols: list[str], prefix: str = ""
+    celled: DataFrame, sizes: dict[int, int], cols: list[str], prefix: str = ""
 ) -> DataFrame:
     """The one block packer of the oversized-cell kernels: each cell's
-    rows go to ``m_c = ceil(n_c / block_rows)`` blocks hash-assigned by
+    rows go to ``m_c = ceil(n_c / BLOCK_ROWS)`` blocks hash-assigned by
     id, one output row per ``(cell, {prefix}blk)`` carrying a
     ``collect_list`` per column of ``cols`` (named
     ``{prefix}{col}s_``). ``sizes`` (cell -> rowcount) comes from the
@@ -529,7 +535,7 @@ def _pack_blocks(
     no extra pass."""
     mdf = local_df(
         celled.sparkSession,
-        [(int(c), _n_blocks(n, block_rows)) for c, n in sizes.items()],
+        [(int(c), _n_blocks(n)) for c, n in sizes.items()],
         "cell long, m int",
     )
     return (
@@ -540,21 +546,19 @@ def _pack_blocks(
     )
 
 
-def _same_cell_block_pairs(
-    big_celled: DataFrame, sizes: dict[int, int], block_rows: int, cols: list[str]
-) -> DataFrame:
+def _same_cell_block_pairs(big_celled: DataFrame, sizes: dict[int, int], cols: list[str]) -> DataFrame:
     """Join the unordered same-cell block pairs (blk <= yblk) of the
     packed blocks. Each output row carries two whole blocks — task
-    memory is bounded by 2*block_rows regardless of cell size, and the
+    memory is bounded by 2*BLOCK_ROWS regardless of cell size, and the
     sum of per-cell m_c*(m_c+1)/2 pairs is the unit of parallelism."""
-    packed = _pack_blocks(big_celled, sizes, block_rows, cols)
+    packed = _pack_blocks(big_celled, sizes, cols)
     right = packed.select(
         F.col("cell").alias("ycell"),
         F.col("blk").alias("yblk"),
         *[F.col(f"{c}s_").alias(f"y{c}s_") for c in cols],
     )
     pairs = packed.join(right, (F.col("cell") == F.col("ycell")) & (F.col("blk") <= F.col("yblk")))
-    npairs = sum(m * (m + 1) // 2 for m in (_n_blocks(n, block_rows) for n in sizes.values()))
+    npairs = sum(m * (m + 1) // 2 for m in (_n_blocks(n) for n in sizes.values()))
     return pairs.repartition(min(max(npairs, 1), 2048))
 
 
@@ -587,9 +591,7 @@ def _map_pairs(pairs: DataFrame, fn, schema: str) -> DataFrame:
     return pairs.mapInPandas(kernel, schema)
 
 
-def cell_block_neighbor_counts(
-    big_celled: DataFrame, sizes: dict[int, int], eps: float, block_rows: int = 2048
-) -> DataFrame:
+def cell_block_neighbor_counts(big_celled: DataFrame, sizes: dict[int, int], eps: float) -> DataFrame:
     """``(id, n_neighbors)`` for the HOME points of oversized cells.
 
     Exactly the per-cell work of ``neighbor_counts``, re-spread over
@@ -612,14 +614,12 @@ def cell_block_neighbor_counts(
             out_c.append(np.bincount(bi, minlength=Y.shape[0]).astype(np.int64)[yh])
         return pd.DataFrame({"id": np.concatenate(out_id), "pc": np.concatenate(out_c)})
 
-    pairs = _same_cell_block_pairs(big_celled, sizes, block_rows, cols)
+    pairs = _same_cell_block_pairs(big_celled, sizes, cols)
     partials = _map_pairs(pairs, pair_counts, "id long, pc long")
     return partials.groupBy("id").agg(F.sum("pc").alias("n_neighbors"))
 
 
-def cell_block_components_and_borders(
-    big_flagged: DataFrame, sizes: dict[int, int], eps: float, block_rows: int = 2048
-) -> DataFrame:
+def cell_block_components_and_borders(big_flagged: DataFrame, sizes: dict[int, int], eps: float) -> DataFrame:
     """Block-pair twin of ``fused_local_phase``'s edge and border rows
     for oversized cells. Input ``(cell, id, xs, is_home, is_core)``;
     output rows ``(kind, a, b)``:
@@ -690,5 +690,5 @@ def cell_block_components_and_borders(
             {"kind": np.concatenate(kk), "a": np.concatenate(ka), "b": np.concatenate(kb)}
         )
 
-    pairs = _same_cell_block_pairs(big_flagged, sizes, block_rows, cols)
+    pairs = _same_cell_block_pairs(big_flagged, sizes, cols)
     return _map_pairs(pairs, pair_edges, _KAB)

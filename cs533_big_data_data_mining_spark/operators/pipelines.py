@@ -15,10 +15,10 @@ reliable ``checkpoint()`` when a checkpoint directory is given. Each
 stage's survivor count is an ``Observation`` placed below that
 stage's materialization, so counting adds no Spark job. On exit —
 normal or by exception — the runner releases every cache and
-checkpoint block the run created: the frames stage functions
-appended to the run's ``caches`` list (the operators' ``caches=``
-convention, e.g. ``lm_perplexity``'s caller-owned result) and every
-persistent RDD registered since entry.
+checkpoint block the run created (``session.SessionScope``): the
+frames stage functions appended to the run's ``caches`` list (the
+operators' ``caches=`` convention, e.g. ``lm_perplexity``'s
+caller-owned result) and whatever else the run left in the session.
 
 Gates use the ``carry=`` form wherever the operator has it: the
 verdict frame passes the whole payload through, so survivors are a
@@ -69,7 +69,7 @@ from cs533_big_data_data_mining_spark.operators.quality import (
     remove_boilerplate_lines,
     url_filter,
 )
-from cs533_big_data_data_mining_spark.session import observation_value
+from cs533_big_data_data_mining_spark.session import SessionScope, observation_value
 
 #: The CLI's default ``--splits`` weights.
 SPLITS = {"train": 0.875, "val": 0.0625, "test": 0.0625}
@@ -107,52 +107,35 @@ class StageRunner:
         if self.checkpoint_dir:
             self.spark.sparkContext.setCheckpointDir(self.checkpoint_dir)
         self._t0 = time.time()
-        try:
-            self._rdds_before = set(self._persistent_rdds().keySet().toArray())
-            cm = self.spark._jsparkSession.sharedState().cacheManager()
-            self._cm_was_empty = bool(cm.isEmpty())
-        except Exception:  # noqa: BLE001 — py4j surface; release stays best-effort
-            self._rdds_before = None
+        self._scope = SessionScope(self.spark)
         return self
 
     def __exit__(self, *exc) -> bool:
-        for frame in self.caches:
-            frame.unpersist()
+        # the frames in ``caches``, checkpoint blocks (the runner's and
+        # operator-internal ones) and registrations an operator made
+        # internally and never handed out
+        self._scope.release()
         self.caches.clear()
-        if self._rdds_before is not None:
-            try:
-                # checkpoint blocks (the runner's and operator-internal
-                # ones) are persistent RDDs, not CacheManager entries
-                jmap = self._persistent_rdds()
-                for rid in set(jmap.keySet().toArray()) - self._rdds_before:
-                    ref = jmap.get(rid)
-                    if ref is not None:
-                        ref.unpersist()
-                if self._cm_was_empty:
-                    # registrations an operator made internally and
-                    # never handed out (no caller can unpersist them);
-                    # with no earlier caches to protect, drop them all
-                    self.spark.catalog.clearCache()
-            except Exception:  # noqa: BLE001
-                pass
         return False
-
-    def _persistent_rdds(self):
-        return self.spark.sparkContext._jsc.getPersistentRDDs()
 
     def run(self, frame: DataFrame, stages: list[Stage]) -> DataFrame:
         """The lazy survivors of ``stages`` applied to ``frame`` (its
         row count is observed as stage ``input``)."""
         cur = self._observe("input", frame)
         for st in stages:
-            cur = self._observe(st.name, st.fn(cur, self.caches))
-            if st.materialize:
-                cur = (
-                    cur.checkpoint(eager=True)
-                    if self.checkpoint_dir
-                    else cur.localCheckpoint(eager=True)
-                )
-                self._log(st.name, f" ({time.time() - self._t0:.1f}s)")
+            cur = self.step(cur, st)
+        return cur
+
+    def step(self, frame: DataFrame, stage: Stage) -> DataFrame:
+        """The survivors of one stage, materialized if it is marked."""
+        cur = self._observe(stage.name, stage.fn(frame, self.caches))
+        if stage.materialize:
+            cur = (
+                cur.checkpoint(eager=True)
+                if self.checkpoint_dir
+                else cur.localCheckpoint(eager=True)
+            )
+            self._log(stage.name, f" ({time.time() - self._t0:.1f}s)")
         return cur
 
     def _observe(self, name: str, frame: DataFrame) -> DataFrame:

@@ -10,6 +10,7 @@ from __future__ import annotations
 
 import hashlib
 import os
+import shutil
 import tempfile
 import weakref
 import zipfile
@@ -107,16 +108,48 @@ def _package_zip() -> str:
     return out
 
 
+def _start_time(pid: int) -> str | None:
+    """Start time of process ``pid`` in clock ticks since boot, or None
+    when no such process is running (Linux ``/proc``)."""
+    try:
+        with open(f"/proc/{pid}/stat") as f:
+            stat = f.read()
+    except OSError:
+        return None
+    # field 22; the command name in parentheses may itself hold spaces
+    return stat.rsplit(")", 1)[1].split()[19]
+
+
+def _process_scratch(base: str) -> str:
+    """This process's own scratch dir under ``base``, named
+    ``<pid>-<start time>``.
+
+    A JVM that dies leaves its ``blockmgr-*`` shuffle files behind, and
+    on tmpfs they hold RAM until removed. So before creating its own
+    dir, a session deletes every sibling named for a process that is
+    gone: the pid is not running, or it now belongs to a process that
+    started at another time. Entries of any other name are left alone.
+    """
+    os.makedirs(base, exist_ok=True)
+    for name in os.listdir(base):
+        pid, _, start = name.partition("-")
+        if pid.isdigit() and start and _start_time(int(pid)) != start:
+            shutil.rmtree(os.path.join(base, name), ignore_errors=True)
+    me = os.getpid()
+    d = os.path.join(base, f"{me}-{_start_time(me)}")
+    os.makedirs(d, exist_ok=True)
+    return d
+
+
 def _local_dir() -> str:
-    """Scratch dir for shuffle/spill files — tmpfs if present."""
+    """Scratch dir for shuffle/spill files: ``SPARK_GRAFT_LOCAL_DIR``,
+    else this process's own dir on tmpfs if present."""
     env = os.environ.get("SPARK_GRAFT_LOCAL_DIR")
     if env:
         return env
     shm = "/dev/shm"
     if os.path.isdir(shm) and os.access(shm, os.W_OK):
-        d = os.path.join(shm, "spark-local")
-        os.makedirs(d, exist_ok=True)
-        return d
+        return _process_scratch(os.path.join(shm, "spark-local"))
     return tempfile.gettempdir()
 
 
@@ -251,3 +284,75 @@ def observation_value(obs, name: str, default=None):
         return row.get(row.fieldIndex(name))
     except Exception:  # noqa: BLE001 — py4j surface; degrade to default
         return default
+
+
+def _persistent_rdd_ids(spark: SparkSession) -> frozenset:
+    return frozenset(spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray())
+
+
+def _cache_entries(spark: SparkSession) -> dict:
+    """The CacheManager's entries keyed by the identity of their plan
+    (read through reflection: Spark has no public listing; a recache
+    keeps an entry's plan object)."""
+    cm = spark._jsparkSession.sharedState().cacheManager()
+    field = cm.getClass().getDeclaredField("cachedData")
+    field.setAccessible(True)
+    entries = field.get(cm)
+    ident = spark._jvm.System.identityHashCode
+    return {ident(e.plan()): e for e in (entries.apply(i) for i in range(entries.size()))}
+
+
+class SessionScope:
+    """What a unit of work leaves in the session, and its release.
+
+    Entering snapshots the persistent RDDs (cache and checkpoint
+    blocks) and the CacheManager registrations. :meth:`grew` says
+    whether any appeared since; :meth:`release` — also run on exit,
+    normal or by exception — unregisters the new cache entries and
+    unpersists the new RDDs, so entries that existed before the scope
+    survive it. Every step is best-effort: a py4j failure leaves the
+    session as it is.
+    """
+
+    def __init__(self, spark: SparkSession):
+        self.spark = spark
+        try:
+            self._rdds = _persistent_rdd_ids(spark)
+            self._entries = set(_cache_entries(spark))
+        except Exception:  # noqa: BLE001 — py4j surface
+            self._rdds = None
+
+    def __enter__(self) -> SessionScope:
+        return self
+
+    def __exit__(self, *exc) -> bool:
+        self.release()
+        return False
+
+    def grew(self) -> bool:
+        if self._rdds is None:
+            return False
+        try:
+            return bool(
+                _persistent_rdd_ids(self.spark) - self._rdds
+                or set(_cache_entries(self.spark)) - self._entries
+            )
+        except Exception:  # noqa: BLE001
+            return False
+
+    def release(self) -> None:
+        if self._rdds is None:
+            return
+        try:
+            jsession = self.spark._jsparkSession
+            cm = jsession.sharedState().cacheManager()
+            for key, entry in _cache_entries(self.spark).items():
+                if key not in self._entries:
+                    cm.uncacheQuery(jsession, entry.plan(), False, False)
+            jmap = self.spark.sparkContext._jsc.getPersistentRDDs()
+            for rid in set(jmap.keySet().toArray()) - self._rdds:
+                ref = jmap.get(rid)
+                if ref is not None:
+                    ref.unpersist()
+        except Exception:  # noqa: BLE001
+            pass

@@ -15,6 +15,7 @@ from pyspark.sql import functions as F
 
 from cs533_big_data_data_mining_spark.operators import connected_components as cc_mod
 from cs533_big_data_data_mining_spark.operators import dbscan as dbscan_mod
+from cs533_big_data_data_mining_spark.operators import neighbors as neighbors_mod
 from cs533_big_data_data_mining_spark.operators.cells import grid_from_stats
 from cs533_big_data_data_mining_spark.operators.dbscan import dbscan, dbscan_stats
 from tests.oracle import grid_centers, make_blobs, seq_dbscan
@@ -134,11 +135,11 @@ def test_skewed_dense_cell_keeps_grid(spark, monkeypatch):
     # of side ~50), so exactly one cell is oversized
     blob = rng.normal(25.0, 0.4, size=(1500, 2))
     x = np.concatenate([bg, blob])
-    monkeypatch.setattr(dbscan_mod, "BLOCK_FALLBACK_ROWS", 800)
+    monkeypatch.setattr(neighbors_mod, "BLOCK_FALLBACK_ROWS", 800)
     got = run_and_compare(spark, x, 1.2, 5)
     # same labels as the pure-grid path (gate high enough that no cell
     # is oversized)
-    monkeypatch.setattr(dbscan_mod, "BLOCK_FALLBACK_ROWS", 10**9)
+    monkeypatch.setattr(neighbors_mod, "BLOCK_FALLBACK_ROWS", 10**9)
     ref = run_and_compare(spark, x, 1.2, 5)
     assert np.array_equal(got, ref)
 
@@ -248,7 +249,7 @@ def test_route_matrix_matches_oracle(spark, monkeypatch, shape, oversized, label
     labels}, on grids across the range of R."""
     x, want = _route_data(shape)
     if oversized:
-        monkeypatch.setattr(dbscan_mod, "BLOCK_FALLBACK_ROWS", ROUTE_GATE)
+        monkeypatch.setattr(neighbors_mod, "BLOCK_FALLBACK_ROWS", ROUTE_GATE)
     if labels == "distributed":
         force_distributed_labels(monkeypatch)
     df = to_points_df(spark, x)
@@ -301,7 +302,7 @@ def test_fused_probe_counts_near_rows_only(spark, monkeypatch):
         raise AssertionError("a cell under the near-row gate took the block-pair route")
 
     monkeypatch.setattr(dbscan_mod, "cell_block_neighbor_counts", no_block_pairs)
-    monkeypatch.setattr(dbscan_mod, "BLOCK_FALLBACK_ROWS", gate)
+    monkeypatch.setattr(neighbors_mod, "BLOCK_FALLBACK_ROWS", gate)
     got = {r["id"]: r["cluster_id"] for r in dbscan(pts, ROUTE_EPS, ROUTE_MIN_PTS).collect()}
     assert np.array_equal(np.array([got[i] for i in range(len(x))]), want)
 

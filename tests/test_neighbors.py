@@ -61,10 +61,11 @@ def test_epsilon_join_bipartite_exact_pairs(spark):
     assert len(got) == len(want), "a pair was emitted more than once"
 
 
-def test_epsilon_join_skew_block_routing(spark):
+def test_epsilon_join_skew_block_routing(spark, monkeypatch):
     """A dense region must trigger the (left-block x right-block)
     fallback for its cells only, with results identical to the
     unrouted kernel and to brute force."""
+    from cs533_big_data_data_mining_spark.operators import neighbors as neighbors_mod
     from cs533_big_data_data_mining_spark.operators.neighbors import epsilon_join
 
     rng = np.random.default_rng(31)
@@ -75,8 +76,10 @@ def test_epsilon_join_skew_block_routing(spark):
     left = df.filter("id % 2 = 0")
     right = df.filter("id % 2 = 1")
 
-    routed = {(r["a"], r["b"]) for r in epsilon_join(left, right, EPS, block_fallback_rows=400).collect()}
-    plain = {(r["a"], r["b"]) for r in epsilon_join(left, right, EPS, block_fallback_rows=10**9).collect()}
+    monkeypatch.setattr(neighbors_mod, "BLOCK_FALLBACK_ROWS", 400)
+    routed = {(r["a"], r["b"]) for r in epsilon_join(left, right, EPS).collect()}
+    monkeypatch.setattr(neighbors_mod, "BLOCK_FALLBACK_ROWS", 10**9)
+    plain = {(r["a"], r["b"]) for r in epsilon_join(left, right, EPS).collect()}
     lmask = np.arange(len(x)) % 2 == 0
     d2 = pairwise_d2(x[lmask], x[~lmask])
     li = np.flatnonzero(lmask)

@@ -1,4 +1,5 @@
-"""The worker import guard (session._install_worker_import_guard)."""
+"""Session plumbing: the worker import guard, the package zip, the
+per-process tmpfs scratch dir and the release scope."""
 
 import importlib
 import os
@@ -125,3 +126,61 @@ def test_package_zip_named_by_content(tmp_path, monkeypatch):
     second = session._package_zip()
     assert second != first
     assert sorted(os.listdir(zips)) == sorted([os.path.basename(first), os.path.basename(second)])
+
+
+def test_process_scratch_removes_dead_siblings_only(tmp_path):
+    """Siblings named for a process that is gone (no such pid, or the
+    pid now runs a process with another start time) are deleted with
+    their contents; live ones and foreign names stay."""
+    from cs533_big_data_data_mining_spark import session
+
+    me, parent = os.getpid(), os.getppid()
+    live = f"{parent}-{session._start_time(parent)}"
+    reused = f"{parent}-1"  # right pid, wrong start time
+    gone = "999999999-5"
+    for name in (live, reused, gone, "blockmgr-legacy"):
+        (tmp_path / name / "blockmgr-x").mkdir(parents=True)
+
+    mine = session._process_scratch(str(tmp_path))
+
+    assert mine == str(tmp_path / f"{me}-{session._start_time(me)}")
+    assert sorted(os.listdir(tmp_path)) == sorted([live, "blockmgr-legacy", os.path.basename(mine)])
+    assert os.listdir(tmp_path / live) == ["blockmgr-x"]
+    assert session._process_scratch(str(tmp_path)) == mine
+
+
+def test_session_scope_releases_only_what_it_created(spark, session_state):
+    """A frame cached and another checkpointed inside the scope are
+    released on a normal exit and on an exception; a cache and a
+    checkpoint made before the scope survive both."""
+    import pytest
+
+    from cs533_big_data_data_mining_spark.session import SessionScope
+
+    cm = spark._jsparkSession.sharedState().cacheManager()
+
+    def work(scope):
+        assert not scope.grew()
+        spark.range(100).selectExpr("id * 2 AS id").cache().count()
+        spark.range(50).localCheckpoint()
+        assert scope.grew()
+        assert session_state() != before
+
+    with SessionScope(spark):  # releases the two pre-existing entries last
+        cached_before = spark.range(5).cache()
+        cached_before.count()
+        checkpointed_before = spark.range(6).localCheckpoint()
+        before = session_state()
+
+        with SessionScope(spark) as scope:
+            work(scope)
+        assert session_state() == before
+
+        with pytest.raises(RuntimeError, match="work failed"):
+            with SessionScope(spark) as scope:
+                work(scope)
+                raise RuntimeError("work failed")
+        assert session_state() == before
+
+        assert cm.lookupCachedData(cached_before._jdf).isDefined()
+        assert checkpointed_before.count() == 6
